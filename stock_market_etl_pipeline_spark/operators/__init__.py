@@ -8,7 +8,7 @@ from .dedup import (
     simhash_near_pairs,
     simhash_signatures,
 )
-from .enrich import SYMBOL_DATE_WINDOW, enrich
+from .enrich import enrich
 from .multimodal import decode_media, documents_as_media, frame_sample
 from .similarity import (
     ann_topk_lsh,
@@ -28,7 +28,6 @@ __all__ = [
     "ngram_jaccard_pairs",
     "simhash_near_pairs",
     "simhash_signatures",
-    "SYMBOL_DATE_WINDOW",
     "enrich",
     "decode_media",
     "documents_as_media",

@@ -15,91 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.dateparts import with_date_parts
 from ..functions.stock import categorize_volatility, volume_category_expr
 from ..schema import ENRICHED_COLUMNS
-
-def SYMBOL_DATE_WINDOW():
-    """Shared per-symbol ordered window (built lazily: Window specs need an
-    active SparkSession in PySpark 4)."""
-    return Window.partitionBy("symbol").orderBy("date")
-
-
-def with_lag_features(df: DataFrame) -> DataFrame:
-    """daily_change / daily_change_percent (W1/W2, src/transform.py:218-219).
-
-    First row per symbol → null (pandas NaN equivalent).
-    """
-    lag_close = F.lag("close", 1).over(SYMBOL_DATE_WINDOW())
-    return df.withColumns(
-        {
-            "daily_change": F.col("close") - lag_close,
-            "daily_change_percent": (F.col("close") / lag_close - 1) * 100,
-        }
-    )
-
-
-def with_range_features(df: DataFrame) -> DataFrame:
-    """price_range / price_range_percent (F2, src/transform.py:222-223)."""
-    rng = F.col("high") - F.col("low")
-    return df.withColumns(
-        {
-            "price_range": rng,
-            "price_range_percent": rng / F.col("close") * 100,
-        }
-    )
-
-
-def with_moving_averages(df: DataFrame) -> DataFrame:
-    """ma_5 / ma_20: trailing means with shrinking head (W3).
-
-    pandas ``rolling(n, min_periods=1).mean()`` == Spark bounded frame
-    ``rowsBetween(-(n-1), 0)`` — the frame naturally shrinks at the
-    partition head (SURVEY.md §7.7).
-    """
-    return df.withColumns(
-        {
-            "ma_5": F.avg("close").over(SYMBOL_DATE_WINDOW().rowsBetween(-4, 0)),
-            "ma_20": F.avg("close").over(SYMBOL_DATE_WINDOW().rowsBetween(-19, 0)),
-        }
-    )
-
-
-def with_volatility(df: DataFrame) -> DataFrame:
-    """Rolling 20-row sample stddev of daily_change_percent (W4).
-
-    1-row frame → null (= pandas ddof=1 NaN, SURVEY.md §7.4); the category
-    expression maps that null to 'Unknown'.
-    """
-    vol = F.stddev_samp("daily_change_percent").over(
-        SYMBOL_DATE_WINDOW().rowsBetween(-19, 0)
-    )
-    return df.withColumn("volatility_indicator", vol)
-
-
-def with_volume_quartile_category(df: DataFrame) -> DataFrame:
-    """Per-symbol volume-quartile bucketing (A7/J2/F5).
-
-    Exact linear-interpolated percentiles (= pandas quantile() = DuckDB
-    quantile_cont). Groups are small per symbol, so exact is safe at
-    parity scale; at 100 TB switch to approx_percentile with documented
-    tolerance (SURVEY.md §4).
-    """
-    # percentile as a WINDOW aggregate (whole-partition frame) instead of
-    # groupBy + broadcast join-back: the join version computes the input
-    # subtree twice (once per branch) and re-shuffles; the window reuses the
-    # symbol hash-partitioning the other window ops already established —
-    # zero extra shuffles, one scan.
-    w = Window.partitionBy("symbol")
-    return df.withColumn(
-        "volume_category",
-        volume_category_expr(
-            F.col("volume"),
-            F.percentile("volume", 0.25).over(w),
-            F.percentile("volume", 0.50).over(w),
-            F.percentile("volume", 0.75).over(w),
-        ),
-    )
 
 
 def enrich(

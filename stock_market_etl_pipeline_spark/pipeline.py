@@ -2,16 +2,21 @@
 
 The reference's ``run_etl_pipeline`` (``src/pipeline.py:119-378``) runs
 extract → transform → validate → load → summary → alert as eager stages.
-Here the whole thing is ONE lazy plan graph with two actions:
+Here the whole thing is ONE lazy plan with ONE data action, the
+partitioned parquet write (which also executes read + clean + enrich).
+Everything else rides on that write as ``Observation`` metrics:
 
-1. the quality-suite aggregate (validation gate, ≥90% like the reference —
-   which also proceeds to load on warning, ``pipeline.py:244``)
-2. the sink write (which also executes clean + enrich)
+1. the corrupt-record count, observed on the raw JSON read;
+2. the quality suite (validation gate, ≥90% like the reference — which
+   also proceeds to load on warning, ``pipeline.py:244``, so the gate
+   reports on the write rather than guarding it), observed on the
+   enriched frame together with the loaded-row and symbol counts that
+   the summary used to scan for.
 
-plus a cheap summary aggregate at the end. Alerts are returned as data
-(result records), not side effects — the scheduler/mailer glue the
-reference bakes in (``scheduler.py``, ``src/alerts.py``) stays out of the
-engine by design (SURVEY.md §7.8).
+Nothing is cached. Alerts are returned as data (result records), not side
+effects — the scheduler/mailer glue the reference bakes in
+(``scheduler.py``, ``src/alerts.py``) stays out of the engine by design
+(SURVEY.md §7.8).
 
 Run: ``python -m stock_market_etl_pipeline_spark.pipeline <in> <out>``
 where <in> is a directory of raw-quote JSON/parquet drops.
@@ -22,15 +27,19 @@ from __future__ import annotations
 import sys
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .io_sink import write_parquet
 from .operators.clean import clean_quotes
 from .operators.enrich import enrich
-from .plans.analytics import db_summary
+from .plans.analytics import db_summary  # noqa: F401 -- not called; perfbench patches this name
 from .plans.quality import (
-    run_quality_suite,
+    observe_suite,
+    run_quality_suite,  # noqa: F401 -- not called; perfbench patches this name
     save_validation_report,
+    score_suite,
     stock_quality_checks,
 )
 from .schema import RAW_QUOTE_SCHEMA
@@ -70,64 +79,56 @@ def run_pipeline(
 ) -> PipelineResult:
     if not health_check(spark):
         raise RuntimeError("Spark session failed the SELECT 1 health probe")
-    corrupt_records = 0
-    raw_cached: DataFrame | None = None
+    corrupt_obs: Observation | None = None
     if input_format == "json":
         # PERMISSIVE + corrupt-record column: malformed JSON lines land in
         # __corrupt instead of silently becoming all-null rows; they are
         # counted, surfaced on the result, and excluded from the load.
-        # (Spark requires the frame cached to filter on the corrupt column.)
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
+        # The count is observed BELOW the filter (Spark pushes no filter
+        # through an observation); the scan still reads every column, so
+        # Spark's ban on corrupt-column-only JSON queries does not apply.
         schema = T.StructType(
             RAW_QUOTE_SCHEMA.fields
             + [T.StructField("__corrupt", T.StringType(), True)]
         )
-        # keep a handle to the CACHED frame: unpersist is non-cascading and
-        # matches by sameResult, so unpersisting the filtered/dropped child
-        # would leave the cached full input pinned for the session
-        raw_cached = (
+        corrupt_obs = Observation("corrupt_records")
+        raw = (
             spark.read.schema(schema)
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "__corrupt")
             .json(input_path)
-            .cache()
+            .observe(corrupt_obs, F.count("__corrupt").alias("n"))
+            .filter(F.col("__corrupt").isNull())
+            .drop("__corrupt")
         )
-        corrupt_records = raw_cached.filter(F.col("__corrupt").isNotNull()).count()
-        raw = raw_cached.filter(F.col("__corrupt").isNull()).drop("__corrupt")
     else:
         raw = spark.read.schema(RAW_QUOTE_SCHEMA).parquet(input_path)
     enriched = enrich(
         clean_quotes(raw).drop("extracted_at", "data_source")
     )
-    # cache: the quality gate, the sink write, and the summary all read this
-    enriched = enriched.cache()
-    try:
-        ok, rate, results = run_quality_suite(
-            enriched, stock_quality_checks(), success_threshold=validation_threshold
-        )
-        if report_path:
-            save_validation_report(results, rate, ok, report_path)
-        # reference proceeds to load even on warning (pipeline.py:244)
-        write_parquet(enriched, sink_path)
-        summary = db_summary(enriched).collect()[0]
-        return PipelineResult(
-            success=True,
-            validation_rate=rate,
-            validation_passed=ok,
-            records_loaded=summary["total_records"],
-            unique_symbols=summary["unique_symbols"],
-            sink_path=sink_path,
-            report_path=report_path,
-            checks_passed=sum(1 for r in results if r.success),
-            checks_total=len(results),
-            corrupt_records=corrupt_records,
-        )
-    finally:
-        enriched.unpersist()
-        if raw_cached is not None:
-            raw_cached.unpersist()
+    checks = stock_quality_checks()
+    quality_obs = Observation("quality")
+    # reference proceeds to load even on warning (pipeline.py:244), so the
+    # gate is observed on the write instead of run before it
+    write_parquet(observe_suite(enriched, quality_obs, checks), sink_path)
+    metrics = quality_obs.get
+    ok, rate, results = score_suite(
+        metrics, checks, enriched.columns, success_threshold=validation_threshold
+    )
+    if report_path:
+        save_validation_report(results, rate, ok, report_path)
+    return PipelineResult(
+        success=True,
+        validation_rate=rate,
+        validation_passed=ok,
+        records_loaded=metrics["__total"],
+        unique_symbols=metrics["__groups"],
+        sink_path=sink_path,
+        report_path=report_path,
+        checks_passed=sum(1 for r in results if r.success),
+        checks_total=len(results),
+        corrupt_records=corrupt_obs.get["n"] if corrupt_obs is not None else 0,
+    )
 
 
 def main() -> None:

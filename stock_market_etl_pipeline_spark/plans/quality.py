@@ -8,13 +8,18 @@ between 14×100 TB and 1×100 TB of I/O at scale (SURVEY.md §2.8).
 A check is (name, expression-that-counts-passing-rows, mostly-threshold).
 Success mirrors GX semantics: pass_fraction ≥ mostly. Suite success is
 passed/total ≥ 0.90 (reference ``src/data_quality.py:222``).
+
+The suite runs either as its own ``agg`` (:func:`run_quality_suite`) or as
+observed metrics on a frame that some other action runs
+(:func:`observe_suite`); both score the same aggregates with
+:func:`score_suite`.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -74,33 +79,47 @@ def stock_quality_checks(
     return checks
 
 
-def run_quality_suite(
-    df: DataFrame,
+def suite_aggregates(
     checks: list[Check],
+    unique_key: tuple[str, ...] | None = ("symbol", "date"),
+    distinct_keys: Column | None = None,
+) -> list[Column]:
+    """The suite's aggregates as Columns, ready for ``agg`` or ``observe``.
+
+    One ``__chk_<i>`` pass fraction per aggregate check, then, with a
+    ``unique_key``, ``__total`` and ``__distinct_keys`` for the
+    compound-uniqueness check. ``distinct_keys`` replaces the default
+    ``count(DISTINCT key-struct)``: observed metrics reject DISTINCT, so an
+    observer supplies an equivalent count (see :func:`observe_suite`).
+    """
+    aggs = [
+        c.pass_fraction.alias(f"__chk_{i}")
+        for i, c in enumerate(c for c in checks if c.pass_fraction is not None)
+    ]
+    if unique_key:
+        if distinct_keys is None:
+            distinct_keys = F.countDistinct(F.struct(*unique_key))
+        aggs.append(F.count(F.lit(1)).alias("__total"))
+        aggs.append(distinct_keys.alias("__distinct_keys"))
+    return aggs
+
+
+def score_suite(
+    row,
+    checks: list[Check],
+    columns: list[str],
     unique_key: tuple[str, ...] | None = ("symbol", "date"),
     success_threshold: float = 0.90,
 ) -> tuple[bool, float, list[CheckResult]]:
-    """Run all checks in one aggregate pass; returns (success, rate, results).
-
-    The compound-uniqueness check rides in the same pass as
-    ``count(*) == count(distinct key-struct)`` — no extra scan.
-    """
-    aggs = []
-    agg_checks = [c for c in checks if c.pass_fraction is not None]
-    for i, c in enumerate(agg_checks):
-        aggs.append(c.pass_fraction.alias(f"__chk_{i}"))
-    if unique_key:
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        aggs.append(
-            F.countDistinct(F.struct(*unique_key)).alias("__distinct_keys")
-        )
-    row = df.agg(*aggs).collect()[0]
-
+    """Score one collected row of :func:`suite_aggregates` (a ``Row`` or the
+    dict ``Observation.get`` returns); ``columns`` answers the schema-level
+    checks. Returns (success, rate, results)."""
     results: list[CheckResult] = []
     for c in checks:
         if c.column_exists is not None:
-            ok = c.column_exists in df.columns
+            ok = c.column_exists in columns
             results.append(CheckResult(c.name, ok, 1.0 if ok else 0.0))
+    agg_checks = [c for c in checks if c.pass_fraction is not None]
     for i, c in enumerate(agg_checks):
         frac = float(row[f"__chk_{i}"] or 0.0)
         results.append(CheckResult(c.name, frac >= c.mostly, frac))
@@ -116,6 +135,54 @@ def run_quality_suite(
     passed = sum(1 for r in results if r.success)
     rate = passed / len(results) if results else 1.0
     return rate >= success_threshold, rate, results
+
+
+def run_quality_suite(
+    df: DataFrame,
+    checks: list[Check],
+    unique_key: tuple[str, ...] | None = ("symbol", "date"),
+    success_threshold: float = 0.90,
+) -> tuple[bool, float, list[CheckResult]]:
+    """Run all checks in one aggregate pass; returns (success, rate, results).
+
+    The compound-uniqueness check rides in the same pass as
+    ``count(*) == count(distinct key-struct)`` — no extra scan.
+    """
+    row = df.agg(*suite_aggregates(checks, unique_key)).collect()[0]
+    return score_suite(row, checks, df.columns, unique_key, success_threshold)
+
+
+def observe_suite(
+    df: DataFrame,
+    observation: Observation,
+    checks: list[Check],
+) -> DataFrame:
+    """Attach the suite to ``df`` as observed metrics: the checks are then
+    computed by whatever action runs ``df`` (the pipeline's sink write)
+    instead of by a scan of their own. Score ``observation.get`` with
+    :func:`score_suite`.
+
+    Without DISTINCT, the key counts come from ``lag(date)`` over the
+    (symbol ORDER BY date) window, in which equal keys are adjacent:
+
+    - ``__distinct_keys`` = rows − rows whose date equals the previous date;
+    - ``__groups`` (distinct symbols) = rows with no previous row.
+
+    Both are exact when the key columns are non-null, as they are after
+    ``clean_quotes``. The window reuses the symbol partitioning and date
+    order that ``enrich`` already established, so it adds no exchange and
+    no sort. The returned frame has ``df``'s columns.
+    """
+    prev = F.lag("date").over(Window.partitionBy("symbol").orderBy("date"))
+    total = F.count(F.lit(1))
+    repeats = F.count_if(F.col("date") == F.col("__prev"))
+    metrics = suite_aggregates(checks, distinct_keys=total - repeats)
+    metrics.append(F.count_if(F.col("__prev").isNull()).alias("__groups"))
+    return (
+        df.withColumn("__prev", prev)
+        .observe(observation, *metrics)
+        .drop("__prev")
+    )
 
 
 def save_validation_report(

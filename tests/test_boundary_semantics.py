@@ -152,27 +152,24 @@ def test_volume_quartile_boundaries_are_inclusive_below(spark):
     falls in the LOWER bucket (reference src/transform.py:237-257's
     convention). Five exact-integer volumes put Q1/Q2/Q3 exactly on data
     points (positions (n−1)/4 integral)."""
-    from stock_market_etl_pipeline_spark.operators.enrich import (
-        with_volume_quartile_category,
-    )
+    from stock_market_etl_pipeline_spark.operators.enrich import enrich
 
     rows = [
-        ("S", dt.date(2024, 1, d + 1), float(v))
+        ("S", dt.date(2024, 1, d + 1), 10.0, 11.0, 9.0, 10.0, v)
         for d, v in enumerate([10, 20, 30, 40, 50])
     ]
     df = spark.createDataFrame(
-        rows, "symbol string, date date, volume double"
+        rows,
+        "symbol string, date date, open double, high double, low double, "
+        "close double, volume bigint",
     )
-    got = {
-        r["volume"]: r["volume_category"]
-        for r in with_volume_quartile_category(df).collect()
-    }
+    got = {r["volume"]: r["volume_category"] for r in enrich(df).collect()}
     assert got == {
-        10.0: "Low",
-        20.0: "Low",        # == Q1 → Low, not Medium
-        30.0: "Medium",     # == Q2 → Medium, not High
-        40.0: "High",       # == Q3 → High, not Very High
-        50.0: "Very High",
+        10: "Low",
+        20: "Low",        # == Q1 → Low, not Medium
+        30: "Medium",     # == Q2 → Medium, not High
+        40: "High",       # == Q3 → High, not Very High
+        50: "Very High",
     }
 
 

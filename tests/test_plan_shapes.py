@@ -1030,3 +1030,35 @@ def test_semantic_dedup_pair_phase_shape(spark):
     plan = plan_of(captured["edges"])
     assert count_nodes(plan, "HashAggregate") == 0
     assert plan.count("lambdafunction") <= 3
+
+
+def test_run_pipeline_is_one_write_without_caches(spark, tmp_path):
+    """The quality gate, the corrupt-record count and the loaded counts
+    ride on the sink write as observed metrics: a run is the SELECT 1
+    probe plus the write's jobs (the dedup and window exchange map stages
+    and the write itself) — it was 13 jobs when the corrupt count, the
+    gate and the summary each ran an action over two caches — and it
+    leaves nothing persisted."""
+    from stock_market_etl_pipeline_spark.pipeline import run_pipeline
+    from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
+
+    from conftest import make_raw_rows
+
+    inp = str(tmp_path / "landing")
+    rows = make_raw_rows("AAA", 20) + make_raw_rows("BBB", 10, base=300.0)
+    spark.createDataFrame(rows, RAW_QUOTE_SCHEMA).write.json(inp)
+    with open(f"{inp}/part-bad.json", "w") as f:
+        f.write("not json\n")
+
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "plan-shape-run-pipeline"
+    sc.setJobGroup(group, group)
+    try:
+        result = run_pipeline(spark, inp, str(tmp_path / "sink"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (result.records_loaded, result.corrupt_records) == (30, 1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    # earlier tests' RDDs may be cleaned meanwhile; none may be added
+    assert not set(sc._jsc.getPersistentRDDs().keySet()) - persisted

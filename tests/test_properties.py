@@ -78,18 +78,21 @@ def test_rolling_frames_shrink_exactly_like_pandas(spark, n):
     """SURVEY §7.7: rowsBetween(-(k-1), 0) == pandas rolling(min_periods=1)."""
     import pandas as pd
 
-    from stock_market_etl_pipeline_spark.operators.enrich import (
-        with_moving_averages,
-    )
+    from stock_market_etl_pipeline_spark.operators.enrich import enrich
 
+    close = [float(100 + i * 3 % 17) for i in range(n)]
     pdf = pd.DataFrame(
         {
             "symbol": ["S"] * n,
             "date": pd.date_range("2024-01-01", periods=n).date,
-            "close": [float(100 + i * 3 % 17) for i in range(n)],
+            "open": close,
+            "high": [c + 1 for c in close],
+            "low": [c - 1 for c in close],
+            "close": close,
+            "volume": [1000 + i for i in range(n)],
         }
     )
-    df = with_moving_averages(spark.createDataFrame(pdf))
+    df = enrich(spark.createDataFrame(pdf))
     got = {r["date"]: (r["ma_5"], r["ma_20"]) for r in df.collect()}
     exp5 = pdf["close"].rolling(5, min_periods=1).mean()
     exp20 = pdf["close"].rolling(20, min_periods=1).mean()

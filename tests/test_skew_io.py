@@ -154,7 +154,10 @@ def test_enrich_skew_safe_bounds_hot_partition(spark):
     partition at roughly hot/n_chunks. AQE's small-input coalescing is
     disabled for the measurement (at real scale partitions exceed the
     advisory size and never coalesce; coalescing cannot SPLIT the hot
-    partition, so it only masks the comparison locally)."""
+    partition, so it only masks the comparison locally). The shuffle width
+    is pinned at 32 because the session sizes it from the core count: at
+    4 partitions the 16 chunks collide 4 to a partition and the bound
+    measures the hash, not the chunking."""
     from pyspark.sql import functions as F2
 
     from stock_market_etl_pipeline_spark.operators.clean import clean_quotes
@@ -164,9 +167,13 @@ def test_enrich_skew_safe_bounds_hot_partition(spark):
     )
 
     conf = spark.conf
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = conf.get(key)
-    conf.set(key, "false")
+    pinned = {
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.shuffle.partitions": "32",
+    }
+    prev = {k: conf.get(k) for k in pinned}
+    for k, v in pinned.items():
+        conf.set(k, v)
     try:
         cleaned = clean_quotes(_skewed_raw(spark))
 
@@ -185,7 +192,8 @@ def test_enrich_skew_safe_bounds_hot_partition(spark):
         plain_max = max_partition_rows(enrich(cleaned))
         safe_max = max_partition_rows(enrich_skew_safe(cleaned, n_chunks=16))
     finally:
-        conf.set(key, prev)
+        for k, v in prev.items():
+            conf.set(k, v)
 
     assert plain_max >= 3000  # the hot symbol pins one task
     # chunked: largest task carries ~hot/n_chunks per chunk; a few chunks
