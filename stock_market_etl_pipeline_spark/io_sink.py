@@ -1,4 +1,4 @@
-"""Sinks (SURVEY.md §2.1 S4-S7): parquet (primary), CSV, JSON, JDBC.
+"""Sinks (SURVEY.md §2.1 S6-S7): parquet (primary), JDBC, bucketed tables.
 
 Parquet-first: partitioned by symbol (the reference's composite
 (symbol, date) index maps to partition-by-symbol + within-file date order,
@@ -21,16 +21,6 @@ def write_parquet(df: DataFrame, path: str, partition_by: str = "symbol",
         .partitionBy(partition_by)
         .parquet(path)
     )
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5: CSV sink (reference df.to_csv, src/transform.py:447-448)."""
-    df.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4: JSON sink (reference json.dump samples, src/extract.py:449-452)."""
-    df.write.mode(mode).json(path)
 
 
 def write_jdbc(

@@ -74,7 +74,6 @@ def run_pipeline(
     input_path: str,
     sink_path: str,
     input_format: str = "json",
-    validation_threshold: float = 0.90,
     report_path: str | None = None,
 ) -> PipelineResult:
     if not health_check(spark):
@@ -112,9 +111,7 @@ def run_pipeline(
     # gate is observed on the write instead of run before it
     write_parquet(observe_suite(enriched, quality_obs, checks), sink_path)
     metrics = quality_obs.get
-    ok, rate, results = score_suite(
-        metrics, checks, enriched.columns, success_threshold=validation_threshold
-    )
+    ok, rate, results = score_suite(metrics, checks, enriched.columns)
     if report_path:
         save_validation_report(results, rate, ok, report_path)
     return PipelineResult(

@@ -19,10 +19,6 @@ from ..functions.stock import (
     trend_strength_expr,
 )
 
-def _DESC():
-    return Window.partitionBy("symbol").orderBy(F.col("date").desc())
-
-
 def _ASC():
     return Window.partitionBy("symbol").orderBy("date")
 

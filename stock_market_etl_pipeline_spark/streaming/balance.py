@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from ..operators.txtable import TxTable
 from ..operators.txview import refresh_view
+from .drive import drain
 
 EVENT_SCHEMA = "kind string, orderkey long, d string"
 
@@ -76,7 +77,6 @@ def start_balance_maintainer(
     landing_dir: str,
     state_dir: str,
     checkpoint: str,
-    max_files_per_trigger: int = 1,
 ):
     """Consume a JSON event stream (``kind`` = 'open' | 'ship' |
     'cancel', ``orderkey``, ``d`` = the event date; a cancel removes
@@ -219,15 +219,12 @@ def start_balance_maintainer(
                 spark, t["closes"], t["closes_view"], ["close_month"], []
             )
 
-    return (
+    stream = (
         spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .json(landing_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
+    return drain(stream, checkpoint, sink)
 
 
 def open_orders_balance_frame(

@@ -44,6 +44,7 @@ from ..functions.text import ws_tokens
 from ..operators.txtable import TxTable
 from ..operators.txview import refresh_view
 from ..registry_llm5 import _BM25_K, _BM25_QUERIES, _idf_u
+from .drive import drain, parquet_landing
 
 _N_BUCKETS = 16
 
@@ -84,16 +85,12 @@ def start_bm25_index_stream(
     landing_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    schema=None,
 ):
     """availableNow stream maintaining the BM25 index tables. Every
     write inside the batch body is individually replay-idempotent
     (TxTable txn markers for the appends, cdc-snapshot markers for the
     view refreshes), so the composition is exactly-once at every crash
     seam without any cross-table transaction."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
     t = _index_tables(index_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -114,12 +111,7 @@ def start_bm25_index_stream(
             spark, t["doclens"], t["corpus_stats"], ["bucket"], ["dl"]
         )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)
 
 
 def bm25_from_index(

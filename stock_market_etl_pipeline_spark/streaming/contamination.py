@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash60, word_shingles_all, ws_tokens
+from .drive import drain, parquet_landing
 from .sketch_rollup import _read_store_if_exists
 
 CONTAM_K = 8
@@ -81,22 +82,17 @@ def start_contamination_monitor(
     bench_dir: str,
     hits_dir: str,
     checkpoint_dir: str,
-    k: int = CONTAM_K,
-    schema=None,
 ):
     """Maintain the benchmark hit set incrementally over an arriving
     document stream (availableNow). Returns the started query."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
     bench = spark.read.parquet(bench_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        hits = probe_batch(
-            doc_gram_hashes(batch_df, k), bench
-        ).localCheckpoint(eager=True)
+        hits = probe_batch(doc_gram_hashes(batch_df), bench).localCheckpoint(
+            eager=True
+        )
         if hits.isEmpty():
             # a clean batch writes nothing: an all-empty partitioned
             # write would leave a footerless parquet dir that breaks
@@ -111,12 +107,7 @@ def start_contamination_monitor(
             .parquet(hits_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)
 
 
 def contamination_report(

@@ -48,9 +48,10 @@ from pyspark.sql import functions as F
 from ..functions.text import ws_tokens
 from ..operators.txtable import TxTable
 from ..operators.txview import refresh_view
+from .drive import drain, parquet_landing
 
 _REF_VOCAB = 200          # frozen head-vocabulary size
-_DEFAULT_THRESHOLD = 0.25  # KL nats above which a source is "drifted"
+_KL_THRESHOLD = 0.25      # KL nats above which a source is "drifted"
 
 
 def _drift_tables(state_dir: str) -> dict[str, TxTable]:
@@ -92,11 +93,7 @@ def freeze_reference(
     return t["reference"].append(head, txn_id="drift-reference")
 
 
-def _kl_per_source(
-    spark: SparkSession,
-    t: dict[str, TxTable],
-    threshold: float,
-) -> DataFrame:
+def _kl_per_source(spark: SparkSession, t: dict[str, TxTable]) -> DataFrame:
     """KL(live_source || reference) over the frozen support, from the
     incremental view — sources x vocab rows, no corpus scan."""
     ref = t["reference"].read(spark).localCheckpoint(eager=True)
@@ -149,7 +146,7 @@ def _kl_per_source(
         F.max("all_tokens").alias("n_tokens_total"),
         oov.alias("oov_share"),
         kl.alias("kl_vs_reference"),
-        ((kl > F.lit(threshold)) | (oov > F.lit(0.5))).alias("drifted"),
+        ((kl > F.lit(_KL_THRESHOLD)) | (oov > F.lit(0.5))).alias("drifted"),
     )
 
 
@@ -158,16 +155,11 @@ def start_drift_monitor(
     landing_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema=None,
-    threshold: float = _DEFAULT_THRESHOLD,
 ):
     """availableNow stream appending per-batch drift metrics. Requires a
     frozen reference (freeze_reference) — batches arriving before the
     freeze raise, by design: a monitor silently self-referencing its
     first batch would never flag anything."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
     t = _drift_tables(state_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -185,19 +177,14 @@ def start_drift_monitor(
             spark, t["counts"], t["source_stats"], ["source", "token"], ["n"]
         )
         if not t["metrics"].txn_committed(txn):
-            m = _kl_per_source(spark, t, threshold).select(
+            m = _kl_per_source(spark, t).select(
                 F.lit(batch_id).cast("long").alias("batch_id"),
                 "source", "n_tokens_in_vocab", "n_tokens_total",
                 "oov_share", "kl_vs_reference", "drifted",
             )
             t["metrics"].append(m, txn_id=txn)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)
 
 
 def drift_metrics(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -51,6 +51,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.txtable import TxTable
 from ..operators.txview import refresh_view
+from .drive import drain
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 OUTPUT_SCHEMA = "user_id long, gap_s bigint, gap_min bigint"
@@ -115,7 +116,6 @@ def start_gap_monitor(
     landing_dir: str,
     state_dir: str,
     checkpoint: str,
-    max_files_per_trigger: int = 1,
 ):
     """Consume a JSON event stream (``user_id``, ``ts`` ISO timestamp)
     until drained (availableNow), appending completed gaps exactly-once
@@ -124,7 +124,7 @@ def start_gap_monitor(
     t = _tables(state_dir)
     stream = (
         spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .json(landing_dir)
     )
 
@@ -134,14 +134,7 @@ def start_gap_monitor(
         if t["gaps"].latest_snapshot() is not None:
             refresh_view(spark, t["gaps"], t["gaps_view"], ["gap_min"], [])
 
-    return (
-        completed_gaps(stream)
-        .writeStream.foreachBatch(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(completed_gaps(stream), checkpoint, sink)
 
 
 def start_event_feed_ingest(
@@ -149,7 +142,6 @@ def start_event_feed_ingest(
     landing_dir: str,
     staging_dir: str,
     checkpoint: str,
-    watermark_delay: str = "1 day",
 ):
     """Fronting stage for an out-of-order / duplicated event feed — the
     module docstring's prescription, concretely:
@@ -176,9 +168,9 @@ def start_event_feed_ingest(
         spark.readStream.schema("user_id long, ts timestamp")
         .json(landing_dir)
     )
-    deduped = raw.withWatermark(
-        "ts", watermark_delay
-    ).dropDuplicatesWithinWatermark(["user_id", "ts"])
+    deduped = raw.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
+        ["user_id", "ts"]
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -189,12 +181,7 @@ def start_event_feed_ingest(
             .json(f"{staging_dir}/batch-{batch_id}")
         )
 
-    return (
-        deduped.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(deduped, checkpoint, sink)
 
 
 def gap_histogram_frame(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -5,7 +5,7 @@ per symbol with overlap, then dedups on (symbol, date)
 (``scheduler.py:110``, ``src/load.py:252``, ``src/transform.py:199-204``;
 SURVEY.md §2.10). Here that becomes a continuous micro-batch stream:
 
-    landing dir (JSON/parquet drops) → readStream → clean → watermarked
+    landing dir (JSON drops) → readStream → clean → watermarked
     keep-last dedup → foreachBatch upsert into a parquet/Delta-style sink
 
 - The watermark bounds dedup state: late duplicates older than the horizon
@@ -22,17 +22,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.clean import dedup_keep_last
+from ..operators.clean import clean_quotes, dedup_keep_last
+from ..operators.enrich import enrich
+from ..operators.txtable import AlreadyStaged, TxTable
+from ..plans.quality import run_quality_suite, stock_quality_checks
 from ..schema import RAW_QUOTE_SCHEMA
+from .drive import drain
 
 
-def dedup_stream(stream: DataFrame, watermark_delay: str = "2 days") -> DataFrame:
+def _quote_landing(spark: SparkSession, landing_dir: str) -> DataFrame:
+    """Raw quote stream over a JSON landing directory, at most 16 files
+    per micro-batch (ingestion throttle, S3 analog)."""
+    return (
+        spark.readStream.schema(RAW_QUOTE_SCHEMA)
+        .option("maxFilesPerTrigger", 16)
+        .json(landing_dir)
+    )
+
+
+def _enrich_batch(batch_df: DataFrame) -> DataFrame:
+    """One micro-batch of raw quotes cleaned and enriched, as the batch
+    pipeline does it."""
+    return enrich(clean_quotes(batch_df).drop("extracted_at", "data_source"))
+
+
+def dedup_stream(stream: DataFrame) -> DataFrame:
     """Watermarked streaming dedup on (symbol, date).
 
     State is keyed by (symbol, date) and dropped once the watermark passes
-    ``extracted_at + delay`` — bounded memory at any scale.
+    ``extracted_at`` + 2 days — bounded memory at any scale.
     """
-    return stream.withWatermark("extracted_at", watermark_delay).dropDuplicatesWithinWatermark(
+    return stream.withWatermark("extracted_at", "2 days").dropDuplicatesWithinWatermark(
         ["symbol", "date"]
     )
 
@@ -42,7 +62,6 @@ def start_quote_ingest(
     landing_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    trigger_once: bool = True,
 ):
     """File-source micro-batch ingest: landing JSON → cleaned parquet sink.
 
@@ -50,12 +69,6 @@ def start_quote_ingest(
     batch (cross-batch duplicates are handled by the watermark state above).
     Returns the StreamingQuery; callers await ``query.awaitTermination()``.
     """
-    raw = (
-        spark.readStream.schema(RAW_QUOTE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)  # ingestion throttle (S3 analog)
-        .json(landing_dir)
-    )
-    deduped = dedup_stream(raw)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         resolved = dedup_keep_last(
@@ -67,13 +80,9 @@ def start_quote_ingest(
             .parquet(sink_dir)
         )
 
-    writer = (
-        deduped.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return drain(
+        dedup_stream(_quote_landing(spark, landing_dir)), checkpoint_dir, write_batch
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
@@ -83,9 +92,36 @@ def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
     query. The canonical pattern for enriching a quote stream with the
     company-overview fundamentals at any scale (dim is KB-sized per
     symbol universe; the stream side never shuffles for the join)."""
-    from pyspark.sql import functions as F
-
     return stream.join(F.broadcast(dim), "symbol", "left")
+
+
+def _gate_and_write(sink_dir: str, quarantine_dir: str, exactly_once: bool):
+    """The per-micro-batch quality gate: clean + enrich the batch, run the
+    one-pass quality suite on it, and write it whole to the sink if it
+    meets the ≥90% threshold, else to ``quarantine_dir/batch_id=N``.
+    Blind append, unless ``exactly_once``: then the batch overwrites its
+    own ``batch_id=N`` directory (see start_pipeline_stream)."""
+
+    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        enriched = _enrich_batch(batch_df).cache()
+        try:
+            ok, _rate, _results = run_quality_suite(
+                enriched, stock_quality_checks()
+            )
+            quarantine = f"{quarantine_dir}/batch_id={batch_id}"
+            if exactly_once:
+                target = f"{sink_dir}/batch_id={batch_id}" if ok else quarantine
+                mode = "overwrite"
+            else:
+                target = sink_dir if ok else quarantine
+                mode = "append"
+            enriched.write.mode(mode).partitionBy("symbol").parquet(target)
+        finally:
+            enriched.unpersist()
+
+    return gate_batch
 
 
 def start_gated_quote_ingest(
@@ -94,8 +130,6 @@ def start_gated_quote_ingest(
     sink_dir: str,
     quarantine_dir: str,
     checkpoint_dir: str,
-    validation_threshold: float = 0.90,
-    trigger_once: bool = True,
 ):
     """Quality-gated streaming ingest: the batch pipeline's ≥90% validation
     gate (reference ``src/pipeline.py:227-251``) applied per micro-batch.
@@ -106,39 +140,11 @@ def start_gated_quote_ingest(
     feeds never contaminate the serving table, and nothing is silently
     dropped. Returns the StreamingQuery.
     """
-    from ..operators.clean import clean_quotes
-    from ..operators.enrich import enrich
-    from ..plans.quality import run_quality_suite, stock_quality_checks
-
-    raw = (
-        spark.readStream.schema(RAW_QUOTE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(landing_dir)
+    return drain(
+        _quote_landing(spark, landing_dir),
+        checkpoint_dir,
+        _gate_and_write(sink_dir, quarantine_dir, exactly_once=False),
     )
-
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        enriched = enrich(
-            clean_quotes(batch_df).drop("extracted_at", "data_source")
-        ).cache()
-        try:
-            ok, _rate, _results = run_quality_suite(
-                enriched,
-                stock_quality_checks(),
-                success_threshold=validation_threshold,
-            )
-            target = sink_dir if ok else f"{quarantine_dir}/batch_id={batch_id}"
-            enriched.write.mode("append").partitionBy("symbol").parquet(target)
-        finally:
-            enriched.unpersist()
-
-    writer = raw.writeStream.foreachBatch(gate_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_pipeline_stream(
@@ -147,9 +153,6 @@ def start_pipeline_stream(
     sink_dir: str,
     quarantine_dir: str,
     checkpoint_dir: str,
-    validation_threshold: float = 0.90,
-    watermark_delay: str = "2 days",
-    trigger_once: bool = True,
     exactly_once: bool = False,
 ):
     """The WHOLE batch pipeline as one streaming composition:
@@ -176,54 +179,11 @@ def start_pipeline_stream(
     analog of a transactional MERGE. Readers see batch_id as an ordinary
     partition column.
     """
-    from ..operators.clean import clean_quotes
-    from ..operators.enrich import enrich
-    from ..plans.quality import run_quality_suite, stock_quality_checks
-
-    raw = (
-        spark.readStream.schema(RAW_QUOTE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(landing_dir)
+    return drain(
+        dedup_stream(_quote_landing(spark, landing_dir)),
+        checkpoint_dir,
+        _gate_and_write(sink_dir, quarantine_dir, exactly_once),
     )
-    deduped = dedup_stream(raw, watermark_delay)
-
-    def pipe_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        enriched = enrich(
-            clean_quotes(batch_df).drop("extracted_at", "data_source")
-        ).cache()
-        try:
-            ok, _rate, _results = run_quality_suite(
-                enriched,
-                stock_quality_checks(),
-                success_threshold=validation_threshold,
-            )
-            if exactly_once:
-                target = (
-                    f"{sink_dir}/batch_id={batch_id}"
-                    if ok
-                    else f"{quarantine_dir}/batch_id={batch_id}"
-                )
-                enriched.write.mode("overwrite").partitionBy(
-                    "symbol"
-                ).parquet(target)
-            else:
-                target = (
-                    sink_dir if ok else f"{quarantine_dir}/batch_id={batch_id}"
-                )
-                enriched.write.mode("append").partitionBy("symbol").parquet(
-                    target
-                )
-        finally:
-            enriched.unpersist()
-
-    writer = deduped.writeStream.foreachBatch(pipe_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_wap_gated_ingest(
@@ -232,7 +192,6 @@ def start_wap_gated_ingest(
     table_root: str,
     quarantine_root: str,
     checkpoint_dir: str,
-    validation_threshold: float = 0.90,
 ):
     """The quality gate as WRITE-AUDIT-PUBLISH into transactional
     tables: each micro-batch is cleaned + enriched, STAGED invisibly
@@ -257,18 +216,8 @@ def start_wap_gated_ingest(
 
     Returns the started StreamingQuery (availableNow).
     """
-    from ..operators.clean import clean_quotes
-    from ..operators.enrich import enrich
-    from ..operators.txtable import AlreadyStaged, TxTable
-    from ..plans.quality import run_quality_suite, stock_quality_checks
-
     table = TxTable(table_root)
     quarantine = TxTable(quarantine_root)
-    raw = (
-        spark.readStream.schema(RAW_QUOTE_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
-        .json(landing_dir)
-    )
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -284,19 +233,12 @@ def start_wap_gated_ingest(
             except ValueError:
                 pass
             return
-        enriched = enrich(
-            clean_quotes(batch_df).drop("extracted_at", "data_source")
-        )
         try:
-            table.stage_wap(enriched, wap)
+            table.stage_wap(_enrich_batch(batch_df), wap)
         except AlreadyStaged:
             pass  # staged by a crashed earlier attempt: audit those files
         staged = table.read_wap(spark, wap)
-        ok, _rate, _results = run_quality_suite(
-            staged,
-            stock_quality_checks(),
-            success_threshold=validation_threshold,
-        )
+        ok, _rate, _results = run_quality_suite(staged, stock_quality_checks())
         if ok:
             table.publish_wap(spark, wap, txn_id=txn)
         else:
@@ -306,9 +248,4 @@ def start_wap_gated_ingest(
             quarantine.append(staged, txn_id=txn)
             table.abort_wap(wap)
 
-    return (
-        raw.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(_quote_landing(spark, landing_dir), checkpoint_dir, gate_batch)

@@ -36,6 +36,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.txtable import TxTable
 from ..operators.txview import refresh_view
+from .drive import drain
 
 
 def start_lakehouse_ingest(
@@ -47,7 +48,6 @@ def start_lakehouse_ingest(
     group_cols: list[str],
     sum_cols: list[str],
     checkpoint: str,
-    max_files_per_trigger: int = 1,
 ):
     """Run the bronze→gold cycle over a file stream until no data is
     left (availableNow trigger): append each micro-batch to the TxTable
@@ -62,12 +62,9 @@ def start_lakehouse_ingest(
         if table.latest_snapshot() is not None:
             refresh_view(spark, table, view, group_cols, sum_cols)
 
-    return (
+    stream = (
         spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .json(source_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
+    return drain(stream, checkpoint, sink)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _doc_shingles, minhash_banded, minhash_signatures
+from .drive import drain, parquet_landing
 from .sketch_rollup import _read_store_if_exists
 
 
@@ -118,34 +119,23 @@ def start_near_dedup_stream(
     index_dir: str,
     matches_dir: str,
     checkpoint_dir: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    threshold: float = 0.5,
-    schema=None,
 ):
     """Maintain the corpus MinHash band index incrementally and emit
     near-dup matches for every arriving batch (availableNow). Returns
     the started StreamingQuery."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        rows = batch_index_rows(
-            batch_df, k=k, num_hashes=num_hashes, bands=bands
-        ).localCheckpoint()  # computed once: probed AND appended below
+        # computed once: probed AND appended below
+        rows = batch_index_rows(batch_df).localCheckpoint()
         stored = _read_store_if_exists(spark, index_dir)
         if stored is not None:
             # exclude this batch's own partition: on replay after a crash
             # between append and commit, the probe must not see the
             # half-written copy of itself
             corpus = stored.filter(F.col("batch_id") != batch_id)
-            matches = match_batch_against_index(
-                rows, corpus, num_hashes=num_hashes, threshold=threshold
-            )
+            matches = match_batch_against_index(rows, corpus)
         else:
             matches = None
         if matches is not None:
@@ -161,9 +151,4 @@ def start_near_dedup_stream(
             .parquet(index_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)

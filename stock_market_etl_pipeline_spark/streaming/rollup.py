@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .drive import drain, parquet_landing
+
 
 def monthly_bars(ticks_df: DataFrame) -> DataFrame:
     """Monthly OHLCV bars — the same aggregate as the registered
@@ -51,7 +53,6 @@ def start_monthly_rollup(
     landing_dir: str,
     rollup_dir: str,
     checkpoint_dir: str,
-    schema=None,
 ):
     """Maintain ``rollup_dir`` (parquet partitioned by year/month) as an
     incremental materialization of ``monthly_bars`` over the tick rows in
@@ -61,9 +62,6 @@ def start_monthly_rollup(
     itself is stateless per batch), so restarts resume where they left
     off and re-deliveries rewrite the same partitions idempotently.
     """
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         touched = (
@@ -91,9 +89,4 @@ def start_monthly_rollup(
             .parquet(rollup_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

@@ -72,6 +72,7 @@ from ..operators.similarity import (
     ivf_assignments,
 )
 from ..operators.txtable import TxTable
+from .drive import drain, parquet_landing
 
 _SURVIVOR_SCHEMA = "vec_id bigint, cluster int, v array<double>"
 
@@ -283,16 +284,10 @@ def start_semantic_dedup_stream(
     checkpoint_dir: str,
     n_clusters: int = 8,
     threshold: float = 0.95,
-    seed: int = 42,
-    max_cluster: int = 4096,
-    schema=None,
 ):
     """availableNow stream: maintain the survivor TxTable + frozen
     centroids, emit per-batch keep/drop decisions. Returns the started
     StreamingQuery."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
     table = TxTable(survivors_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -312,16 +307,14 @@ def start_semantic_dedup_stream(
             return
         ctable = TxTable(centroids_dir)
         if ctable.latest_snapshot() is None:
-            train_and_store_centroids(
-                batch_df, centroids_dir, n_clusters, seed
-            )
+            train_and_store_centroids(batch_df, centroids_dir, n_clusters, seed=42)
         centroids = ctable.read(spark).select("cluster", "centroid")
         assigned = assign_to_centroids(batch_df, centroids)
         survivors = (
             table.read(spark) if table.latest_snapshot() is not None else None
         )
         decisions = resolve_batch(
-            assigned, survivors, threshold, max_cluster
+            assigned, survivors, threshold, max_cluster=4096
         ).localCheckpoint(eager=True)  # consumed by merge AND the log
         # Log first, merge second: every pre-merge crash point replays
         # against the UNCHANGED survivor table and deterministically
@@ -352,9 +345,4 @@ def start_semantic_dedup_stream(
                 delete_where=F.col("v").isNull(),
             )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)

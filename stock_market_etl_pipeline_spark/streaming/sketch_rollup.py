@@ -30,7 +30,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sketches import DEFAULT_LGK
+from ..operators.sketches import DEFAULT_LGK, kll_daily_rollup
+from .drive import drain, parquet_landing
 
 
 def _read_store_if_exists(spark: SparkSession, sketch_dir: str):
@@ -112,28 +113,18 @@ def start_distinct_sketch_rollup(
     key_cols: list[str],
     day_col: str,
     value_col: str,
-    schema=None,
-    lgk: int = DEFAULT_LGK,
 ):
     """Maintain ``sketch_dir`` (parquet partitioned by day) as an
     incrementally-merged HLL sketch table over the rows landing in
     ``landing_dir``. Returns the started StreamingQuery (availableNow)."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sk = sketch_batch(batch_df, key_cols, day_col, value_col, lgk)
+        batch_sk = sketch_batch(batch_df, key_cols, day_col, value_col)
         if not batch_sk.take(1):
             return
         merge_into_store(spark, batch_sk, sketch_dir, key_cols)
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)
 
 
 def distinct_estimates(
@@ -170,8 +161,6 @@ def start_theta_sketch_rollup(
     key_cols: list[str],
     day_col: str,
     value_col: str,
-    schema=None,
-    lgk: int = DEFAULT_LGK,
 ):
     """Maintain a per-(key, day) THETA sketch table by pure merge — the
     set-algebra-capable sibling of :func:`start_distinct_sketch_rollup`.
@@ -184,26 +173,18 @@ def start_theta_sketch_rollup(
     intersection and difference (operators/sketches.py theta_set_algebra),
     so "customers active in both X and Y over all history" is answered
     from KB-size sketches without ever rescanning the landing table."""
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        batch_sk = theta_batch(batch_df, key_cols, day_col, value_col, lgk)
+        batch_sk = theta_batch(batch_df, key_cols, day_col, value_col)
         if not batch_sk.take(1):
             return
         merge_into_store(
             spark, batch_sk, sketch_dir, key_cols,
             sketch_col="theta",
-            union_agg=lambda c: F.theta_union_agg(c, F.lit(lgk)),
+            union_agg=lambda c: F.theta_union_agg(c, F.lit(DEFAULT_LGK)),
         )
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)
 
 
 def set_algebra_from_store(
@@ -232,8 +213,6 @@ def start_quantile_sketch_rollup(
     key_cols: list[str],
     day_col: str,
     value_col: str,
-    schema=None,
-    k: int = 200,
 ):
     """Maintain a per-(key, day) KLL quantile-sketch table — via
     PARTITION RECOMPUTE, not pure merge, and deliberately so.
@@ -252,9 +231,6 @@ def start_quantile_sketch_rollup(
     proves both halves: recompute-rerun is a no-op, while a naive
     double-merge of the same batch visibly shifts the merged sketch.
     """
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         days = [
@@ -268,9 +244,7 @@ def start_quantile_sketch_rollup(
         src = spark.read.parquet(landing_dir).filter(
             F.to_date(day_col).isin(days)
         )
-        refreshed = src.groupBy(*key_cols, F.to_date(day_col).alias("day")).agg(
-            F.kll_sketch_agg_double(value_col, F.lit(k)).alias("kll")
-        )
+        refreshed = kll_daily_rollup(src, key_cols, F.to_date(day_col), value_col)
         (
             refreshed.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -278,38 +252,7 @@ def start_quantile_sketch_rollup(
             .parquet(sketch_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def quantile_estimates(
-    spark: SparkSession, sketch_dir: str, key_cols: list[str], q: float
-) -> DataFrame:
-    """Quantile per key over all history from the persisted KLL table:
-    reduce-merge the per-day sketches (collect_list is bounded by days
-    per key), read the quantile off the merged sketch."""
-    return (
-        spark.read.parquet(sketch_dir)
-        .groupBy(*key_cols)
-        .agg(F.collect_list("kll").alias("sks"))
-        .select(
-            *key_cols,
-            F.kll_sketch_get_quantile_double(
-                F.reduce(
-                    F.slice(
-                        "sks", 2, F.greatest(F.size("sks") - 1, F.lit(0))
-                    ),
-                    F.col("sks")[0],
-                    lambda acc, x: F.kll_sketch_merge_double(acc, x),
-                ),
-                F.lit(q),
-            ).alias("approx_quantile"),
-        )
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)
 
 
 def sliding_distinct_from_store(
@@ -340,7 +283,6 @@ def start_frequency_sketch_rollup(
     sketch_dir: str,
     checkpoint_dir: str,
     value_col: str,
-    schema=None,
 ):
     """Maintain a count-min frequency store over the landing rows —
     via BATCH-PARTITIONED IDEMPOTENT DELTAS, the third maintenance
@@ -363,10 +305,6 @@ def start_frequency_sketch_rollup(
     Returns the started availableNow StreamingQuery."""
     from ..operators.sketches import count_min_rollup
 
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
-
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         cm = count_min_rollup(batch_df, [], value_col)
         if not cm.take(1):
@@ -379,12 +317,7 @@ def start_frequency_sketch_rollup(
             .parquet(sketch_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)
 
 
 def frequency_estimates(

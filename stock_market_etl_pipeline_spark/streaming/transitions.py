@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .drive import drain, parquet_landing
+
 DEFAULT_BUCKETS = 32
 
 
@@ -82,15 +84,11 @@ def start_transition_rollup(
     store_dir: str,
     checkpoint_dir: str,
     n_buckets: int = DEFAULT_BUCKETS,
-    schema=None,
 ):
     """Maintain ``store_dir`` (parquet partitioned by bucket) as an
     incremental materialization of ``transition_pairs`` over the events
     in ``landing_dir``. Returns the started StreamingQuery (availableNow).
     """
-    if schema is None:
-        schema = spark.read.parquet(landing_dir).schema
-    stream = spark.readStream.schema(schema).parquet(landing_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         touched = (
@@ -112,9 +110,4 @@ def start_transition_rollup(
             .parquet(store_dir)
         )
 
-    return (
-        stream.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

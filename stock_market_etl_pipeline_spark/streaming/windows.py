@@ -1,7 +1,7 @@
 """Event-time windowed streaming aggregations with watermarks.
 
 Translates the reference's daily batch cadence into proper streaming
-primitives (SURVEY.md §2.10's future-phase note): tumbling/sliding
+primitives (SURVEY.md §2.10's future-phase note): tumbling and session
 event-time windows over the event stream, late data bounded by watermark.
 State per (window, key) is dropped once the watermark passes the window
 end — bounded memory at any scale.
@@ -32,28 +32,6 @@ def tumbling_event_counts(
             "event_type",
             "n_events",
             "total_value",
-        )
-    )
-
-
-def sliding_user_activity(
-    stream: DataFrame,
-    window_length: str = "2 hours",
-    slide: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Sliding-window distinct-ish user activity (approx at scale)."""
-    return (
-        stream.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_length, slide).alias("win"))
-        .agg(
-            F.approx_count_distinct("user_id").alias("approx_users"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "approx_users",
-            "n_events",
         )
     )
 

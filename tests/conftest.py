@@ -6,7 +6,9 @@ dirty-row cases."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -73,3 +75,34 @@ def raw_quotes(spark):
         ("ONE", "2024-01-01", "50", "55", "48", "52", "500", ts, "x"),
     ]
     return spark.createDataFrame(rows + dirty, RAW_QUOTE_SCHEMA)
+
+
+def await_drained(spark, q, timeout: int = 240, strict: bool = True) -> None:
+    """Wait for an availableNow query to drain, stop it, then wait until the
+    stream manager deregisters it: restarting on the same checkpoint before
+    that trips the concurrent-use guard. ``strict`` raises if it never
+    deregisters."""
+    q.awaitTermination(timeout)
+    q.stop()
+    for _ in range(300):
+        if all(a.id != q.id for a in spark.streams.active):
+            return
+        time.sleep(0.1)
+    if strict:
+        raise AssertionError("query did not deregister")
+
+
+def crash_last_commit(ckpt: str) -> None:
+    """Simulate dying between the newest micro-batch's sink write and its
+    checkpoint commit: delete commits/N (and its CRC twin) so a restarted
+    query replays batch N."""
+    cdir = os.path.join(ckpt, "commits")
+    nums = [
+        int(f.lstrip(".").split(".")[0])
+        for f in os.listdir(cdir)
+        if not f.startswith(".")
+    ]
+    n = max(nums)
+    for f in os.listdir(cdir):
+        if f.lstrip(".").split(".")[0] == str(n):
+            os.remove(os.path.join(cdir, f))

@@ -100,7 +100,7 @@ def test_streaming_ingest_dedups_overlap(spark, tmp_path):
         "append"
     ).json(landing)
 
-    q = start_quote_ingest(spark, landing, sink, ckpt, trigger_once=True)
+    q = start_quote_ingest(spark, landing, sink, ckpt)
     q.awaitTermination(120)
 
     out = spark.read.parquet(sink)

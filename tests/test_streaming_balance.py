@@ -4,7 +4,6 @@ months, and crash-replay convergence."""
 
 import json
 import os
-import time
 from datetime import date
 
 from pyspark.sql import functions as F
@@ -15,7 +14,7 @@ from stock_market_etl_pipeline_spark.streaming.balance import (
     start_balance_maintainer,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_drained, crash_last_commit
 import pytest
 
 # Long-matrix tier (VERDICT r12 #1): multi-batch streaming / replay /
@@ -42,26 +41,7 @@ def _run(spark, d):
     q = start_balance_maintainer(
         spark, d["landing"], d["state"], d["ckpt"]
     )
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def _snap(spark, d):
@@ -148,7 +128,7 @@ def test_balance_survives_restart_storm(spark, tmp_path):
         _land(d, b, f"b{i}.json")
         _run(spark, d)
         once = _snap(spark, d)
-        _crash_last_commit(d["ckpt"])
+        crash_last_commit(d["ckpt"])
         _run(spark, d)
         assert _snap(spark, d) == once, f"replay diverged at batch {i}"
     final = {m: row for m, *row in _snap(spark, d)}
@@ -184,7 +164,7 @@ def test_cancellation_retracts_open(spark, tmp_path, monkeypatch):
 
     # crash-replay storm on the cancellation batch: the merge-deletes
     # are txn-marked, the view refresh is cdc-marked — replay converges
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run(spark, d)
     assert _snap(spark, d) == once, "cancel replay diverged"
 
@@ -257,7 +237,7 @@ def test_ship_after_cancel_is_dropped(spark, tmp_path, monkeypatch):
 
     # crash-replay on the late-ship batch: tombstone marks are
     # txn-marked upserts, so the replayed batch re-drops the ships
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run(spark, d)
     assert _snap(spark, d) == once, "late-ship replay diverged"
 

@@ -11,11 +11,10 @@ import pytest
 pytestmark = pytest.mark.slow
 
 import os
-import time
 
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_drained, crash_last_commit
 from stock_market_etl_pipeline_spark import registry
 from stock_market_etl_pipeline_spark.operators.txtable import TxTable
 from stock_market_etl_pipeline_spark.streaming.bm25_index import (
@@ -37,26 +36,7 @@ def _run(spark, d):
     q = start_bm25_index_stream(
         spark, d["landing"], d["index"], d["ckpt"]
     )
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def _topk_rows(df):
@@ -120,7 +100,7 @@ def test_index_survives_restart_storm(spark, tmp_path):
             (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
         ).coalesce(1).write.mode("append").parquet(d["landing"])
         _run(spark, d)
-        _crash_last_commit(d["ckpt"])
+        crash_last_commit(d["ckpt"])
         _run(spark, d)
 
     got = _topk_rows(bm25_from_index(spark, d["index"]))

@@ -21,6 +21,7 @@ from stock_market_etl_pipeline_spark.streaming.contamination import (
     probe_batch,
     start_contamination_monitor,
 )
+from conftest import await_drained, crash_last_commit
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -41,28 +42,7 @@ def _bench(spark):
 
 def _run(spark, landing, bench_dir, hits, ckpt):
     q = start_contamination_monitor(spark, landing, bench_dir, hits, ckpt)
-    q.awaitTermination(120)
-    q.stop()
-    import time
-
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q, timeout=120)
 
 
 def _report(spark, bench_dir, hits):
@@ -158,7 +138,7 @@ def test_monitor_survives_restart_storm(spark, tmp_path):
         _run(spark, landing, bench_dir, hits, ckpt)
         for _ in range(rng.randint(1, 2)):
             n_crashes += 1
-            _crash_last_commit(ckpt)
+            crash_last_commit(ckpt)
             _run(spark, landing, bench_dir, hits, ckpt)
     assert n_crashes >= 3
 

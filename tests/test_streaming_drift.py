@@ -12,7 +12,6 @@ pytestmark = pytest.mark.slow
 
 import math
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -23,6 +22,7 @@ from stock_market_etl_pipeline_spark.streaming.drift_monitor import (
     freeze_reference,
     start_drift_monitor,
 )
+from conftest import await_drained, crash_last_commit
 
 
 def _docs(spark, rows, start_id=0):
@@ -39,26 +39,7 @@ def _dirs(tmp_path):
 
 def _run(spark, d):
     q = start_drift_monitor(spark, d["landing"], d["state"], d["ckpt"])
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def _kl_reference(live_counts, ref_counts):
@@ -156,7 +137,7 @@ def test_drift_monitor_survives_restart_storm(spark, tmp_path):
         for r in drift_metrics(spark, d["state"]).collect()
     )
     # crash AFTER the work, BEFORE the checkpoint commit: full replay
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run(spark, d)
     again = sorted(
         (r.batch_id, r.source, r.kl_vs_reference)
@@ -204,7 +185,7 @@ def test_multi_source_planted_drift_restart_storm(spark, tmp_path):
             for r in drift_metrics(spark, d["state"]).collect()
         )
         # crash AFTER the work, BEFORE the commit: full batch replay
-        _crash_last_commit(d["ckpt"])
+        crash_last_commit(d["ckpt"])
         _run(spark, d)
         again = sorted(
             (r.batch_id, r.source, r.kl_vs_reference, bool(r.drifted))

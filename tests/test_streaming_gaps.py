@@ -14,7 +14,7 @@ from stock_market_etl_pipeline_spark.streaming.gaps import (
     _tables,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_drained, crash_last_commit
 import pytest
 
 # Long-matrix tier (VERDICT r12 #1): multi-batch streaming / replay /
@@ -49,26 +49,7 @@ def _land(d, events, name):
 
 def _run(spark, d):
     q = start_gap_monitor(spark, d["landing"], d["state"], d["ckpt"])
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def _gaps(spark, d):
@@ -148,7 +129,7 @@ def test_gap_monitor_survives_restart_storm(spark, tmp_path):
         _land(d, b, f"b{i}.json")
         _run(spark, d)
         once = _gaps(spark, d)
-        _crash_last_commit(d["ckpt"])
+        crash_last_commit(d["ckpt"])
         _run(spark, d)
         assert _gaps(spark, d) == once, f"replay diverged at batch {i}"
     assert _gaps(spark, d) == WANT
@@ -180,12 +161,7 @@ def test_composed_out_of_order_pipeline(spark, tmp_path, monkeypatch):
         q = start_event_feed_ingest(
             spark, d["landing"], d["staging"], d["ckpt1"]
         )
-        q.awaitTermination(240)
-        q.stop()
-        for _ in range(300):
-            if all(a.id != q.id for a in spark.streams.active):
-                break
-            time.sleep(0.1)
+        await_drained(spark, q, strict=False)
         # stamp the fresh drop's files so the monitor's file source
         # sees strictly increasing mtimes across drains
         for root, _dirs_, files in os.walk(d["staging"]):
@@ -198,13 +174,7 @@ def test_composed_out_of_order_pipeline(spark, tmp_path, monkeypatch):
         q = start_gap_monitor(
             spark, d["staging"] + "/*", d["state"], d["ckpt"]
         )
-        q.awaitTermination(240)
-        q.stop()
-        for _ in range(300):
-            if all(a.id != q.id for a in spark.streams.active):
-                return
-            time.sleep(0.1)
-        raise AssertionError("monitor did not deregister")
+        await_drained(spark, q)
 
     # wave 1: EVENTS landed REVERSED across three files, every event
     # duplicated in a second file — landing order is adversarial
@@ -244,7 +214,7 @@ def test_composed_out_of_order_pipeline(spark, tmp_path, monkeypatch):
     assert _gaps(spark, d) == want2, "composed wave-2 gaps diverged"
 
     # exactly-once across a monitor crash-replay of the last batch
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run_monitor()
     assert _gaps(spark, d) == want2, "monitor replay diverged"
 

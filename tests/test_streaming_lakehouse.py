@@ -28,6 +28,7 @@ from stock_market_etl_pipeline_spark.streaming.lakehouse import (
 
     start_lakehouse_ingest,
 )
+from conftest import crash_last_commit
 
 SCHEMA = "k long, v long"
 GROUPS = ["k"]
@@ -64,19 +65,6 @@ def _run(spark, src, troot, vroot, ckpt):
     q.awaitTermination(120)
 
 
-def _crash_last_commit(ckpt):
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
-
-
 def test_lakehouse_ingest_view_tracks_table(spark, tmp_path):
     src = str(tmp_path / "src"); os.makedirs(src)
     troot, vroot = str(tmp_path / "t"), str(tmp_path / "v")
@@ -111,7 +99,7 @@ def test_lakehouse_survives_checkpoint_crash_replay(spark, tmp_path):
     for lo, hi in bounds:
         _feed(spark, lo, hi, src)
         _run(spark, src, troot, vroot, ckpt)
-        _crash_last_commit(ckpt)
+        crash_last_commit(ckpt)
         _run(spark, src, troot, vroot, ckpt)  # replay of the last batch
 
     t = TxTable(troot)

@@ -24,6 +24,7 @@ from stock_market_etl_pipeline_spark.streaming.near_dedup import (
 
     start_near_dedup_stream,
 )
+from conftest import await_drained, crash_last_commit
 
 WORDS = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "
@@ -55,15 +56,7 @@ def _wave2(spark):
 
 def _run(spark, landing, index, matches, ckpt):
     q = start_near_dedup_stream(spark, landing, index, matches, ckpt)
-    q.awaitTermination(120)
-    q.stop()
-    import time
-
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
+    await_drained(spark, q, timeout=120)
 
 
 def _matches(spark, matches_dir):
@@ -71,19 +64,6 @@ def _matches(spark, matches_dir):
         (r["corpus_doc"], r["new_doc"]): r["est_jaccard"]
         for r in spark.read.parquet(matches_dir).collect()
     }
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
 
 
 def test_near_dedup_stream_survives_restart_storm(spark, tmp_path):
@@ -118,7 +98,7 @@ def test_near_dedup_stream_survives_restart_storm(spark, tmp_path):
         _run(spark, landing, index, matches, ckpt)
         for _ in range(rng.randint(0, 2)):
             n_crashes += 1
-            _crash_last_commit(ckpt)
+            crash_last_commit(ckpt)
             _run(spark, landing, index, matches, ckpt)
     assert n_crashes >= 3
 
@@ -175,16 +155,7 @@ def test_stream_matches_equal_batch_incremental_and_survive_replay(
     assert set(got) <= batch_pairs  # stream matched only true candidates
 
     # crash-replay: drop the newest commit so batch 1 redelivers
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    crash_last_commit(ckpt)
     _run(spark, landing, index, matches, ckpt)
 
     assert _matches(spark, matches) == got  # byte-identical match set

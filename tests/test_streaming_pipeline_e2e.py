@@ -14,7 +14,7 @@ from stock_market_etl_pipeline_spark.streaming.ingest import (
     start_pipeline_stream,
 )
 
-from conftest import make_raw_rows
+from conftest import await_drained, make_raw_rows
 
 # Long-matrix tier (VERDICT r12 #1): multi-batch streaming / replay /
 # restart-storm e2e tests. Excluded from the default run so the driver's
@@ -71,21 +71,6 @@ def test_streaming_pipeline_matches_batch_output(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "quarantine"))
 
 
-def _run_to_completion(q, spark) -> None:
-    """availableNow queries self-terminate; also wait until the manager
-    deregisters the run, or an immediate restart on the same checkpoint
-    trips the concurrent-use guard."""
-    import time
-
-    q.awaitTermination(120)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
 def _crash_after_write_before_commit(ckpt: str) -> None:
     """Simulate dying BETWEEN the foreachBatch sink write and the
     checkpoint commit: Structured Streaming writes offsets/N before
@@ -123,14 +108,14 @@ def test_exactly_once_sink_survives_crash_between_write_and_commit(
         exactly_once=True,
     )
     q = start_pipeline_stream(spark, landing, sink, **kwargs)
-    _run_to_completion(q, spark)
+    await_drained(spark, q, timeout=120)
     first = spark.read.parquet(sink)
     n_first = first.count()
     assert n_first == 55
 
     _crash_after_write_before_commit(ckpt)
     q = start_pipeline_stream(spark, landing, sink, **kwargs)
-    _run_to_completion(q, spark)
+    await_drained(spark, q, timeout=120)
 
     after = spark.read.parquet(sink)
     assert after.count() == n_first  # replayed batch overwrote itself
@@ -207,12 +192,12 @@ def test_exactly_once_sink_survives_restart_storm(spark, tmp_path, seed):
             "append"
         ).json(landing)
         q = start_pipeline_stream(spark, landing, sink, **kwargs)
-        _run_to_completion(q, spark)
+        await_drained(spark, q, timeout=120)
         for _ in range(rng.randint(0, 2)):
             n_crashes += 1
             _crash_last_commit(ckpt)
             q = start_pipeline_stream(spark, landing, sink, **kwargs)
-            _run_to_completion(q, spark)
+            await_drained(spark, q, timeout=120)
     assert n_crashes >= 3  # the storm is real for this seed
 
     batch_sink = str(tmp_path / "batch_sink")
@@ -257,12 +242,12 @@ def test_append_sink_duplicates_under_the_same_crash(spark, tmp_path):
         exactly_once=False,
     )
     q = start_pipeline_stream(spark, landing, sink, **kwargs)
-    _run_to_completion(q, spark)
+    await_drained(spark, q, timeout=120)
     assert spark.read.parquet(sink).count() == 20
 
     _crash_after_write_before_commit(ckpt)
     q = start_pipeline_stream(spark, landing, sink, **kwargs)
-    _run_to_completion(q, spark)
+    await_drained(spark, q, timeout=120)
 
     after = spark.read.parquet(sink)
     assert after.count() == 40  # every batch-0 row appended twice

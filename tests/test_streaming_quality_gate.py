@@ -28,9 +28,7 @@ def _drop(spark, rows, landing, name):
 
 
 def _ingest(spark, landing, sink, quarantine, ckpt):
-    q = start_gated_quote_ingest(
-        spark, landing, sink, quarantine, ckpt, trigger_once=True
-    )
+    q = start_gated_quote_ingest(spark, landing, sink, quarantine, ckpt)
     q.awaitTermination(120)
 
 

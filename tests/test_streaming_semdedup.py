@@ -14,11 +14,10 @@ pytestmark = pytest.mark.slow
 
 import os
 import random
-import time
 
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
+from conftest import SF_DIR, await_drained, crash_last_commit
 from stock_market_etl_pipeline_spark.operators.similarity import (
     perturbation_constants,
     semantic_dedup,
@@ -77,26 +76,7 @@ def _run(spark, d):
         d["decisions"], d["ckpt"],
         n_clusters=N_CLUSTERS, threshold=THRESH,
     )
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def _survivor_ids(spark, d):
@@ -167,7 +147,7 @@ def test_stream_survives_restart_storm(spark, tmp_path):
         _run(spark, d)
         for _ in range(rng.randint(1, 2)):
             n_crashes += 1
-            _crash_last_commit(d["ckpt"])
+            crash_last_commit(d["ckpt"])
             _run(spark, d)
     assert n_crashes >= 3
 
@@ -262,7 +242,7 @@ def test_decision_log_stable_across_post_merge_replay(spark, tmp_path):
     assert all(BASE_OFF + i not in before_survivors for i in chained)
 
     # the post-merge / pre-checkpoint crash seam
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run(spark, d)
 
     assert log_rows() == before_log

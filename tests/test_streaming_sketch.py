@@ -14,7 +14,7 @@ from stock_market_etl_pipeline_spark.streaming.sketch_rollup import (
     start_distinct_sketch_rollup,
 )
 
-from conftest import SF_DIR
+from conftest import SF_DIR, crash_last_commit
 import pytest
 
 # Long-matrix tier (VERDICT r12 #1): multi-batch streaming / replay /
@@ -452,24 +452,11 @@ def test_kll_rollup_survives_restart_storm(spark, tmp_path):
     exactly-once story for the NON-idempotent sketch family: merge-replay
     visibly corrupts KLL (test above), so correctness rests entirely on
     the touched-day partition recompute being an idempotent overwrite."""
-    import os
     import random
 
     from stock_market_etl_pipeline_spark.streaming.sketch_rollup import (
         start_quantile_sketch_rollup,
     )
-
-    def _crash_last_commit(ckpt: str) -> None:
-        cdir = os.path.join(ckpt, "commits")
-        nums = [
-            int(f.lstrip(".").split(".")[0])
-            for f in os.listdir(cdir)
-            if not f.startswith(".")
-        ]
-        n = max(nums)
-        for f in os.listdir(cdir):
-            if f.lstrip(".").split(".")[0] == str(n):
-                os.remove(os.path.join(cdir, f))
 
     rng = random.Random(0x511C)
     landing = str(tmp_path / "landing")
@@ -510,7 +497,7 @@ def test_kll_rollup_survives_restart_storm(spark, tmp_path):
         _run()
         for _ in range(rng.randint(0, 2)):
             n_crashes += 1
-            _crash_last_commit(ckpt)
+            crash_last_commit(ckpt)
             _run()
     assert n_crashes >= 3
 

@@ -4,7 +4,6 @@ TxTables — atomic batch visibility, staged-file audit, quarantine
 diversion, and exactly-once across crash replays at every seam."""
 
 import os
-import time
 
 from stock_market_etl_pipeline_spark.operators.txtable import TxTable
 from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
@@ -12,7 +11,7 @@ from stock_market_etl_pipeline_spark.streaming.ingest import (
     start_wap_gated_ingest,
 )
 
-from conftest import make_raw_rows
+from conftest import await_drained, crash_last_commit, make_raw_rows
 import pytest
 
 # Long-matrix tier (VERDICT r12 #1): multi-batch streaming / replay /
@@ -40,26 +39,7 @@ def _run(spark, d):
     q = start_wap_gated_ingest(
         spark, d["landing"], d["table"], d["quarantine"], d["ckpt"]
     )
-    q.awaitTermination(240)
-    q.stop()
-    for _ in range(300):
-        if all(a.id != q.id for a in spark.streams.active):
-            return
-        time.sleep(0.1)
-    raise AssertionError("query did not deregister")
-
-
-def _crash_last_commit(ckpt: str) -> None:
-    cdir = os.path.join(ckpt, "commits")
-    nums = [
-        int(f.lstrip(".").split(".")[0])
-        for f in os.listdir(cdir)
-        if not f.startswith(".")
-    ]
-    n = max(nums)
-    for f in os.listdir(cdir):
-        if f.lstrip(".").split(".")[0] == str(n):
-            os.remove(os.path.join(cdir, f))
+    await_drained(spark, q)
 
 
 def test_wap_gate_routes_good_and_bad(spark, tmp_path):
@@ -103,7 +83,7 @@ def test_wap_gate_restart_storm(spark, tmp_path):
     for w in waves:
         _drop(spark, w, d["landing"])
         _run(spark, d)
-        _crash_last_commit(d["ckpt"])
+        crash_last_commit(d["ckpt"])
         _run(spark, d)  # replay of the same batch
 
     assert table.read(spark).count() == 16
@@ -141,7 +121,7 @@ def test_wap_gate_stale_marker_after_publish_crash(spark, tmp_path):
         table.read(spark).limit(3).withColumn("close", F.col("close")),
         "gate-0",
     )
-    _crash_last_commit(d["ckpt"])
+    crash_last_commit(d["ckpt"])
     _run(spark, d)  # replay of batch 0
 
     assert table.read(spark).count() == n0
