@@ -1,9 +1,12 @@
 """Cleaning stage: rename → cast → null-drop → logic filters → keep-last dedup.
 
 Mirrors reference ``src/transform.py:112-204`` (P1-P7, O6 in SURVEY.md §2.2/§2.6)
-as one narrow stage + one filter stage — no shuffle until the dedup, and the
-dedup's window shuffle on (symbol, date) is reused by every downstream
-window operator.
+as one narrow stage + one filter stage — no shuffle until the dedup. The
+rows are hash-partitioned by ``symbol`` alone right before the dedup: that
+one exchange satisfies the dedup window's (symbol, date) clustering, and
+its sort on (symbol, date, extracted_at DESC) satisfies the (symbol ORDER BY
+date) windows downstream, so ``enrich`` and ``observe_suite`` add neither
+an exchange nor a sort.
 """
 
 from __future__ import annotations
@@ -74,7 +77,11 @@ def clean_quotes(raw: DataFrame) -> DataFrame:
     df = df.na.drop(subset=CRITICAL_COLUMNS)
     df = df.filter(ohlc_consistency_predicate(df))
     df = df.filter(positive_price_predicate(df))
-    return dedup_keep_last(df, keys=["symbol", "date"], order_by=["extracted_at"])
+    # hash(symbol), not the dedup's own hash(symbol, date): see the module
+    # docstring. No partition count, so AQE still coalesces.
+    return dedup_keep_last(
+        df.repartition("symbol"), keys=["symbol", "date"], order_by=["extracted_at"]
+    )
 
 
 def dedup_keep_last(df: DataFrame, keys: list[str], order_by: list[str],
@@ -88,7 +95,10 @@ def dedup_keep_last(df: DataFrame, keys: list[str], order_by: list[str],
     an arbitrary-winner dedup.
 
     Scale note: row_number over (keys) is a single hash-shuffle on the
-    keys; with AQE skew handling a hot key splits fine. No global sort.
+    keys (none if the input is already clustered on a subset of them, as
+    in ``clean_quotes``). No global sort. AQE splits skewed JOIN
+    partitions only, never a window's: a hot key stays on one task. The
+    windows that need a bound on that use ``operators/skewsafe.py``.
     """
     order_cols = [F.col(c).desc() for c in order_by]
     order_cols += [F.col(c).desc() for c in (tiebreak or [])]

@@ -1,13 +1,17 @@
 """Enrichment: the reference's full derived-column set (C5) as one lazy plan.
 
 Reference ``src/transform.py:45-336``. Every window operator shares ONE
-window spec — ``partitionBy(symbol).orderBy(date)`` — so Catalyst plans a
-single Exchange(hashpartitioning(symbol)) + one Sort for all of:
-lag-diff, pct-change, ma_5, ma_20, rolling stddev (SURVEY.md §4).
+window partitioning and order — ``partitionBy(symbol).orderBy(date)`` — so
+Catalyst plans a single Exchange(hashpartitioning(symbol)) + one Sort for
+all of: lag-diff, pct-change, ma_5, ma_20, rolling stddev and the exact
+per-symbol volume quartiles (A7) (SURVEY.md §4); none at all when the
+input already arrives clustered and sorted that way, as ``clean_quotes``
+leaves it. The lag sits in one Window node; everything else (and
+``observe_suite``'s lag window) collapses into a second.
 
-The per-symbol volume quartiles (A7) are an aggregate + broadcast
-join-back: the quartile table is one row per symbol (tiny at any scale),
-so the join adds no shuffle.
+The approximate quartiles (``quartiles="approx"``) are an aggregate +
+broadcast join-back: the quartile table is one row per symbol (tiny at
+any scale), so the join adds no shuffle.
 """
 
 from __future__ import annotations
@@ -111,7 +115,13 @@ def enrich(
         # as a named column FIRST — indexing the window expression three
         # times inline would plan three separate (identical) window
         # functions, since the physical Window node does not dedupe them.
-        wp = Window.partitionBy("symbol")
+        # Ordered over the whole partition rather than unordered:
+        # percentile ignores the order, so the values are the same, and
+        # a spec equal to w2's lets Catalyst's CollapseWindow merge it
+        # into w2's Window node.
+        wp = Window.partitionBy("symbol").orderBy("date").rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
         window_layer = window_layer.withColumn(
             "__qs",
             F.percentile(

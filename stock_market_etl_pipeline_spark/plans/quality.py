@@ -169,9 +169,10 @@ def observe_suite(
     - ``__groups`` (distinct symbols) = rows with no previous row.
 
     Both are exact when the key columns are non-null, as they are after
-    ``clean_quotes``. The window reuses the symbol partitioning and date
-    order that ``enrich`` already established, so it adds no exchange and
-    no sort. The returned frame has ``df``'s columns.
+    ``clean_quotes``. Its spec equals ``enrich``'s (symbol ORDER BY date)
+    spec, so over an enriched frame Catalyst collapses it into enrich's
+    last Window node: it adds no exchange, no sort and no Window. The
+    returned frame has ``df``'s columns.
     """
     prev = F.lag("date").over(Window.partitionBy("symbol").orderBy("date"))
     total = F.count(F.lit(1))

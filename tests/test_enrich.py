@@ -150,3 +150,62 @@ def test_approx_quartile_bucket_agreement_with_exact(spark):
     for k in e:
         d = abs(order[e[k]["volume_category"]] - order[a[k]["volume_category"]])
         assert d <= 1, (k, e[k]["volume_category"], a[k]["volume_category"])
+
+
+def test_clean_enrich_invariant_to_partitions_and_aqe(spark):
+    """enrich(clean_quotes(raw)) gives the same rows whatever the shuffle
+    width and whether AQE re-plans the exchange, and keep-last picks the
+    latest extracted_at among revised duplicates. The dedup and every
+    enrich window share clean_quotes' one hash(symbol) exchange, so a
+    width or AQE change that split a symbol across tasks, or ordered a
+    revision after its original, would show here."""
+    from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
+
+    from conftest import make_raw_rows
+
+    t0 = dt.datetime(2024, 6, 1, 12, 0, 0)
+    rows = []
+    for i, sym in enumerate(["AAA", "BBB", "CCC", "DDD", "EEE"]):
+        rows += make_raw_rows(sym, 30, base=100.0 + 50 * i)
+    latest = {}
+    for i, sym in enumerate(["AAA", "CCC", "EEE"]):
+        for day in (0, 7, 29):
+            d = (dt.date(2024, 1, 1) + dt.timedelta(days=day)).isoformat()
+            close = 120.0 + 50 * i + day
+            # the latest revision sits between the original and an older
+            # one in input order, so input order cannot pick it
+            rows += [
+                (sym, d, str(close), str(close + 9), str(close - 9),
+                 str(close), "777", t0 + dt.timedelta(days=2), "latest"),
+                (sym, d, str(close), str(close + 9), str(close - 9),
+                 str(close + 1), "555", t0 + dt.timedelta(days=1), "older"),
+            ]
+            latest[(sym, dt.date.fromisoformat(d))] = close
+    raw = spark.createDataFrame(rows, RAW_QUOTE_SCHEMA)
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    results = {}
+    try:
+        for parts in (1, 7):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], str(parts))
+                spark.conf.set(keys[1], aqe)
+                out = enrich(
+                    clean_quotes(raw).drop("extracted_at", "data_source")
+                ).collect()
+                results[(parts, aqe)] = sorted(
+                    out, key=lambda r: (r["symbol"], r["date"])
+                )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    first = results[(1, "true")]
+    assert len(first) == 5 * 30
+    for cfg, got in results.items():
+        assert got == first, cfg
+    by_key = {(r["symbol"], r["date"]): r for r in first}
+    for key, close in latest.items():
+        assert by_key[key]["close"] == close, key
+        assert by_key[key]["volume"] == 777, key

@@ -1032,13 +1032,45 @@ def test_semantic_dedup_pair_phase_shape(spark):
     assert plan.count("lambdafunction") <= 3
 
 
+def executed_plan_of_last_write(spark) -> str:
+    """The ``(N) Name`` lines of the final (post-AQE) physical plan of the
+    session's last write, read from the SQL status store. Its formatted
+    description lists the final and the initial plan; only the node ids
+    drawn in the final plan's tree are kept, so count_nodes counts each
+    executed operator once."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    desc = next(
+        d
+        for d in (
+            execs.apply(i).physicalPlanDescription()
+            for i in reversed(range(execs.size()))
+        )
+        if "InsertIntoHadoopFsRelationCommand" in d
+    )
+    final = desc.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    ids = set(re.findall(r"\((\d+)\)", final))
+    return "\n".join(
+        line
+        for line in re.findall(r"^\(\d+\) .*$", desc, re.M)
+        if line[1:line.index(")")] in ids
+    )
+
+
 def test_run_pipeline_is_one_write_without_caches(spark, tmp_path):
     """The quality gate, the corrupt-record count and the loaded counts
     ride on the sink write as observed metrics: a run is the SELECT 1
-    probe plus the write's jobs (the dedup and window exchange map stages
-    and the write itself) — it was 13 jobs when the corrupt count, the
-    gate and the summary each ran an action over two caches — and it
-    leaves nothing persisted."""
+    probe plus the write's jobs (the one exchange's map stage and the
+    write itself) — it was 13 jobs when the corrupt count, the gate and
+    the summary each ran an action over two caches — and it leaves
+    nothing persisted.
+
+    The write shuffles once: clean_quotes hash-partitions by symbol
+    before its keep-last dedup, so that Exchange and its Sort serve every
+    window above it, and enrich's quartile window and observe_suite's lag
+    window share enrich's (symbol ORDER BY date) spec and collapse into
+    one Window node. Three Windows remain: dedup, lag, and the rest. With
+    the dedup clustered on (symbol, date) and an unordered quartile
+    window the write ran 4 jobs, 2 Exchanges and 5 Windows."""
     from stock_market_etl_pipeline_spark.pipeline import run_pipeline
     from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
 
@@ -1059,6 +1091,31 @@ def test_run_pipeline_is_one_write_without_caches(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert (result.records_loaded, result.corrupt_records) == (30, 1)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
     # earlier tests' RDDs may be cleaned meanwhile; none may be added
     assert not set(sc._jsc.getPersistentRDDs().keySet()) - persisted
+    plan = executed_plan_of_last_write(spark)
+    assert count_nodes(plan, "Exchange") == 1, plan
+    assert count_nodes(plan, "Window") == 3, plan
+
+
+def test_observe_suite_window_collapses_into_enrich(spark):
+    """observe_suite's lag(date) window adds no Window node over an
+    enriched frame: it, ma_5/ma_20/volatility and the quartile window
+    all share one (symbol ORDER BY date) spec. Only the lag layer, which
+    the rolling stddev reads, stays a Window of its own."""
+    from pyspark.sql import Observation
+
+    from stock_market_etl_pipeline_spark.operators.enrich import enrich
+    from stock_market_etl_pipeline_spark.plans.quality import (
+        observe_suite,
+        stock_quality_checks,
+    )
+    from stock_market_etl_pipeline_spark.sources.ticks import ticks
+
+    enriched = enrich(ticks(spark, SF_DIR))
+    observed = observe_suite(
+        enriched, Observation("plan-shape-observe"), stock_quality_checks()
+    )
+    assert count_nodes(plan_of(enriched), "Window") == 2
+    assert count_nodes(plan_of(observed), "Window") == 2
