@@ -16,12 +16,13 @@ def pandas_day_of_week(date_col: Column | str) -> Column:
     return (F.dayofweek(date_col) + F.lit(5)) % 7
 
 
-def with_date_parts(df: DataFrame, date_col: str = "date") -> DataFrame:
-    """year/month/quarter/day_of_week/week_of_year, pandas conventions.
+def with_date_parts(df: DataFrame) -> DataFrame:
+    """year/month/quarter/day_of_week/week_of_year of ``date``, pandas
+    conventions.
 
     week_of_year is ISO (Spark ``weekofyear`` == pandas ``isocalendar().week``).
     """
-    d = F.col(date_col)
+    d = F.col("date")
     return df.withColumns(
         {
             "year": F.year(d).cast("int"),

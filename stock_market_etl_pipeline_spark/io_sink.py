@@ -12,13 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, partition_by: str = "symbol",
-                  mode: str = "overwrite") -> None:
+def write_parquet(df: DataFrame, path: str) -> None:
     (
-        df.repartition(partition_by)
-        .sortWithinPartitions(partition_by, "date")
-        .write.mode(mode)
-        .partitionBy(partition_by)
+        df.repartition("symbol")
+        .sortWithinPartitions("symbol", "date")
+        .write.mode("overwrite")
+        .partitionBy("symbol")
         .parquet(path)
     )
 
@@ -52,18 +51,14 @@ def write_bucketed(
     table: str,
     bucket_by: str,
     n_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: pre-shuffled storage layout so repeated
     joins/aggregations on the bucket key skip the exchange entirely —
     the storage-level answer to 'this join shuffles every run' at 100 TB.
     Requires a metastore-backed saveAsTable (works with the default local
     warehouse)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.format("parquet").saveAsTable(table)
+    (df.write.mode("overwrite").bucketBy(n_buckets, bucket_by)
+     .format("parquet").saveAsTable(table))
 
 
 def create_table_ddl(
@@ -72,7 +67,6 @@ def create_table_ddl(
     columns: dict[str, str],
     partitioned_by: tuple[str, ...] = (),
     location: str | None = None,
-    if_not_exists: bool = True,
 ) -> None:
     """S7: explicit CREATE TABLE DDL (reference ``src/load.py:26-92`` issues
     CREATE TABLE + composite index via SQLAlchemy). Spark analog: a parquet
@@ -82,7 +76,7 @@ def create_table_ddl(
         f"{name} {dtype}" for name, dtype in columns.items()
         if name not in partitioned_by
     )
-    ddl = f"CREATE TABLE {'IF NOT EXISTS ' if if_not_exists else ''}{table} ({cols}) USING PARQUET"
+    ddl = f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING PARQUET"
     if partitioned_by:
         parts = ", ".join(
             f"{name} {columns[name]}" for name in partitioned_by
@@ -97,27 +91,23 @@ def retain_recent(
     spark,
     path: str,
     cutoff_date: str,
-    date_col: str = "date",
-    partition_by: str | None = "symbol",
 ) -> int:
     """Retention sweep (VACUUM analog for a raw-parquet sink): rewrite the
-    dataset keeping only rows with ``date_col`` >= cutoff_date, then swap
-    directories atomically (same pattern as compact_parquet). With a table
-    format this is `DELETE WHERE` + VACUUM; on raw parquet the rewrite is
-    the portable fallback. The cutoff is an explicit parameter — retention
-    policy belongs to the caller, not a wall clock buried in the engine.
+    symbol-partitioned dataset keeping only rows with ``date`` >=
+    cutoff_date, then swap directories atomically (same pattern as
+    compact_parquet). With a table format this is `DELETE WHERE` +
+    VACUUM; on raw parquet the rewrite is the portable fallback. The
+    cutoff is an explicit parameter — retention policy belongs to the
+    caller, not a wall clock buried in the engine.
     Returns the retained row count (parquet footer metadata, no rescan)."""
     import shutil
     import uuid
 
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(path).filter(F.col(date_col) >= F.lit(cutoff_date))
+    df = spark.read.parquet(path).filter(F.col("date") >= F.lit(cutoff_date))
     tmp = f"{path}__retain_{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").partitionBy("symbol").parquet(tmp)
     # full-expiry case: a zero-row partitioned write leaves only _SUCCESS, so
     # a schemaless read of tmp would fail ('Unable to infer schema') before
     # the swap; reading with the known schema makes count-0 a normal result
@@ -127,10 +117,9 @@ def retain_recent(
     return n
 
 
-def compact_parquet(spark, path: str, target_partitions: int,
-                    partition_by: str | None = None) -> None:
+def compact_parquet(spark, path: str, target_partitions: int) -> None:
     """Small-files compaction: rewrite a parquet dataset into
-    target_partitions files (per partition dir if partition_by is set).
+    target_partitions files.
     At 100 TB, streaming/append sinks accrete small files that destroy scan
     parallelism economics (one task per tiny file); periodic compaction
     restores ~maxPartitionBytes-sized splits. Writes to a temp subdir then
@@ -140,10 +129,7 @@ def compact_parquet(spark, path: str, target_partitions: int,
 
     df = spark.read.parquet(path)
     tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    writer = df.repartition(target_partitions).write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    df.repartition(target_partitions).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     shutil.move(tmp, path)
 
@@ -154,13 +140,13 @@ def merge_upsert_parquet(
     updates: "DataFrame",
     keys: list[str],
     order_by: list[str],
-    partition_by: str = "symbol",
 ) -> int:
-    """Batch MERGE (upsert) into a parquet dataset: union existing + updates,
-    keep-last per key by order_by, atomically swap directories. The batch
-    half of the reference's daily append+dedup cycle (the streaming half is
-    streaming/ingest.py). With a table format (Delta/Iceberg) this becomes
-    a real MERGE INTO; on raw parquet the rewrite is the portable fallback.
+    """Batch MERGE (upsert) into a symbol-partitioned parquet dataset: union
+    existing + updates, keep-last per key by order_by, atomically swap
+    directories. The batch half of the reference's daily append+dedup
+    cycle (the streaming half is streaming/ingest.py). With a table
+    format (Delta/Iceberg) this becomes a real MERGE INTO; on raw parquet
+    the rewrite is the portable fallback.
     Returns the merged row count."""
     import os
     import shutil
@@ -176,9 +162,9 @@ def merge_upsert_parquet(
     merged = dedup_keep_last(combined, keys=keys, order_by=order_by)
     tmp = f"{sink_path}__merge_{uuid.uuid4().hex[:8]}"
     (
-        merged.repartition(partition_by)
+        merged.repartition("symbol")
         .write.mode("overwrite")
-        .partitionBy(partition_by)
+        .partitionBy("symbol")
         .parquet(tmp)
     )
     # count() on the freshly-written parquet is metadata-only: Spark's

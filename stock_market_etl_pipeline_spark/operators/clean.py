@@ -84,9 +84,10 @@ def clean_quotes(raw: DataFrame) -> DataFrame:
     )
 
 
-def dedup_keep_last(df: DataFrame, keys: list[str], order_by: list[str],
-                    tiebreak: list[str] | None = None) -> DataFrame:
-    """Keep-LAST dedup with a deterministic tiebreak.
+def dedup_keep_last(df: DataFrame, keys: list[str],
+                    order_by: list[str]) -> DataFrame:
+    """Keep-LAST dedup: per ``keys``, the row that sorts last by
+    ``order_by``.
 
     pandas ``drop_duplicates(keep='last')`` keeps the last occurrence in
     input order (reference src/transform.py:199-204). Spark has no stable
@@ -100,9 +101,7 @@ def dedup_keep_last(df: DataFrame, keys: list[str], order_by: list[str],
     partitions only, never a window's: a hot key stays on one task. The
     windows that need a bound on that use ``operators/skewsafe.py``.
     """
-    order_cols = [F.col(c).desc() for c in order_by]
-    order_cols += [F.col(c).desc() for c in (tiebreak or [])]
-    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -110,12 +109,12 @@ def dedup_keep_last(df: DataFrame, keys: list[str], order_by: list[str],
     )
 
 
-def nan_to_null(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """P13: NaN → NULL normalization (reference ``src/load.py:228``,
-    ``df.where(pd.notnull(df), None)``). Spark keeps NaN and NULL distinct
-    for doubles; sinks and aggregates that expect SQL semantics need real
-    NULLs."""
-    targets = cols or [
+def nan_to_null(df: DataFrame) -> DataFrame:
+    """P13: NaN → NULL normalization of every double/float column
+    (reference ``src/load.py:228``, ``df.where(pd.notnull(df), None)``).
+    Spark keeps NaN and NULL distinct for doubles; sinks and aggregates
+    that expect SQL semantics need real NULLs."""
+    targets = [
         f.name for f in df.schema.fields
         if f.dataType.simpleString() in ("double", "float")
     ]
@@ -125,10 +124,10 @@ def nan_to_null(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def with_defaults(df: DataFrame, defaults: dict | None = None) -> DataFrame:
+def with_defaults(df: DataFrame) -> DataFrame:
     """P14: fill the bookkeeping columns if absent/null (reference
     ``src/load.py:210-215``: extracted_at ← now, data_source ← constant)."""
-    defaults = defaults or {
+    defaults = {
         "extracted_at": F.current_timestamp(),
         "data_source": F.lit("Alpha Vantage"),
     }

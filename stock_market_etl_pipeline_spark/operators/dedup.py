@@ -99,18 +99,17 @@ def plant_exact_duplicates(
 
 def plant_prefix_duplicates(
     docs: DataFrame, n: int = 25, id_offset: int = 2_000_000,
-    min_keep: int = 8,
 ) -> DataFrame:
     """(doc_id, text) corpus ∪ TRUNCATED twins of the first ``n`` docs:
-    each twin keeps the first ceil(n_tokens/2) tokens (floored at
-    ``min_keep`` so every twin clears the prefix-key length). The planted
+    each twin keeps the first ceil(n_tokens/2) tokens (floored at 8 so
+    every twin clears the prefix-key length). The planted
     ground truth for prefix-containment dedup — the truncation-duplicate
     family scraped corpora accumulate (cut-off re-crawls, pagination
     tails, summary snippets). Derived data only (token slice + id
     arithmetic, no RNG) — mirrored verbatim in the oracle CTE."""
     t = ws_tokens(F.col("text"))
     keep = F.greatest(
-        F.ceil(F.size(t) / F.lit(2)).cast("int"), F.lit(min_keep)
+        F.ceil(F.size(t) / F.lit(2)).cast("int"), F.lit(8)
     )
     twins = docs.filter(F.col("doc_id") < n).select(
         (F.col("doc_id") + id_offset).alias("doc_id"),
@@ -423,11 +422,12 @@ def jaccard_pairs_from_buckets(
     )
 
 
-def containment_pairs_from_shingles(
-    sh: DataFrame, threshold: float = 0.8
+def containment_pairs_from_buckets(
+    buckets: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
-    """Asymmetric-containment pairs over a (doc_id, shingle) table:
-    C(A,B) = |A∩B| / min(|A|,|B|) ≥ ``threshold``.
+    """Asymmetric-containment pairs over a (shingle, __ids) inverted index
+    (:func:`shingle_buckets`): C(A,B) = |A∩B| / min(|A|,|B|) ≥
+    ``threshold``.
 
     The small-in-large detector Jaccard structurally misses: a document
     fully embedded in one 3× its size has J ≈ 0.33 but containment 1.0
@@ -436,20 +436,12 @@ def containment_pairs_from_shingles(
     (one grouped pass per shingle — no self-join; pair cost bounded
     by the stop-shingle cap the caller applies), only the closing score
     changes: n_common over the SMALLER set's size, one int÷int division —
-    bit-identical across engines. A contained doc shares ALL its
-    shingles with its container, so any of its sub-cap shingles surfaces
-    the pair — recall degrades only for docs composed entirely of
-    stop-shingles, which the boilerplate queries own."""
-    return containment_pairs_from_buckets(shingle_buckets(sh), threshold)
-
-
-def containment_pairs_from_buckets(
-    buckets: DataFrame, threshold: float = 0.8
-) -> DataFrame:
-    """Asymmetric-containment pairs over a (shingle, __ids) inverted index
-    (:func:`shingle_buckets`) — see :func:`containment_pairs_from_shingles`
-    for the semantics; min(|A|,|B|) rides the same one-join size attach as
-    the Jaccard path (:func:`_attach_pair_sizes`)."""
+    bit-identical across engines; min(|A|,|B|) rides the same one-join
+    size attach as the Jaccard path (:func:`_attach_pair_sizes`). A
+    contained doc shares ALL its shingles with its container, so any of
+    its sub-cap shingles surfaces the pair — recall degrades only for
+    docs composed entirely of stop-shingles, which the boilerplate
+    queries own."""
     return (
         _attach_pair_sizes(buckets)
         .withColumn(

@@ -22,13 +22,15 @@ from pyspark.sql import functions as F
 from ..functions.stock import categorize_volatility, volume_category_expr
 from ..schema import ENRICHED_COLUMNS
 
+#: ``approx_percentile`` accuracy of the approximate quartiles: rank error
+#: ≤ 1/APPROX_ACCURACY.
+APPROX_ACCURACY = 10_000
 
 def enrich(
     df: DataFrame,
     window_partition: tuple[str, ...] = ("symbol",),
     quartile_cols: tuple[str, str, str] | None = None,
     quartiles: str = "exact",
-    approx_accuracy: int = 10_000,
 ) -> DataFrame:
     """ticks-shaped (symbol,date,open,high,low,close,volume) → enriched table.
 
@@ -60,7 +62,7 @@ def enrich(
     - ``"approx"``: per-symbol `approx_percentile` via a grouped
       aggregate + broadcast join-back. approx_percentile is MERGEABLE
       (partial-aggregates map-side), so no task ever buffers a whole
-      symbol for the quartiles; rank error ≤ 1/approx_accuracy.
+      symbol for the quartiles; rank error ≤ 1/APPROX_ACCURACY.
       Bucket-label agreement vs the exact path is asserted within
       tolerance in tests/test_enrich.py; disagreements can only sit in
       the rank-error band around each quartile boundary.
@@ -100,7 +102,7 @@ def enrich(
             F.percentile_approx(
                 "volume",
                 F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)),
-                F.lit(approx_accuracy),
+                F.lit(APPROX_ACCURACY),
             ).alias("__qs")
         )
         window_layer = window_layer.join(F.broadcast(qt), "symbol")

@@ -38,10 +38,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def global_sequence_ids(
-    df: DataFrame, order_cols: list[str], out_col: str = "global_id"
-) -> DataFrame:
-    """Append ``out_col``: contiguous 0-based rank of each row in the
+def global_sequence_ids(df: DataFrame, order_cols: list[str]) -> DataFrame:
+    """Append ``global_id``: contiguous 0-based rank of each row in the
     total order of ``order_cols`` (which must uniquely key the rows)."""
     parted = df.repartitionByRange(*[F.col(c) for c in order_cols])
     local = parted.select(
@@ -81,7 +79,7 @@ def global_sequence_ids(
             *df.columns,
             (F.col("_offset") + F.col("_local_rn") - 1)
             .cast("long")
-            .alias(out_col),
+            .alias("global_id"),
         )
     )
 

@@ -145,25 +145,21 @@ def zorder_layout(
     n_files: int = 8,
     bits: int = 16,
     rank: str = "minmax",
-    max_records_per_file: int | None = None,
 ) -> None:
     """Write ``df`` to parquet clustered along the Z curve of ``cols``.
 
     One range exchange on the interleaved key + in-partition sort; the
     key itself is dropped before the write (pure layout, no schema
-    change). ``max_records_per_file`` caps file size the way a real
-    OPTIMIZE job targets a row-group budget.
+    change).
     """
     keyed = zorder_key(df, cols, bits=bits, rank=rank)
-    writer = (
+    (
         keyed.repartitionByRange(n_files, "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode("overwrite")
+        .parquet(path)
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
 
 
 def linear_layout(
@@ -171,19 +167,16 @@ def linear_layout(
     path: str,
     cols: list[str],
     n_files: int = 8,
-    max_records_per_file: int | None = None,
 ) -> None:
     """Write ``df`` range-partitioned + sorted by ``cols`` — the
     composite-index layout: perfect skipping on ``cols[0]`` prefixes,
     none on trailing columns queried alone."""
-    writer = (
+    (
         df.repartitionByRange(n_files, *cols)
         .sortWithinPartitions(*cols)
         .write.mode("overwrite")
+        .parquet(path)
     )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
 
 
 def rowgroup_stats(path: str, column: str) -> list[tuple]:

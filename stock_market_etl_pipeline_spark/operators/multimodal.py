@@ -127,9 +127,9 @@ def _decode_wav(payload: bytes, feature_dim: int):
     return n_channels, sample_rate // 1000, n, feature
 
 
-def decode_media(media: DataFrame, decode_stub: bool = True,
-                 feature_dim: int = 8) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches).
+def decode_media(media: DataFrame, decode_stub: bool = True) -> DataFrame:
+    """Decode + feature-extract via mapInPandas (Arrow batches); the
+    feature vector has 8 dimensions.
 
     ``decode_stub=False`` really decodes PPM/WAV payloads (numpy only —
     see module docstring); codec formats raise NotImplementedError at the
@@ -137,6 +137,8 @@ def decode_media(media: DataFrame, decode_stub: bool = True,
     in/out, batch iteration, null payloads passed through) is identical
     in both modes.
     """
+
+    feature_dim = 8
 
     def _fake_decode(payload: bytes) -> tuple[int, int, int, list[float]]:
         import hashlib

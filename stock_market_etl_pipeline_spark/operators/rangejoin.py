@@ -24,7 +24,6 @@ def band_self_pairs(
     id_col: str,
     value_col: str,
     width: float,
-    out: tuple[str, str] = ("id_a", "id_b"),
 ) -> DataFrame:
     """All id pairs (id_a < id_b) whose values differ by at most ``width``.
 
@@ -57,8 +56,8 @@ def band_self_pairs(
             ).alias("__pb"),
         )
         .select(
-            F.col("__pa.__id").alias(out[0]),
-            F.col("__pb.__id").alias(out[1]),
+            F.col("__pa.__id").alias("id_a"),
+            F.col("__pb.__id").alias("id_b"),
             F.col("__pa.__v").alias("value_a"),
             F.col("__pb.__v").alias("value_b"),
         )

@@ -14,18 +14,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def calendar_fill(
-    df: DataFrame,
-    key: str = "symbol",
-    date_col: str = "date",
-    fill_cols: tuple[str, ...] = ("close",),
-    keep_cols: tuple[str, ...] = ("volume",),
-) -> DataFrame:
-    """Densify each key's date range to every calendar day; forward-fill
-    fill_cols from the most recent real row; keep_cols pass through as
+def calendar_fill(df: DataFrame) -> DataFrame:
+    """Densify each symbol's date range to every calendar day; forward-fill
+    ``close`` from the most recent real row; ``volume`` passes through as
     null on synthesized rows. Adds ``is_gap`` marking synthesized rows.
 
-    Requires one row per (key, date) — true for the aggregated tick series
+    Requires one row per (symbol, date) — true for the aggregated tick series
     every caller passes (and for any sane time series).
 
     Plan (r12 rewrite, guide §2.4): each real row generates itself plus
@@ -42,36 +36,31 @@ def calendar_fill(
     contributes only itself; a gap day's forward-filled value is by
     construction the generating (= most recent real) row's value.
     """
-    w = Window.partitionBy(key).orderBy(date_col)
+    w = Window.partitionBy("symbol").orderBy("date")
     spanned = df.withColumn(
         "__stop",
-        F.coalesce(F.date_sub(F.lead(date_col).over(w), 1), F.col(date_col)),
+        F.coalesce(F.date_sub(F.lead("date").over(w), 1), F.col("date")),
     )
     gen = spanned.select(
-        key,
-        F.col(date_col).alias("__real"),
-        F.explode(F.sequence(F.col(date_col), F.col("__stop"))).alias(date_col),
-        *fill_cols,
-        *keep_cols,
+        "symbol",
+        F.col("date").alias("__real"),
+        F.explode(F.sequence(F.col("date"), F.col("__stop"))).alias("date"),
+        "close",
+        "volume",
     )
-    is_real = F.col(date_col) == F.col("__real")
+    is_real = F.col("date") == F.col("__real")
     return gen.select(
-        key,
-        date_col,
-        *fill_cols,
-        *[F.when(is_real, F.col(c)).alias(c) for c in keep_cols],
+        "symbol",
+        "date",
+        "close",
+        F.when(is_real, F.col("volume")).alias("volume"),
         (~is_real).alias("is_gap"),
     )
 
 
-def calendar_interpolate(
-    df: DataFrame,
-    key: str = "symbol",
-    date_col: str = "date",
-    value_col: str = "close",
-) -> DataFrame:
-    """Densify each key's date range and LINEARLY interpolate
-    ``value_col`` across gaps — the time-series repair step where
+def calendar_interpolate(df: DataFrame) -> DataFrame:
+    """Densify each symbol's date range and LINEARLY interpolate
+    ``close`` across gaps — the time-series repair step where
     forward-fill's step function biases downstream returns/volatility
     (a 3-day gap becomes two zero-returns and one jump; interpolation
     spreads the move). Trailing gaps (no later real row) fall back to
@@ -95,39 +84,39 @@ def calendar_interpolate(
     window. A gap day always has a next anchor by construction — its
     generating row has a successor — so the old trailing-gap
     forward-fill branch is vacuous and dropped.)"""
-    w = Window.partitionBy(key).orderBy(date_col)
-    cents = F.round(F.col(value_col) * 100, 0).cast("long")
+    w = Window.partitionBy("symbol").orderBy("date")
+    cents = F.round(F.col("close") * 100, 0).cast("long")
     spanned = (
-        df.select(key, date_col, value_col)
+        df.select("symbol", "date", "close")
         .withColumns(
             {
                 "__pc": cents,
                 "__nc": F.lead(cents).over(w),
-                "__nd": F.lead(date_col).over(w),
+                "__nd": F.lead("date").over(w),
             }
         )
         .withColumn(
             "__stop",
-            F.coalesce(F.date_sub("__nd", 1), F.col(date_col)),
+            F.coalesce(F.date_sub("__nd", 1), F.col("date")),
         )
     )
     gen = spanned.select(
-        key,
-        F.col(date_col).alias("__pd"),
-        F.explode(F.sequence(F.col(date_col), F.col("__stop"))).alias(date_col),
-        value_col,
+        "symbol",
+        F.col("date").alias("__pd"),
+        F.explode(F.sequence(F.col("date"), F.col("__stop"))).alias("date"),
+        "close",
         "__pc",
         "__nc",
         "__nd",
     )
-    is_real = F.col(date_col) == F.col("__pd")
-    k = F.datediff(F.col(date_col), F.col("__pd"))
+    is_real = F.col("date") == F.col("__pd")
+    k = F.datediff(F.col("date"), F.col("__pd"))
     n = F.datediff(F.col("__nd"), F.col("__pd"))
     interp = (
         F.col("__pc") * n + (F.col("__nc") - F.col("__pc")) * k
     ) / (F.lit(100.0) * n)
     return gen.select(
-        key, date_col,
-        F.when(is_real, F.col(value_col)).otherwise(interp).alias(value_col),
+        "symbol", "date",
+        F.when(is_real, F.col("close")).otherwise(interp).alias("close"),
         (~is_real).alias("is_gap"),
     )

@@ -41,14 +41,13 @@ def priority_sample(
     df: DataFrame,
     weight_col: str,
     k: int,
-    id_col: str = "doc_id",
     salt: str = "prio",
     keep_cols: tuple[str, ...] = (),
     materialize: bool = True,
 ) -> DataFrame:
     """Deterministic k-item priority sample with the max(w, τ) estimator.
 
-    Returns (id, *keep_cols, weight, priority, est_weight) for the k
+    Returns (doc_id, *keep_cols, weight, priority, est_weight) for the k
     highest-priority rows; Σ est_weight is an unbiased estimate of the
     population's Σ weight.  Assumes the population has > k rows (true at
     every verify scale; with ≤ k rows the τ row would not exist and the
@@ -56,11 +55,10 @@ def priority_sample(
 
     Weights must be positive integers < 2^53 (exact as doubles).
     """
-    u = (md5_hash60(F.concat_ws("|", F.lit(salt), F.col(id_col))) + F.lit(1)).cast(
-        "double"
-    ) / F.lit(_TWO_60)
+    u = (md5_hash60(F.concat_ws("|", F.lit(salt), F.col("doc_id")))
+         + F.lit(1)).cast("double") / F.lit(_TWO_60)
     scored = df.select(
-        id_col,
+        "doc_id",
         *keep_cols,
         F.col(weight_col).cast("long").alias("weight"),
         (F.col(weight_col).cast("double") / u).alias("priority"),
@@ -70,13 +68,15 @@ def priority_sample(
     # materialize=False keeps the lineage visible for the plan-shape test
     # (the TakeOrdered subtree hides behind the checkpoint otherwise) at
     # the cost of re-running the top-k for each downstream branch.
-    top = scored.orderBy(F.col("priority").desc(), F.col(id_col)).limit(k + 1)
+    top = scored.orderBy(
+        F.col("priority").desc(), F.col("doc_id")
+    ).limit(k + 1)
     if materialize:
         top = top.localCheckpoint(eager=True)
     tau = top.agg(F.min("priority").alias("tau"))
-    sample = top.orderBy(F.col("priority").desc(), F.col(id_col)).limit(k)
+    sample = top.orderBy(F.col("priority").desc(), F.col("doc_id")).limit(k)
     return sample.crossJoin(F.broadcast(tau)).select(
-        id_col,
+        "doc_id",
         *keep_cols,
         "weight",
         "priority",

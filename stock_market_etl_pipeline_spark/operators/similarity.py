@@ -167,7 +167,6 @@ def plant_near_duplicates(
     embeddings: DataFrame,
     n: int = 100,
     id_offset: int = 1_000_000,
-    scale: float = 0.05,
     dim: int | None = None,
 ) -> DataFrame:
     """Corpus ∪ perturbed twins of the first ``n`` vectors.
@@ -180,7 +179,7 @@ def plant_near_duplicates(
     """
     if dim is None:
         dim = len(embeddings.select("embedding").first()["embedding"])
-    pert = F.array(*[F.lit(c) for c in perturbation_constants(dim, scale)])
+    pert = F.array(*[F.lit(c) for c in perturbation_constants(dim)])
     base = embeddings.select(
         "vec_id", _to_double(F.col("embedding")).alias("embedding")
     )
@@ -194,12 +193,11 @@ def plant_near_duplicates(
 
 
 def random_projection_buckets(
-    embeddings: DataFrame, n_planes: int = 8, seed: int = 42,
-    dim: int | None = None,
+    embeddings: DataFrame, n_planes: int = 8, dim: int | None = None,
 ) -> DataFrame:
     """Sign-random-projection LSH bucket per vector (the ANN scale path).
 
-    Hyperplanes are pseudo-random ±1 vectors derived from md5(seed,plane,dim)
+    Hyperplanes are pseudo-random ±1 vectors derived from md5(42,plane,dim)
     parity — fully deterministic and engine-portable. Bucket = n_planes sign
     bits packed into an int. Vectors in the same bucket are ANN candidates;
     search cost drops from O(n) per query to O(bucket).
@@ -220,7 +218,7 @@ def random_projection_buckets(
     # with this shape, identical buckets). The fold order per plane is
     # unchanged (index order, zip_with → aggregate), so buckets are
     # bit-identical.
-    P = _planes_literal(seed, 0, n_planes, dim)
+    P = _planes_literal(42, 0, n_planes, dim)
     bits = F.expr(
         "array(" + ",".join(str(1 << p) for p in range(n_planes)) + ")"
     )
@@ -241,13 +239,11 @@ def random_projection_buckets(
     return emb.select("vec_id", bucket.cast("int").alias("bucket"))
 
 
-def recommended_planes_per_band(
-    n_vectors: int, target_bucket: int = 8, lo: int = 4, hi: int = 16
-) -> int:
+def recommended_planes_per_band(n_vectors: int) -> int:
     """Executable form of the geometry advice in
     :func:`embedding_near_pairs_lsh`'s docstring: the smallest
-    planes-per-band whose 2^planes buckets hold ≤ ``target_bucket``
-    vectors on average, clamped to [lo, hi]. Integer arithmetic only —
+    planes-per-band whose 2^planes buckets hold ≤ 8 vectors on average,
+    clamped to [4, 16]. Integer arithmetic only —
     no log2 — so callers that must mirror the choice in an oracle can
     reproduce it exactly (cf. ADVICE r3 on cross-engine log2 ulps).
 
@@ -255,8 +251,8 @@ def recommended_planes_per_band(
     which candidates are found (recall), so fix the count per corpus
     generation, don't auto-resize between incremental batches.
     """
-    p = lo
-    while p < hi and (n_vectors >> p) > target_bucket:
+    p = 4
+    while p < 16 and (n_vectors >> p) > 8:
         p += 1
     return p
 
@@ -520,7 +516,6 @@ def ivf_topk(
     k: int = 10,
     n_clusters: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF ANN: exact rerank restricted to each query's n_probe nearest
     clusters. Search cost ~ (n_probe / n_clusters) of brute force; recall
@@ -530,7 +525,7 @@ def ivf_topk(
     # the transform output already carries (vec_id, v, cluster) — no
     # corpus re-scan + assignment join needed (§2.4; v is the exact
     # array_to_vector round-trip of _to_double(embedding))
-    emb, model = _ivf_assign_full(embeddings, n_clusters, seed)
+    emb, model = _ivf_assign_full(embeddings, n_clusters)
     centers = np.array([np.asarray(c) for c in model.clusterCenters()])
     queries = {
         r["vec_id"]: np.array(r["v"])
@@ -663,7 +658,6 @@ def hadamard_projection(
     embeddings: DataFrame,
     out_dims: int = 16,
     dims: int = 64,
-    quant: float = 1_000_000.0,
 ) -> DataFrame:
     """Deterministic dimensionality reduction: the subsampled randomized
     Hadamard transform (SRHT) — flip each input coordinate by a fixed
@@ -686,7 +680,7 @@ def hadamard_projection(
 
     Exactness: elements quantize to 1e-6 ints; each output coordinate is
     an int64 signed sum closed by ONE double division by
-    ``quant · sqrt(out_dims)`` (norm-preserving in expectation:
+    ``1e6 · sqrt(out_dims)`` (norm-preserving in expectation:
     E‖Pv‖² = ‖v‖² since each ±1 row's squared dot carries ‖v‖²·dims/dims;
     exactly 4e6 for out_dims=16) — bit-identical cross-engine.
 
@@ -701,13 +695,13 @@ def hadamard_projection(
             f"dims must be a power of two (Hadamard order), got {dims}"
         )
     spark = embeddings.sparkSession
-    scale = quant * float(out_dims ** 0.5)
+    scale = 1_000_000.0 * float(out_dims ** 0.5)
     e = _spread(embeddings).select(
         "vec_id", F.posexplode(_to_double(F.col("embedding")))
     ).select(
         "vec_id",
         F.col("pos").alias("i"),
-        F.round(F.col("col") * quant, 0).cast("long").alias("qv"),
+        F.round(F.col("col") * 1_000_000.0, 0).cast("long").alias("qv"),
     )
     i_col = F.col("id") % dims
     j_col = (F.col("id") / dims).cast("long")
@@ -743,7 +737,6 @@ def semantic_dedup(
     n_clusters: int = 16,
     threshold: float = 0.95,
     seed: int = 42,
-    max_cluster: int = 4096,
     survivor: str = "centroid",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means the
@@ -761,8 +754,8 @@ def semantic_dedup(
     100 TB story: the only all-pairs work is WITHIN a k-means cluster —
     n_clusters grows with the corpus (SemDeDup's own recipe: k ≈ √N or
     N/10k) so cluster size stays bounded; the pair expansion reuses
-    dedup.bucket_pairs' single grouped pass with ``max_cluster`` as the
-    quadratic-cost cap (a capped cluster means "raise n_clusters", the
+    dedup.bucket_pairs' single grouped pass with a 4096-member cluster as
+    the quadratic-cost cap (a capped cluster means "raise n_clusters", the
     same cap-to-widen contract as the LSH near-pair paths). Centroids are
     a broadcast k-row table; component resolution is the bounded
     min-label propagation from operators/graph.py (dup graphs are
@@ -809,7 +802,7 @@ def semantic_dedup(
     )
     cand = bucket_pairs(
         emb.select("cluster", "vec_id"), ["cluster"], id_col="vec_id",
-        out=("id_a", "id_b"), max_bucket=max_cluster,
+        out=("id_a", "id_b"), max_bucket=4096,
         # each vec_id lives in exactly ONE cluster, so intra-bucket i<j
         # pairs cannot repeat across buckets — the distinct() would be a
         # pure extra Exchange (§2.4)
@@ -891,14 +884,11 @@ def pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     k_codes: int = 16,
-    sample: int = 4096,
-    seed: int = 7,
-    iters: int = 20,
 ):
     """Train per-subspace PQ codebooks: split the D-dim space into ``m``
     contiguous subspaces and run Lloyd's k-means (k = ``k_codes``,
-    ``iters`` fixed iterations, seeded init) on each, over a BOUNDED
-    deterministic sample (hash-ordered, ≤ ``sample`` vectors collected to
+    20 fixed iterations, init seeded with 7) on each, over a BOUNDED
+    deterministic sample (hash-ordered, ≤ 4096 vectors collected to
     the driver — codebook training is the one step that does not need the
     corpus, exactly like ivf_topk's centroid collect). Returns a numpy
     array of shape (m, k_codes, D // m).
@@ -914,7 +904,7 @@ def pq_codebooks(
         _spread(embeddings)
         .select("vec_id", _to_double(F.col("embedding")).alias("v"))
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(sample)
+        .limit(4096)
         .collect()
     )
     x = np.array([r["v"] for r in rows])
@@ -929,12 +919,12 @@ def pq_codebooks(
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub = d // m
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(7)
     books = np.zeros((m, k_codes, sub))
     for s in range(m):
         xs = x[:, s * sub : (s + 1) * sub]
         centers = xs[rng.choice(n, size=k_codes, replace=False)].copy()
-        for _ in range(iters):
+        for _ in range(20):
             d2 = ((xs[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(k_codes):
@@ -1005,31 +995,28 @@ def pq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    m: int = 8,
-    k_codes: int = 16,
-    rerank: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
     """PQ ANN with asymmetric distance computation (ADC) + exact rerank:
-    each query precomputes an m×k_codes table of subspace inner products
+    over :func:`pq_codebooks`' default m=8 × k_codes=16 books, each query
+    precomputes an m×k_codes table of subspace inner products
     against the codebooks (driver-side, m·k_codes·|queries| floats —
     KB-scale); the corpus side is scanned as CODES ONLY (the 64×-smaller
     representation), approximate score = Σ_sub table[sub, code] via one
-    keyed join + groupBy; the top rerank·k candidates per query are then
+    keyed join + groupBy; the top 4·k candidates per query are then
     re-scored with EXACT cosine against the original vectors — so emitted
     scores are identical in kind to the brute-force baseline and only
     RECALL (which candidates made the cut) is approximate. The classic
     IVF-PQ pairing is this operator behind ivf_topk's probe filter."""
     import numpy as np
 
-    books = pq_codebooks(embeddings, m=m, k_codes=k_codes, seed=seed)
+    books = pq_codebooks(embeddings)
+    m, k_codes, sub = books.shape
     codes = pq_encode(embeddings, books)
     spark = embeddings.sparkSession
     emb = _spread(embeddings).select(
         "vec_id", _to_double(F.col("embedding")).alias("v")
     )
     queries = _collect_query_vectors(emb, query_ids)
-    sub = books.shape[2]
     adc_rows = [
         (int(qid), s, c, float(np.dot(qv[s * sub : (s + 1) * sub], books[s, c])))
         for qid, qv in queries.items()
@@ -1049,7 +1036,7 @@ def pq_topk(
         F.col("approx_ip").desc(), F.col("vec_id")
     )
     cand = approx.withColumn("crank", F.row_number().over(wa)).filter(
-        F.col("crank") <= rerank * k
+        F.col("crank") <= 4 * k
     )
     qdf = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries.items()],
@@ -1076,19 +1063,13 @@ def ivf_pq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    n_clusters: int = 8,
-    n_probe: int = 4,
-    m: int = 8,
-    k_codes: int = 16,
-    rerank: int = 4,
-    seed: int = 7,
 ) -> DataFrame:
     """IVF-PQ — the production ANN shape (FAISS's IVFPQ): the IVF coarse
-    quantizer restricts each query to its n_probe nearest clusters, and
+    quantizer (8 clusters) restricts each query to its 4 nearest, and
     WITHIN the probed slice the candidate sweep runs on 4-byte PQ codes
     (ADC) instead of float vectors, with an exact-cosine rerank of the
     survivors. Composes the two certified operators unchanged: search
-    cost ≈ (n_probe/n_clusters) · (PQ code scan) — both dials
+    cost ≈ (4/8) · (PQ code scan) — both dials
     independent, both failure modes separately certified (IVF recall
     curve in NOTES; PQ planted-twin test)."""
     import numpy as np
@@ -1096,9 +1077,10 @@ def ivf_pq_topk(
     # one corpus pass supplies BOTH the cluster assignment and the exact
     # rerank vectors (§2.4 — a third raw scan + spread carried nothing
     # the transform output didn't already have)
-    full, model = _ivf_assign_full(embeddings, n_clusters, seed=42)
+    full, model = _ivf_assign_full(embeddings, 8)
     centers = np.array([np.asarray(c) for c in model.clusterCenters()])
-    books = pq_codebooks(embeddings, m=m, k_codes=k_codes, seed=seed)
+    books = pq_codebooks(embeddings)
+    m, k_codes, sub = books.shape
     codes = pq_encode(embeddings, books).join(
         full.select("vec_id", "cluster"), "vec_id"
     )
@@ -1108,10 +1090,9 @@ def ivf_pq_topk(
     probe_rows = []
     for qid, qv in queries.items():
         d = ((centers - qv) ** 2).sum(axis=1)
-        for c in np.argsort(d)[:n_probe]:
+        for c in np.argsort(d)[:4]:
             probe_rows.append((int(qid), int(c)))
     probes = spark.createDataFrame(probe_rows, "query_id long, cluster int")
-    sub = books.shape[2]
     adc_rows = [
         (int(qid), s, c,
          float(np.dot(qv[s * sub:(s + 1) * sub], books[s, c])))
@@ -1133,7 +1114,7 @@ def ivf_pq_topk(
         F.col("approx_ip").desc(), F.col("vec_id")
     )
     cand = approx.withColumn("crank", F.row_number().over(wa)).filter(
-        F.col("crank") <= rerank * k
+        F.col("crank") <= 4 * k
     )
     qdf = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries.items()],

@@ -45,7 +45,6 @@ def hll_daily_rollup(
     group_cols: list[str],
     day_col,
     value_col: str,
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """Level 1: one HLL sketch of ``value_col``'s distinct values per
     (group, day). This is the table you PERSIST: ~4 KB per (group, day)
@@ -53,7 +52,7 @@ def hll_daily_rollup(
     means each map task contributes a partial sketch, so the shuffle
     payload is sketches, not raw values."""
     return df.groupBy(*group_cols, day_col.alias("day")).agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("hll")
+        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("hll")
     )
 
 
@@ -74,13 +73,12 @@ def kll_daily_rollup(
     group_cols: list[str],
     day_col,
     value_col: str,
-    k: int = 200,
 ) -> DataFrame:
     """Per-(group, day) KLL quantile sketch of a double column. k=200 ⇒
     ~1.65% one-sided rank error at 99% confidence (KLL paper, Karnin et
     al., FOCS 2016), a few KB per sketch."""
     return df.groupBy(*group_cols, day_col.alias("day")).agg(
-        F.kll_sketch_agg_double(value_col, F.lit(k)).alias("kll")
+        F.kll_sketch_agg_double(value_col, F.lit(200)).alias("kll")
     )
 
 
@@ -121,7 +119,6 @@ def theta_daily_rollup(
     group_cols: list[str],
     day_col,
     value_col: str,
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """Level 1 for SET-ALGEBRA questions: one theta sketch of
     ``value_col``'s distinct values per (group, day). Same persisted-
@@ -132,24 +129,22 @@ def theta_daily_rollup(
     lgk=12 ⇒ 4096 nominal entries/sketch (exact below that, ~1.6% RSE
     above), a few KB per row."""
     return df.groupBy(*group_cols, day_col.alias("day")).agg(
-        F.theta_sketch_agg(value_col, F.lit(lgk)).alias("theta")
+        F.theta_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("theta")
     )
 
 
 def theta_merged_per_group(
-    rollup: DataFrame, group_cols: list[str], lgk: int = DEFAULT_LGK
+    rollup: DataFrame, group_cols: list[str]
 ) -> DataFrame:
     """Level 2: one merged sketch per group from the persisted per-day
     sketches (`theta_union_agg` — associative/commutative/idempotent like
     HLL union, so incremental maintenance is pure merge)."""
     return rollup.groupBy(*group_cols).agg(
-        F.theta_union_agg("theta", F.lit(lgk)).alias("theta")
+        F.theta_union_agg("theta", F.lit(DEFAULT_LGK)).alias("theta")
     )
 
 
-def theta_set_algebra(
-    merged: DataFrame, group_col: str, a, b, lgk: int = DEFAULT_LGK
-) -> DataFrame:
+def theta_set_algebra(merged: DataFrame, group_col: str, a, b) -> DataFrame:
     """Full set algebra between two groups' populations from their MERGED
     theta sketches alone: |A|, |B|, |A∪B|, |A∩B|, |A∖B|, |B∖A| — never
     touching the fact table. This is what theta buys over HLL: the
@@ -174,7 +169,7 @@ def theta_set_algebra(
         F.theta_sketch_estimate("ta").alias("a_est"),
         F.theta_sketch_estimate("tb").alias("b_est"),
         F.theta_sketch_estimate(
-            F.theta_union("ta", "tb", F.lit(lgk))
+            F.theta_union("ta", "tb", F.lit(DEFAULT_LGK))
         ).alias("union_est"),
         F.theta_sketch_estimate(
             F.theta_intersection("ta", "tb")
@@ -188,9 +183,8 @@ def theta_set_algebra(
     )
 
 
-def hll_set_overlap(
-    left: DataFrame, right: DataFrame, value_col: str, lgk: int = DEFAULT_LGK
-) -> DataFrame:
+def hll_set_overlap(left: DataFrame, right: DataFrame,
+                    value_col: str) -> DataFrame:
     """Approximate set overlap between two populations from their sketches
     alone: |A∩B| ≈ est(A) + est(B) − est(A∪B) by inclusion-exclusion,
     where est(A∪B) merges the two already-built sketches. At 100 TB this
@@ -205,10 +199,10 @@ def hll_set_overlap(
     estimates then come from ONE 1×1 crossJoin of the materialized
     sketch rows, via the scalar ``hll_union``."""
     a = left.agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("sa")
+        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("sa")
     ).localCheckpoint()
     b = right.agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("sb")
+        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("sb")
     ).localCheckpoint()
     return (
         a.crossJoin(b)
@@ -228,11 +222,8 @@ def hll_set_overlap(
     )
 
 
-def hll_sliding_distinct(
-    rollup: DataFrame,
-    window_days: int = 30,
-    day_col: str = "day",
-) -> DataFrame:
+def hll_sliding_distinct(rollup: DataFrame,
+                         window_days: int = 30) -> DataFrame:
     """Sliding-window distinct from the PERSISTED daily sketch table: for
     every day, union the trailing ``window_days`` daily sketches and
     estimate — the mergeable answer to "30-day active users" that never
@@ -245,13 +236,13 @@ def hll_sliding_distinct(
     next ``window_days`` output days; output is cut at the last observed
     day (1-row broadcast max).
     """
-    bounds = rollup.agg(F.max(day_col).alias("__max_day"))
+    bounds = rollup.agg(F.max("day").alias("__max_day"))
     covered = (
         rollup.select(
             F.explode(
                 F.sequence(
-                    F.col(day_col),
-                    F.date_add(F.col(day_col), window_days - 1),
+                    F.col("day"),
+                    F.date_add(F.col("day"), window_days - 1),
                 )
             ).alias("cover_day"),
             "hll",
@@ -259,7 +250,7 @@ def hll_sliding_distinct(
         .crossJoin(F.broadcast(bounds))
         .filter(F.col("cover_day") <= F.col("__max_day"))
     )
-    return covered.groupBy(F.col("cover_day").alias(day_col)).agg(
+    return covered.groupBy(F.col("cover_day").alias("day")).agg(
         F.hll_sketch_estimate(F.hll_union_agg("hll", F.lit(False))).alias(
             "approx_distinct"
         )
@@ -278,12 +269,10 @@ def count_min_rollup(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
 ) -> DataFrame:
     """Level 1 of the frequency-sketch family: a count-min sketch per
     group, stored as PLAIN ROWS ``(group..., seed, bucket, cnt)`` rather
-    than an opaque binary — ≤ depth·width rows per group regardless of
+    than an opaque binary — ≤ CM_DEPTH·CM_WIDTH rows per group regardless of
     how many values the group saw.
 
     Why rows, not a binary blob: Spark exposes ``count_min_sketch`` as
@@ -295,18 +284,18 @@ def count_min_rollup(
     streaming maintainer pattern is the HLL merge-based one
     (streaming/sketch_rollup.py), not KLL's recompute.
 
-    Row i of the depth axis uses ``xxhash64(value, seed=i) mod width``;
+    Row i of the depth axis uses ``xxhash64(value, seed=i) mod CM_WIDTH``;
     per-row independence across seeds is what the min-estimate needs.
     One shuffle on (group, seed, bucket); partial aggregation compresses
     each map task's contribution to sketch size before the exchange.
     """
-    seeds = F.array(*[F.lit(i) for i in range(depth)])
+    seeds = F.array(*[F.lit(i) for i in range(CM_DEPTH)])
     e = df.select(
         *group_cols,
         F.explode(seeds).alias("seed"),
         F.col(value_col).alias("__v"),
     )
-    bucket = F.pmod(F.xxhash64("__v", "seed"), F.lit(width)).cast("int")
+    bucket = F.pmod(F.xxhash64("__v", "seed"), F.lit(CM_WIDTH)).cast("int")
     return e.groupBy(
         *group_cols, "seed", bucket.alias("bucket")
     ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
@@ -327,21 +316,21 @@ def count_min_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = CM_DEPTH,
-    width: int = CM_WIDTH,
 ) -> DataFrame:
     """Point-frequency estimates for ``keys`` from a (merged, ungrouped)
-    sketch: hash each key with every seed, look up the depth counters,
+    sketch: hash each key with every seed, look up the CM_DEPTH counters,
     take the MIN (missing bucket ⇒ 0). Guarantees (Cormode–Muthukrishnan):
-    never an underestimate; overestimate ≤ (e/width)·N with probability
-    ≥ 1 − e^(−depth) per key. The sketch side is ≤ depth·width rows —
-    broadcast to the keys, so estimation never shuffles the key set."""
-    seeds = F.array(*[F.lit(i) for i in range(depth)])
+    never an underestimate; overestimate ≤ (e/CM_WIDTH)·N with probability
+    ≥ 1 − e^(−CM_DEPTH) per key. The sketch side is ≤ CM_DEPTH·CM_WIDTH
+    rows — broadcast to the keys, so estimation never shuffles the key
+    set."""
+    seeds = F.array(*[F.lit(i) for i in range(CM_DEPTH)])
     probes = keys.select(
         F.col(key_col),
         F.explode(seeds).alias("seed"),
     ).withColumn(
-        "bucket", F.pmod(F.xxhash64(key_col, "seed"), F.lit(width)).cast("int")
+        "bucket",
+        F.pmod(F.xxhash64(key_col, "seed"), F.lit(CM_WIDTH)).cast("int"),
     )
     joined = probes.join(F.broadcast(sketch), ["seed", "bucket"], "left")
     return joined.groupBy(key_col).agg(

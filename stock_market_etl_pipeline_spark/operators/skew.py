@@ -16,12 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+N_SALTS = 8
 
-def with_salt(df: DataFrame, salt_cols: list[str], n_salts: int,
-              out: str = "__salt") -> DataFrame:
-    """Deterministic salt in [0, n_salts) from a hash of salt_cols."""
+
+def with_salt(df: DataFrame, salt_cols: list[str], n_salts: int) -> DataFrame:
+    """Deterministic ``__salt`` in [0, n_salts) from a hash of salt_cols."""
     return df.withColumn(
-        out, F.pmod(F.hash(*[F.col(c) for c in salt_cols]), F.lit(n_salts))
+        "__salt",
+        F.pmod(F.hash(*[F.col(c) for c in salt_cols]), F.lit(n_salts)),
     )
 
 
@@ -29,19 +31,19 @@ def salted_join(
     skewed: DataFrame,
     small: DataFrame,
     key: str,
-    n_salts: int = 8,
-    salt_cols: list[str] | None = None,
+    n_salts: int = N_SALTS,
     how: str = "inner",
 ) -> DataFrame:
     """Join a skewed fact against a replicable side without one hot-key task.
 
-    The skewed side gets a derived salt; the small side is exploded into
-    n_salts copies; the join key becomes (key, salt) so a hot key's rows
+    The skewed side gets a salt derived from its first two non-key
+    columns (the key itself when it has none); the small side is exploded
+    into n_salts copies; the join key becomes (key, salt) so a hot key's rows
     spread across n_salts tasks. Replication cost: |small| × n_salts —
     only use when `small` is broadcast-marginal (too big to broadcast
     whole, small enough to replicate).
     """
-    salt_src = salt_cols or [c for c in skewed.columns if c != key][:2] or [key]
+    salt_src = [c for c in skewed.columns if c != key][:2] or [key]
     left = with_salt(skewed, salt_src, n_salts)
     right = small.withColumn(
         "__salt",
@@ -51,14 +53,12 @@ def salted_join(
     return out.drop("__salt")
 
 
-def salted_collect_list(
-    df: DataFrame, key: str, value: str, n_salts: int = 8
-) -> DataFrame:
+def salted_collect_list(df: DataFrame, key: str, value: str) -> DataFrame:
     """Two-phase collect_list: per-(key, salt) partial lists, then a final
-    flatten — a hot key builds its buffer across n_salts tasks instead of
+    flatten — a hot key builds its buffer across N_SALTS tasks instead of
     one. Output order is normalized by sorting (collect_list order is
     partition-dependent either way)."""
-    salted = with_salt(df, [value], n_salts)
+    salted = with_salt(df, [value], N_SALTS)
     partial = salted.groupBy(key, "__salt").agg(
         F.collect_list(value).alias("__part")
     )

@@ -16,7 +16,7 @@ next chunk, making every window frame locally complete:
    ``chunk_size = max(ceil(count / n_chunks), 2·halo)`` — guaranteed
    ≥ halo rows per non-last chunk; cold symbols fall into one chunk and
    take the plain path shape automatically.
-3. **Halo.** The last ``lookback + 1`` rows of every non-last chunk are
+3. **Halo.** The last ``LOOKBACK + 1`` rows of every non-last chunk are
    duplicated into the following chunk. The +1 covers the two-level
    dependency lag → rolling-stddev: the first halo row's daily_change is
    wrong (no predecessor), but only frames of OTHER halo rows can reach
@@ -31,7 +31,7 @@ next chunk, making every window frame locally complete:
    tolerance).
 
 Cost: one extra shuffle (the rn join) + halo duplication
-(n_chunks · (lookback+1) rows per hot symbol — negligible). Win: the max
+(n_chunks · (LOOKBACK+1) rows per hot symbol — negligible). Win: the max
 task for the window stage drops from |hot symbol| to ~|hot symbol| /
 n_chunks. Use when a key exceeds what one executor core should hold;
 the plain ``enrich`` stays the default (one exchange, zero joins).
@@ -43,54 +43,52 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import ENRICHED_COLUMNS
-from .enrich import enrich
+from .enrich import APPROX_ACCURACY, enrich
+
+#: The deepest window frame the enrich spine uses: 19 preceding rows for
+#: ma_20 / the rolling stddev.
+LOOKBACK = 19
 
 
-def with_global_row_numbers(
-    df: DataFrame, key: str = "symbol", order: str = "date",
-    out: str = "__rn", count_out: str = "__cnt",
-) -> DataFrame:
-    """0-based row number per key in `order` order, plus the key's total
-    row count — WITHOUT sorting any whole key partition on one task.
+def with_global_row_numbers(df: DataFrame) -> DataFrame:
+    """0-based row number ``__rn`` per symbol in date order, plus the
+    symbol's total row count ``__cnt`` — WITHOUT sorting any whole symbol
+    partition on one task.
 
-    Requires `order` values unique per key (ticks are one row per
-    (symbol, date)). Largest single sort is one (key, month) slice.
+    Requires dates unique per symbol (ticks are one row per
+    (symbol, date)). Largest single sort is one (symbol, month) slice.
     """
-    mcol = F.trunc(F.col(order), "month")
-    counts = df.groupBy(F.col(key), mcol.alias("__m")).agg(
+    mcol = F.trunc(F.col("date"), "month")
+    counts = df.groupBy(F.col("symbol"), mcol.alias("__m")).agg(
         F.count(F.lit(1)).alias("__c")
     )
-    wo = Window.partitionBy(key).orderBy("__m")
+    wo = Window.partitionBy("symbol").orderBy("__m")
     offsets = counts.select(
-        key,
+        "symbol",
         "__m",
         (F.sum("__c").over(wo) - F.col("__c")).alias("__off"),
         F.sum("__c").over(
-            Window.partitionBy(key).rowsBetween(
+            Window.partitionBy("symbol").rowsBetween(
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
-        ).alias(count_out),
+        ).alias("__cnt"),
     )
-    wl = Window.partitionBy(key, "__m").orderBy(order)
+    wl = Window.partitionBy("symbol", "__m").orderBy("date")
     return (
         df.withColumn("__m", mcol)
-        .join(offsets, [key, "__m"])
-        .withColumn(out, F.col("__off") + F.row_number().over(wl) - 1)
+        .join(offsets, ["symbol", "__m"])
+        .withColumn("__rn", F.col("__off") + F.row_number().over(wl) - 1)
         .drop("__m", "__off")
     )
 
 
 def enrich_skew_safe(
-    df: DataFrame, n_chunks: int = 8, lookback: int = 19,
-    quartiles: str = "exact", approx_accuracy: int = 10_000,
+    df: DataFrame, n_chunks: int = 8, quartiles: str = "exact",
 ) -> DataFrame:
     """Drop-in replacement for ``enrich(df)`` that bounds the largest
     window task at ~1/n_chunks of the hottest symbol. Output is
     row-for-row EXACTLY equal to ``enrich(df)`` (same values, same
     types); only the physical partitioning differs.
-
-    ``lookback`` is the deepest window frame the enrich spine uses
-    (19 rows for ma_20 / rolling stddev).
 
     ``quartiles="approx"`` swaps the grouped exact percentile (which
     still buffers each symbol's full volume column in the aggregation
@@ -99,7 +97,7 @@ def enrich_skew_safe(
     aggregation path buffers a whole hot key (see enrich()'s docstring
     for the tolerance contract).
     """
-    halo = lookback + 1
+    halo = LOOKBACK + 1
     rn_df = with_global_row_numbers(df)
     chunk_size = F.greatest(
         F.ceil(F.col("__cnt") / F.lit(n_chunks)), F.lit(2 * halo)
@@ -122,7 +120,7 @@ def enrich_skew_safe(
             F.percentile_approx(
                 "volume",
                 F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)),
-                F.lit(approx_accuracy),
+                F.lit(APPROX_ACCURACY),
             ).alias("__qs")
         )
         qt = qt.select(

@@ -403,12 +403,12 @@ class TxTable:
         spark: SparkSession,
         column: str,
         values: list,
-        snapshot: int | None = None,
     ) -> DataFrame:
-        """Point-lookup read: ``column IN values`` with bloom + stats
-        file skipping before Spark sees a path, residual IN-filter in
-        the scan — results are exactly ``read().filter(isin)``."""
-        snap = self.latest_snapshot() if snapshot is None else snapshot
+        """Point-lookup read of the latest snapshot: ``column IN values``
+        with bloom + stats file skipping before Spark sees a path,
+        residual IN-filter in the scan — results are exactly
+        ``read().filter(isin)``."""
+        snap = self.latest_snapshot()
         if snap is None:
             raise SnapshotUnavailable("table has no commits")
         m = self._manifest(snap)
@@ -1029,19 +1029,18 @@ class TxTable:
         spark: SparkSession,
         wap_id: str,
         txn_id: str | None = None,
-        enforce_constraints: bool = True,
     ) -> int:
         """Atomically append the staged rows as the next snapshot. The
         staged files are adopted as-is (no rewrite); CHECK constraints
-        run against the staged data unless explicitly waived; the commit
-        rides the append rebase path, so interleaved appends since
-        stage_wap are fine. The pending marker is removed AFTER the
-        commit — a crash between the two leaves a published snapshot
-        plus a stale marker whose re-publish is refused by the txn_id
-        no-op (pass one) or lands duplicate rows (pass none: callers
-        that may replay must supply txn_id, same contract as append)."""
+        run against the staged data; the commit rides the append rebase
+        path, so interleaved appends since stage_wap are fine. The
+        pending marker is removed AFTER the commit — a crash between the
+        two leaves a published snapshot plus a stale marker whose
+        re-publish is refused by the txn_id no-op (pass one) or lands
+        duplicate rows (pass none: callers that may replay must supply
+        txn_id, same contract as append)."""
         p = self._wap_pending(wap_id)
-        if enforce_constraints and self.constraints():
+        if self.constraints():
             self._check_constraints(self.read_wap(spark, wap_id))
         snap = self._commit_with_rebase(
             "append", p["files"], p["n_rows"], p["schema"], txn_id,
@@ -1191,14 +1190,13 @@ class TxTable:
         self,
         spark: SparkSession,
         preds: dict,
-        snapshot: int | None = None,
     ) -> DataFrame:
-        """General conjunctive-predicate read: prune files with
-        :meth:`prune_bands` (min/max for bands, min/max + bloom for
-        equality/IN leaves), then apply every leaf as a residual filter
-        inside the scan — results are exactly ``read().filter(...)``
-        whatever the stats say."""
-        snap = self.latest_snapshot() if snapshot is None else snapshot
+        """General conjunctive-predicate read of the latest snapshot: prune
+        files with :meth:`prune_bands` (min/max for bands, min/max + bloom
+        for equality/IN leaves), then apply every leaf as a residual
+        filter inside the scan — results are exactly
+        ``read().filter(...)`` whatever the stats say."""
+        snap = self.latest_snapshot()
         if snap is None:
             raise SnapshotUnavailable("table has no commits")
         m = self._manifest(snap)
@@ -1230,18 +1228,18 @@ class TxTable:
         column: str,
         lo=None,
         hi=None,
-        snapshot: int | None = None,
     ) -> DataFrame:
-        """Read ``lo <= column <= hi`` with manifest-stats file skipping:
-        the log's per-file min/max prunes the file list BEFORE Spark sees
-        a path (the Delta/Iceberg data-skipping move — at 100 TB the win
-        is not just row groups skipped but tasks never scheduled and, on
-        object stores, footers never fetched), then the residual
+        """Read ``lo <= column <= hi`` from the latest snapshot with
+        manifest-stats file skipping: the log's per-file min/max prunes
+        the file list BEFORE Spark sees a path (the Delta/Iceberg
+        data-skipping move — at 100 TB the win is not just row groups
+        skipped but tasks never scheduled and, on object stores, footers
+        never fetched), then the residual
         predicate runs inside the scan as usual, so results are exactly
         ``read().filter(...)`` whatever the stats say. Pairs with
         :meth:`optimize`'s Z-order clustering, which is what makes the
         per-file bands tight enough to skip."""
-        snap = self.latest_snapshot() if snapshot is None else snapshot
+        snap = self.latest_snapshot()
         if snap is None:
             raise SnapshotUnavailable("table has no commits")
         m = self._manifest(snap)
@@ -1553,7 +1551,6 @@ class TxTable:
         n_files: int = 8,
         zorder_by: list[str] | None = None,
         bits: int = 16,
-        rank: str = "minmax",
         txn_id: str | None = None,
     ) -> int:
         """Compact the current snapshot into ``n_files`` files —
@@ -1576,7 +1573,7 @@ class TxTable:
             from .layout import zorder_key
 
             df = (
-                zorder_key(df, zorder_by, bits=bits, rank=rank)
+                zorder_key(df, zorder_by, bits=bits)
                 .repartitionByRange(n_files, "_zkey")
                 .sortWithinPartitions("_zkey")
                 .drop("_zkey")

@@ -19,18 +19,25 @@ from ..functions.stock import (
     trend_strength_expr,
 )
 
+#: Symbols with fewer rows get no prediction (src/predictions.py returns
+#: None below 20 rows).
+MIN_HISTORY = 20
+#: Signals are searched for in each symbol's last 10 rows.
+LOOKBACK = 10
+
+
 def _ASC():
     return Window.partitionBy("symbol").orderBy("date")
 
 
 def predictions(
-    enriched: DataFrame, min_history: int = 20, recompute_mas: bool = False
+    enriched: DataFrame, recompute_mas: bool = False
 ) -> DataFrame:
     """Next-day price prediction per symbol (C1/C2, src/predictions.py:6-110).
 
     Loop-free translation: latest row via row_number, last-5 stats via a
     grouped aggregate over the rank-filtered slice, then pure expressions.
-    Symbols with < min_history rows are dropped (reference returns None).
+    Symbols with < MIN_HISTORY rows are dropped (reference returns None).
     Output is sorted by predicted_change_percent desc.
 
     ``recompute_mas`` opts into the r12 window-tail plan: the caller
@@ -48,14 +55,14 @@ def predictions(
     # detected with lead(date) IS NULL (same ordered spec as everything
     # else) instead of rn == count-over-partition: the unordered COUNT
     # window would be a second Window node buffering each whole partition.
-    # At the last row row_number == partition size, so the min_history
-    # gate is just __rn >= min_history. A desc window would add a second
+    # At the last row row_number == partition size, so the MIN_HISTORY
+    # gate is just __rn >= MIN_HISTORY. A desc window would add a second
     # Sort; a groupBy-on-slice + join-back would compute the enrich
     # subtree twice (verified via explain).
     #
     # r12 (guide §2.3 "don't compute what you throw away"): only the LAST
     # row per symbol survives, and every frame it reads fits in the last
-    # min_history rows — so the tail is pre-filtered with lead(date, N)
+    # MIN_HISTORY rows — so the tail is pre-filtered with lead(date, N)
     # IS NULL (an O(1)-per-row offset function in a cheap first window
     # pass, alongside row_number and the daily-change lag the enrichment
     # already computes there) and the five heavy frame aggregates below
@@ -67,7 +74,7 @@ def predictions(
     # daily_change_percent must come from the TRUE lag, so it rides in
     # from the pre-filter pass.
     if recompute_mas:
-        tail_n = max(min_history, 20)  # widest frame below is ma_20's 20 rows
+        tail_n = max(MIN_HISTORY, 20)  # widest frame below is ma_20's 20 rows
         tail = enriched.select(
             "symbol", "date", "close", "daily_change_percent",
             F.row_number().over(_ASC()).alias("__rn"),
@@ -119,7 +126,7 @@ def predictions(
             }
         )
     joined = ranked.filter(
-        F.col("__is_last") & (F.col("__rn") >= min_history)
+        F.col("__is_last") & (F.col("__rn") >= MIN_HISTORY)
     ).select(
         "symbol",
         F.col("close").alias("current_price"),
@@ -174,12 +181,12 @@ def predictions(
     ).orderBy(F.col("predicted_change_percent").desc(), "symbol")
 
 
-def trading_signals(enriched: DataFrame, lookback: int = 10,
+def trading_signals(enriched: DataFrame,
                     max_date_df: DataFrame | None = None,
                     recompute_mas: bool = False) -> DataFrame:
     """MA-crossover BUY/SELL signals (C3, src/predictions.py:113-174).
 
-    Adjacent-row comparison within each symbol's last ``lookback`` rows:
+    Adjacent-row comparison within each symbol's last LOOKBACK rows:
     golden cross = prev ma5 ≤ prev ma20 ∧ ma5 > ma20 (BUY); death cross
     mirrored (SELL). ``days_ago`` is measured from the GLOBAL max date of
     the full input (not per symbol) — a scalar aggregate broadcast-joined
@@ -200,9 +207,9 @@ def trading_signals(enriched: DataFrame, lookback: int = 10,
     # unordered COUNT window buffering whole partitions.
     #
     # r12 (guide §2.3, the predictions() tail pattern): the ma_5/ma_20
-    # frame aggregates only need to be CORRECT at the last `lookback` rows
+    # frame aggregates only need to be CORRECT at the last LOOKBACK rows
     # per symbol, and those rows' widest frame (ma_20, 20 rows) reaches
-    # back exactly lookback+19 rows — so the single full-series window
+    # back exactly LOOKBACK+19 rows — so the single full-series window
     # pass computes only the two O(1) lead(date, N) tail flags, the
     # context slice is filtered, and the moving averages are recomputed
     # from close inside it (same expression, frame and ASC order →
@@ -210,11 +217,11 @@ def trading_signals(enriched: DataFrame, lookback: int = 10,
     # context edge and the tail carry truncated-frame garbage but are
     # dropped by the __in_tail filter before any signal logic reads them.
     if recompute_mas:
-        ctx_n = lookback + 19  # oldest kept row's ma_20 frame tail
+        ctx_n = LOOKBACK + 19  # oldest kept row's ma_20 frame tail
         last_n = (
             enriched.select(
                 "symbol", "date", "close",
-                F.lead("date", lookback).over(_ASC()).isNull().alias(
+                F.lead("date", LOOKBACK).over(_ASC()).isNull().alias(
                     "__in_tail"
                 ),
                 F.lead("date", ctx_n).over(_ASC()).isNull().alias("__in_ctx"),
@@ -232,7 +239,7 @@ def trading_signals(enriched: DataFrame, lookback: int = 10,
     else:
         last_n = (
             enriched.withColumn(
-                "__in_tail", F.lead("date", lookback).over(_ASC()).isNull()
+                "__in_tail", F.lead("date", LOOKBACK).over(_ASC()).isNull()
             )
             .filter(F.col("__in_tail"))
             .drop("__in_tail")

@@ -45,31 +45,26 @@ def _fraction(pred: Column) -> Column:
     return F.avg(F.when(F.coalesce(pred, F.lit(False)), 1.0).otherwise(0.0))
 
 
-def stock_quality_checks(
-    price_cols: tuple[str, ...] = ("open", "high", "low", "close"),
-    price_range: tuple[float, float] = (0.0, 10000.0),
-    change_col: str = "daily_change_percent",
-) -> list[Check]:
+def stock_quality_checks() -> list[Check]:
     """The reference's 14-expectation suite (src/data_quality.py:18-126)."""
     checks: list[Check] = []
     for c in ("symbol", "date", "close", "volume"):
         checks.append(Check(f"column_exists_{c}", None, column_exists=c))
     for c in ("symbol", "date", "close"):
         checks.append(Check(f"not_null_{c}", _fraction(F.col(c).isNotNull())))
-    lo, hi = price_range
-    for c in price_cols:
+    for c in ("open", "high", "low", "close"):
         checks.append(
-            Check(f"range_{c}", _fraction(F.col(c).between(lo, hi)))
+            Check(f"range_{c}", _fraction(F.col(c).between(0.0, 10000.0)))
         )
     checks.append(Check("volume_nonnegative", _fraction(F.col("volume") >= 0)))
     checks.append(
         Check(
-            f"{change_col}_within_50",
+            "daily_change_percent_within_50",
             # first row per symbol has null change; GX's between check
             # ignores nulls, so count them as passing here
             F.avg(
-                F.when(F.col(change_col).isNull(), 1.0)
-                .when(F.col(change_col).between(-50.0, 50.0), 1.0)
+                F.when(F.col("daily_change_percent").isNull(), 1.0)
+                .when(F.col("daily_change_percent").between(-50.0, 50.0), 1.0)
                 .otherwise(0.0)
             ),
             mostly=0.95,
@@ -191,9 +186,9 @@ def save_validation_report(
     rate: float,
     success: bool,
     path: str,
-    timestamp: str | None = None,
 ) -> dict:
-    """Persist the validation outcome as a JSON artifact (machine-readable,
+    """Persist the validation outcome, stamped with the current UTC time,
+    as a JSON artifact (machine-readable,
     unlike the reference's prose .txt — ``src/data_quality.py:242-273``).
 
     The report is driver-side metadata (the check results are already
@@ -214,8 +209,7 @@ def save_validation_report(
             for r in results
             if not r.success
         ],
-        "timestamp": timestamp
-        or datetime.now(timezone.utc).isoformat(timespec="seconds"),
+        "timestamp": datetime.now(timezone.utc).isoformat(timespec="seconds"),
     }
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with open(path, "w") as f:

@@ -188,8 +188,8 @@ def avg_cents(col_name: str):
     )
 
 
-def revenue_sum_dec(prefix: str = "l_"):
-    """Exact money sum via scaled-integer (cents) arithmetic.
+def revenue_sum_dec():
+    """Exact lineitem money sum via scaled-integer (cents) arithmetic.
 
     Float SUM order-noise grows with data volume — at sf0.1 it crosses a
     6dp rounding half-step, and 2dp rounding hits exact .xx5 grid ties —
@@ -200,8 +200,8 @@ def revenue_sum_dec(prefix: str = "l_"):
     ÷10⁴ of identical integers yields identical doubles on both engines."""
     return (
         F.sum(
-            cents(prefix + "extendedprice")
-            * (F.lit(100) - cents(prefix + "discount"))
+            cents("l_extendedprice")
+            * (F.lit(100) - cents("l_discount"))
         )
         / F.lit(10000.0)
     )

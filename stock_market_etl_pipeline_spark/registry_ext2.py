@@ -52,8 +52,7 @@ def q_asof_last_order_value(spark, sf_dir):
     return asof_join(
         t, feed, key="symbol", left_time="date", right_time="odate",
         value_cols=["odate", "order_value"], right_order=["order_value"],
-    ).withColumnsRenamed({"asof_odate": "asof_odate",
-                          "asof_order_value": "asof_order_value"})
+    )
 
 
 # Raw-quote shaped strings derived deterministically from lineitem, with a

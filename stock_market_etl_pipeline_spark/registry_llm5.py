@@ -369,8 +369,6 @@ def bm25_decontaminate(
     spark,
     docs,
     queries: list[tuple[str, str]],
-    rel_num: int = _DECON_REL_NUM,
-    rel_den: int = _DECON_REL_DEN,
 ):
     """Per-document contamination decisions for a benchmark query set.
 
@@ -380,10 +378,9 @@ def bm25_decontaminate(
       (benchmark_contamination's screen) → decision 'drop', weight 0.0 —
       certain leakage, whatever the lexical score says;
     - lexical: BM25 (exact-integer scoring, see module docstring) of the
-      doc against the phrase's term set reaches ``rel_num/rel_den`` of
-      the per-query best score (default 9/10) → decision 'flag',
-      weight 0.5 — a
-      paraphrase-ish near-copy the contiguous n-gram screen CANNOT see
+      doc against the phrase's term set reaches 9/10 of the per-query
+      best score → decision 'flag', weight 0.5 — a paraphrase-ish
+      near-copy the contiguous n-gram screen CANNOT see
       (terms present, phrase broken). Everything else keeps weight 1.0
       and is not emitted.
 
@@ -482,7 +479,8 @@ def bm25_decontaminate(
     )
     flag_rows = (
         scored.join(F.broadcast(best), "query_id")
-        .filter(F.col("score_nano") * rel_den >= F.col("best_nano") * rel_num)
+        .filter(F.col("score_nano") * _DECON_REL_DEN
+                >= F.col("best_nano") * _DECON_REL_NUM)
         .join(exact, on, "left_anti")
         .select(
             *on,

@@ -22,26 +22,26 @@ from ..functions.text import md5_hash60
 
 TWO_60 = float(1 << 60)
 
+# The reference's sample set: 5 symbols × 100 days from a 150.0 base.
+N_SYMBOLS = 5
+N_DAYS = 100
+BASE_PRICE = 150.0
+START_DATE = "2024-01-01"
+SEED = "s13"
+
 
 def _uniform(seed: str, *cols) -> F.Column:
     """Deterministic U[0,1) from md5 of seed + column values."""
     return md5_hash60(F.concat_ws("|", F.lit(seed), *cols)) / F.lit(TWO_60)
 
 
-def synthetic_quotes(
-    spark: SparkSession,
-    n_symbols: int = 5,
-    n_days: int = 100,
-    base_price: float = 150.0,
-    start_date: str = "2024-01-01",
-    seed: str = "s13",
-) -> DataFrame:
+def synthetic_quotes(spark: SparkSession) -> DataFrame:
     """symbol × date grid with a deterministic hash-driven random walk."""
-    symbols = spark.range(n_symbols).select(F.col("id").alias("symbol"))
+    symbols = spark.range(N_SYMBOLS).select(F.col("id").alias("symbol"))
     days = F.explode(
         F.sequence(
-            F.to_date(F.lit(start_date)),
-            F.date_add(F.to_date(F.lit(start_date)), n_days - 1),
+            F.to_date(F.lit(START_DATE)),
+            F.date_add(F.to_date(F.lit(START_DATE)), N_DAYS - 1),
         )
     ).alias("date")
     grid = symbols.select("symbol", days)
@@ -50,9 +50,9 @@ def synthetic_quotes(
     stepped = grid.withColumns(
         {
             # ±1 daily step and an intraday spread, both hash-derived
-            "step": (_uniform(seed + ":step", sym, day) - 0.5) * 2.0,
-            "spread": _uniform(seed + ":spread", sym, day) * 2.0,
-            "u_vol": _uniform(seed + ":vol", sym, day),
+            "step": (_uniform(SEED + ":step", sym, day) - 0.5) * 2.0,
+            "spread": _uniform(SEED + ":spread", sym, day) * 2.0,
+            "u_vol": _uniform(SEED + ":vol", sym, day),
         }
     )
     w = Window.partitionBy("symbol").orderBy("date").rowsBetween(
@@ -61,7 +61,7 @@ def synthetic_quotes(
     walk = stepped.withColumn(
         "close",
         F.round(
-            F.lit(base_price) + F.col("symbol") * 10 + F.sum("step").over(w), 6
+            F.lit(BASE_PRICE) + F.col("symbol") * 10 + F.sum("step").over(w), 6
         ),
     )
     return walk.select(
@@ -114,15 +114,12 @@ FROM walk
 """
 
 
-def synthetic_quotes_oracle(
-    n_symbols: int = 5, n_days: int = 100, base_price: float = 150.0,
-    start_date: str = "2024-01-01", seed: str = "s13",
-) -> str:
+def synthetic_quotes_oracle() -> str:
     return SYNTHETIC_QUOTES_SQL.format(
-        n_symbols=n_symbols,
-        start=start_date,
-        last_off=n_days - 1,
-        seed=seed,
+        n_symbols=N_SYMBOLS,
+        start=START_DATE,
+        last_off=N_DAYS - 1,
+        seed=SEED,
         two60=f"{TWO_60:.1f}",
-        base=base_price,
+        base=BASE_PRICE,
     )

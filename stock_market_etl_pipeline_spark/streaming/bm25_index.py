@@ -114,13 +114,9 @@ def start_bm25_index_stream(
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)
 
 
-def bm25_from_index(
-    spark: SparkSession,
-    index_dir: str,
-    queries: list[tuple[str, list[str]]] | None = None,
-    k: int = _BM25_K,
-) -> DataFrame:
-    """BM25 top-k per query over the MAINTAINED index — no corpus scan.
+def bm25_from_index(spark: SparkSession, index_dir: str) -> DataFrame:
+    """BM25 top-k per query over the MAINTAINED index — no corpus scan:
+    registry_llm5's query set and k.
 
     Mirrors registry_llm5.bm25_topk's exact-integer scoring
     (registry_llm5 module docstring: quantized idf, rational
@@ -132,7 +128,7 @@ def bm25_from_index(
     before anything else — the index analog of the batch plan's
     pushed IN-filter.
     """
-    queries = queries if queries is not None else _BM25_QUERIES
+    queries = _BM25_QUERIES
     t = _index_tables(index_dir)
     terms = sorted({tk for _, ts in queries for tk in ts})
     qdf = spark.createDataFrame(
@@ -183,7 +179,7 @@ def bm25_from_index(
     )
     return (
         scored.withColumn("bm25_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("bm25_rank") <= k)
+        .filter(F.col("bm25_rank") <= _BM25_K)
         .select(
             "query_id", "doc_id",
             (F.col("score_nano").cast("double") / F.lit(1e9)).alias("bm25"),

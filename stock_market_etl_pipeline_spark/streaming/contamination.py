@@ -56,12 +56,12 @@ def doc_gram_hashes(docs: DataFrame, k: int = CONTAM_K) -> DataFrame:
 
 def build_benchmark_grams(
     spark: SparkSession, bench_docs: DataFrame, bench_dir: str,
-    k: int = CONTAM_K,
 ) -> None:
     """One-time: persist the benchmark suite's (doc_id, h) gram table.
     Benchmark suites are MBs, so this table is KB-to-MB scale and
     broadcastable at probe time."""
-    doc_gram_hashes(bench_docs, k).write.mode("overwrite").parquet(bench_dir)
+    doc_gram_hashes(bench_docs, CONTAM_K).write.mode("overwrite").parquet(
+        bench_dir)
 
 
 def probe_batch(batch_grams: DataFrame, bench_grams: DataFrame) -> DataFrame:

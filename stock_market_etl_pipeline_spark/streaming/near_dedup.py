@@ -40,22 +40,28 @@ from ..operators.dedup import _doc_shingles, minhash_banded, minhash_signatures
 from .drive import drain, parquet_landing
 from .sketch_rollup import _read_store_if_exists
 
+# MinHash geometry shared by the stored index and every probe: 3-word
+# shingles, 16 hashes in 4 bands; a pair is a match at estimated
+# Jaccard ≥ 0.5.
+SHINGLE_K = 3
+NUM_HASHES = 16
+BANDS = 4
+MATCH_THRESHOLD = 0.5
 
-def batch_index_rows(
-    batch: DataFrame, k: int = 3, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
+def batch_index_rows(batch: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig, sig) for one batch: the band signatures
     used for probing plus the packed minhash vector used for similarity
     estimation — one row per (doc, band), KBs per thousand docs. The
     batch's shingle explode is localCheckpoint-materialized once and
     shared by the banding and the packed-signature branches (the
     dedup_jaccard_lsh_verified trade, measured winning at sf1)."""
-    sh = _doc_shingles(batch, k).localCheckpoint(eager=True)
+    sh = _doc_shingles(batch, SHINGLE_K).localCheckpoint(eager=True)
     banded = minhash_banded(
-        batch, k=k, num_hashes=num_hashes, bands=bands, shingles=sh
+        batch, k=SHINGLE_K, num_hashes=NUM_HASHES, bands=BANDS, shingles=sh
     )
     sig = (
-        minhash_signatures(batch, k=k, num_hashes=num_hashes, shingles=sh)
+        minhash_signatures(batch, k=SHINGLE_K, num_hashes=NUM_HASHES,
+                           shingles=sh)
         .groupBy("doc_id")
         .agg(
             F.transform(
@@ -82,12 +88,9 @@ def estimated_jaccard(sig_a, sig_b, num_hashes: int):
 
 
 def match_batch_against_index(
-    batch_rows: DataFrame,
-    index: DataFrame,
-    num_hashes: int = 16,
-    threshold: float = 0.5,
+    batch_rows: DataFrame, index: DataFrame
 ) -> DataFrame:
-    """(corpus_doc, new_doc, est_jaccard ≥ threshold): probe the stored
+    """(corpus_doc, new_doc, est_jaccard ≥ MATCH_THRESHOLD): probe the stored
     band index with the batch's bands; estimate similarity from the two
     stored signature vectors. Distinct-pair dedup BEFORE estimation so a
     pair agreeing in several bands is estimated once."""
@@ -104,12 +107,12 @@ def match_batch_against_index(
         .select("corpus_doc", "new_doc", "sig_old", "sig_new")
         .distinct()
     )
-    est = estimated_jaccard(F.col("sig_old"), F.col("sig_new"), num_hashes)
+    est = estimated_jaccard(F.col("sig_old"), F.col("sig_new"), NUM_HASHES)
     return (
         cand.select(
             "corpus_doc", "new_doc", est.alias("est_jaccard")
         )
-        .filter(F.col("est_jaccard") >= threshold)
+        .filter(F.col("est_jaccard") >= MATCH_THRESHOLD)
     )
 
 

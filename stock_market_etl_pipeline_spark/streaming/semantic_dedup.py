@@ -113,15 +113,13 @@ def recluster(
     centroids_dir: str,
     n_clusters: int | None = None,
     seed: int = 43,
-    sample_cap: int = 100_000,
-    tag: str | None = None,
 ) -> int | None:
     """Offline centroid refresh (VERDICT r7 #7): first-batch geometry
     drifts as the corpus grows — clusters inflate past the pair cap or
     stop separating new content. Re-train on a BOUNDED hash-ordered
-    survivor sample (the pq_codebooks driver-bound contract), re-assign
-    every survivor in one batch, and swap both tables atomically via
-    TxTable commits:
+    survivor sample (≤ 100,000 vectors, the pq_codebooks driver-bound
+    contract), re-assign every survivor in one batch, and swap both
+    tables atomically via TxTable commits:
 
     1. new centroids land as one overwrite commit on the centroid
        TxTable (txn-marked);
@@ -130,12 +128,12 @@ def recluster(
        overwrite commit on the survivor TxTable (same txn tag).
 
     Crash between the commits: rerunning recluster recomputes the same
-    default ``tag`` (derived from the survivor snapshot it read — which
-    step 2 had not yet advanced), so the centroid commit replays as a
-    txn no-op and step 2 completes against the already-committed
-    geometry — the two-table swap is replay-idempotent without a
-    cross-table transaction (the BM25-maintainer pattern). Run with the
-    stream QUIESCED (between availableNow runs), like OPTIMIZE.
+    txn tag ``recluster-src<n>`` (derived from the survivor snapshot n it
+    read — which step 2 had not yet advanced), so the centroid commit
+    replays as a txn no-op and step 2 completes against the
+    already-committed geometry — the two-table swap is replay-idempotent
+    without a cross-table transaction (the BM25-maintainer pattern). Run
+    with the stream QUIESCED (between availableNow runs), like OPTIMIZE.
 
     Survivorship is untouched by design: the survivor SET (vec_ids and
     vectors) is byte-identical before and after — only cluster labels
@@ -149,14 +147,13 @@ def recluster(
     src_snap = table.latest_snapshot()
     if src_snap is None:
         return None
-    if tag is None:
-        tag = f"recluster-src{src_snap}"
+    tag = f"recluster-src{src_snap}"
     survivors = table.read(spark)
     if n_clusters is None:
         n_clusters = ctable.read(spark).count()
     sample = (
         survivors.orderBy(F.md5(F.col("vec_id").cast("string")))
-        .limit(sample_cap)
+        .limit(100_000)
         .select("vec_id", F.col("v").alias("embedding"))
     )
     ctable.overwrite(

@@ -54,11 +54,10 @@ def _read_store_if_exists(spark: SparkSession, sketch_dir: str):
 
 def sketch_batch(
     df: DataFrame, key_cols: list[str], day_col: str, value_col: str,
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """(keys, day, hll) for one batch of rows."""
     return df.groupBy(*key_cols, F.to_date(day_col).alias("day")).agg(
-        F.hll_sketch_agg(value_col, F.lit(lgk)).alias("hll")
+        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("hll")
     )
 
 
@@ -145,11 +144,10 @@ def distinct_estimates(
 
 def theta_batch(
     df: DataFrame, key_cols: list[str], day_col: str, value_col: str,
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """(keys, day, theta) for one batch of rows."""
     return df.groupBy(*key_cols, F.to_date(day_col).alias("day")).agg(
-        F.theta_sketch_agg(value_col, F.lit(lgk)).alias("theta")
+        F.theta_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("theta")
     )
 
 
@@ -193,7 +191,6 @@ def set_algebra_from_store(
     group_col: str,
     a,
     b,
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """Set algebra between two groups' all-history populations from the
     persisted theta store alone: merge each group's per-day sketches,
@@ -201,8 +198,8 @@ def set_algebra_from_store(
     from ..operators.sketches import theta_merged_per_group, theta_set_algebra
 
     rollup = spark.read.parquet(sketch_dir)
-    merged = theta_merged_per_group(rollup, [group_col], lgk)
-    return theta_set_algebra(merged, group_col, a, b, lgk)
+    merged = theta_merged_per_group(rollup, [group_col])
+    return theta_set_algebra(merged, group_col, a, b)
 
 
 def start_quantile_sketch_rollup(

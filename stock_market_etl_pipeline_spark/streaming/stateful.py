@@ -55,12 +55,12 @@ def _update_running_stats(
     )
 
 
-def running_vwap(stream: DataFrame, group_col: str = "symbol") -> DataFrame:
+def running_vwap(stream: DataFrame) -> DataFrame:
     """Cumulative per-symbol VWAP emitted each micro-batch (update mode).
 
     Input stream needs (symbol, close, volume) columns.
     """
-    return stream.groupBy(group_col).applyInPandasWithState(
+    return stream.groupBy("symbol").applyInPandasWithState(
         _update_running_stats,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

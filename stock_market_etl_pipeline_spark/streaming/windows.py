@@ -36,12 +36,9 @@ def tumbling_event_counts(
     )
 
 
-def session_event_stats(
-    stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Per-user session windows (inactivity gap) — counts + value sums.
+def session_event_stats(stream: DataFrame) -> DataFrame:
+    """Per-user session windows (30-minute inactivity gap, 30-minute
+    watermark) — counts + value sums.
 
     The SAME session_window expression as the batch-registered
     `session_window_stats` query (registry_ext3.py), so batch and stream
@@ -50,8 +47,8 @@ def session_event_stats(
     watermark passes session end — bounded state at any scale.
     """
     return (
-        stream.withWatermark("ts", watermark_delay)
-        .groupBy(F.session_window("ts", gap), "user_id")
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),

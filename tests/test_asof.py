@@ -127,3 +127,34 @@ def test_asof_right_order_picks_max_per_time_without_preagg(spark):
     got = {r["tag"]: (r["asof_next_rt"], r["asof_next_v"])
            for r in fwd.collect()}
     assert got == {"x": (d(2024, 1, 5), 50.0), "y": (d(2024, 1, 2), 40.0)}
+
+
+def test_asof_nullable_right_value_returns_the_matched_row_whole(spark):
+    """A null in one right-side value column is the matched row's null in
+    both directions: the other columns come from that same row, and the
+    null column is not filled from an older (or later) right row."""
+    from stock_market_etl_pipeline_spark.operators.asof import (
+        asof_join_forward,
+    )
+
+    d = dt.date
+    left = spark.createDataFrame([(1, d(2024, 1, 5), "x")],
+                                 "k int, t date, tag string")
+    right = spark.createDataFrame(
+        [
+            (1, d(2024, 1, 1), 10.0, "old"),
+            (1, d(2024, 1, 4), None, "near"),   # nearest prior, v is null
+            (1, d(2024, 1, 6), None, "next"),   # nearest later, v is null
+            (1, d(2024, 1, 9), 90.0, "late"),
+        ],
+        "k int, rt date, v double, src string",
+    )
+    back = asof_join(left, right, key="k", left_time="t", right_time="rt",
+                     value_cols=["v", "src"]).collect()
+    assert [(r["asof_v"], r["asof_src"]) for r in back] == [(None, "near")]
+
+    fwd = asof_join_forward(left, right, key="k", left_time="t",
+                            right_time="rt", value_cols=["v", "src"],
+                            right_order=["v"]).collect()
+    assert [(r["asof_next_v"], r["asof_next_src"]) for r in fwd] == [
+        (None, "next")]

@@ -690,6 +690,16 @@ def test_gap_fill_forward_join_free(spark, qs):
     assert "Join" not in plan
 
 
+def test_asof_plans_carry_one_window_function(spark, qs):
+    """The matched right row travels as one struct, so each as-of plan
+    evaluates ONE last(struct, ignorenulls) — not one window function
+    per value column, which could mix columns from different rows."""
+    for q in ("asof_last_order_value", "asof_next_order_value"):
+        plan = plan_of(qs[q](spark, SF_DIR))
+        assert count_nodes(plan, "Window") == 1, q
+        assert plan.count("windowspecdefinition(") == 1, q
+
+
 def test_asof_next_no_unbounded_following(spark, qs):
     plan = plan_of(qs["asof_next_order_value"](spark, SF_DIR))
     assert "unboundedfollowing" not in plan.lower()
