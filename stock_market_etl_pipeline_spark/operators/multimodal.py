@@ -359,8 +359,8 @@ def downsample_audio(media: DataFrame, factor: int) -> DataFrame:
     return media.mapInPandas(batches, schema=AUDIO_SCHEMA)
 
 
-def frame_sample(decoded: DataFrame, every_nth: int = 5) -> DataFrame:
-    """Frame-sampling plan for video rows: one output row per sampled frame
+def frame_sample(decoded: DataFrame) -> DataFrame:
+    """Frame-sampling plan for video rows: one output row per 5th frame
     index — pure explode/sequence, no Python.
 
     The n_frames >= 1 guard is load-bearing: ``sequence(0, n_frames-1,
@@ -370,7 +370,7 @@ def frame_sample(decoded: DataFrame, every_nth: int = 5) -> DataFrame:
     short-doc shingle bug (ADVICE r4). Zero-frame rows emit no frames."""
     frames = F.when(
         F.col("n_frames") >= 1,
-        F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth)),
+        F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(5)),
     ).otherwise(F.array().cast("array<int>"))
     return (
         decoded.filter(F.col("media_type") == "video/mp4")

@@ -736,7 +736,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_clusters: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
     survivor: str = "centroid",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): k-means the
@@ -772,7 +771,7 @@ def semantic_dedup(
     # columns the transform output already carries (§2.4); v is the exact
     # array_to_vector round-trip of _to_double(embedding), so centroid_sim
     # and the pair cosines below see bit-identical doubles.
-    assigned, model = _ivf_assign_full(embeddings, n_clusters, seed)
+    assigned, model = _ivf_assign_full(embeddings, n_clusters, 42)
     centroids = spark.createDataFrame(
         [
             (int(i), [float(x) for x in c])
@@ -880,13 +879,9 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
-def pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 8,
-    k_codes: int = 16,
-):
-    """Train per-subspace PQ codebooks: split the D-dim space into ``m``
-    contiguous subspaces and run Lloyd's k-means (k = ``k_codes``,
+def pq_codebooks(embeddings: DataFrame):
+    """Train per-subspace PQ codebooks: split the D-dim space into m = 8
+    contiguous subspaces and run Lloyd's k-means (k_codes = 16,
     20 fixed iterations, init seeded with 7) on each, over a BOUNDED
     deterministic sample (hash-ordered, ≤ 4096 vectors collected to
     the driver — codebook training is the one step that does not need the
@@ -900,6 +895,7 @@ def pq_codebooks(
     (tests/test_llm_ops3.py), not assumed."""
     import numpy as np
 
+    m, k_codes = 8, 16
     rows = (
         _spread(embeddings)
         .select("vec_id", _to_double(F.col("embedding")).alias("v"))
@@ -997,7 +993,7 @@ def pq_topk(
     k: int = 10,
 ) -> DataFrame:
     """PQ ANN with asymmetric distance computation (ADC) + exact rerank:
-    over :func:`pq_codebooks`' default m=8 × k_codes=16 books, each query
+    over :func:`pq_codebooks`' m=8 × k_codes=16 books, each query
     precomputes an m×k_codes table of subspace inner products
     against the codebooks (driver-side, m·k_codes·|queries| floats —
     KB-scale); the corpus side is scanned as CODES ONLY (the 64×-smaller

@@ -128,8 +128,8 @@ def start_balance_maintainer(
                 r.orderkey for r in sh.select("orderkey").collect()
             ]
             if len(probe_keys) <= TxTable.BLOOM_MAX_PROBE_KEYS:
-                tomb = t["cancelled"].read_keys(
-                    spark, "orderkey", probe_keys
+                tomb = t["cancelled"].read_predicate(
+                    spark, {"orderkey": ("in", probe_keys)}
                 )
             else:
                 tomb = t["cancelled"].read(spark)
@@ -141,7 +141,7 @@ def start_balance_maintainer(
                 # Key-bounded read-modify-write (ADVICE r10): the
                 # greatest() comparison only needs the stored rows for
                 # THIS batch's orderkeys, so read them via the
-                # bloom+stats point lookup (read_keys) instead of
+                # bloom+stats IN-leaf lookup (read_predicate) instead of
                 # scanning the whole closes table — per-batch cost is
                 # then churn-bounded, as the module docstring claims.
                 # The key list is one micro-batch's distinct orderkeys
@@ -151,8 +151,8 @@ def start_balance_maintainer(
                 ship_keys = [r.orderkey for r in sh.select("orderkey")
                              .collect()]
                 if len(ship_keys) <= TxTable.BLOOM_MAX_PROBE_KEYS:
-                    cur_src = t["closes"].read_keys(
-                        spark, "orderkey", ship_keys
+                    cur_src = t["closes"].read_predicate(
+                        spark, {"orderkey": ("in", ship_keys)}
                     )
                 else:
                     cur_src = t["closes"].read(spark)

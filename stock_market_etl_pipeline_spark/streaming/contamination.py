@@ -32,8 +32,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash60, word_shingles_all, ws_tokens
-from .drive import drain, parquet_landing
-from .sketch_rollup import _read_store_if_exists
+from .drive import (
+    _read_store_if_exists,
+    drain,
+    overwrite_partitions,
+    parquet_landing,
+)
 
 CONTAM_K = 8
 
@@ -99,12 +103,8 @@ def start_contamination_monitor(
             # schema inference downstream; skipping is replay-stable
             # (the replayed batch computes the same empty set)
             return
-        (
-            hits.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(hits_dir)
+        overwrite_partitions(
+            hits.withColumn("batch_id", F.lit(batch_id)), hits_dir, "batch_id"
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)

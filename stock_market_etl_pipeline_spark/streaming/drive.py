@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 
@@ -41,3 +42,64 @@ def parquet_landing(spark: SparkSession, landing_dir: str) -> DataFrame:
     its schema up front, so it is read from the files already there."""
     schema = spark.read.parquet(landing_dir).schema
     return spark.readStream.schema(schema).parquet(landing_dir)
+
+
+def _read_store_if_exists(spark: SparkSession, store_dir: str):
+    """Read a maintained parquet store, or None iff the path does not
+    exist yet (first batch). Any OTHER read failure (FS hiccup,
+    permissions, corrupt footer) must propagate and fail the micro-batch
+    so the checkpoint retries — swallowing it would let the batch body
+    overwrite the touched partitions from the batch alone and
+    permanently lose history."""
+    try:
+        return spark.read.parquet(store_dir)
+    except AnalysisException as e:
+        getter = getattr(e, "getCondition", None) or getattr(
+            e, "getErrorClass", lambda: None
+        )
+        if getter() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
+def overwrite_partitions(df: DataFrame, store_dir: str, *cols: str) -> None:
+    """Write ``df`` into ``store_dir`` partitioned by ``cols``, replacing
+    only the partitions ``df`` has rows for (dynamic partition
+    overwrite). Rewriting a partition from the same rows gives the same
+    partition, so a replayed batch is a no-op: the idempotent sink
+    foreachBatch needs for exactly-once."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*cols)
+        .parquet(store_dir)
+    )
+
+
+def recompute_touched(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    landing_dir: str,
+    key: Column,
+    rebuild: Callable[[DataFrame], DataFrame],
+    store_dir: str,
+    *cols: str,
+) -> None:
+    """Touched-key recompute, the batch body of the maintainers whose
+    aggregate cannot be merged from the batch alone:
+
+    1. collect the distinct ``key`` values the batch touches (bounded:
+       touched partitions, never rows);
+    2. re-read the rows with those keys from the landing table (the
+       source of truth), so a partition that receives rows across many
+       batches, late or out of order, is still recomputed whole;
+    3. ``rebuild`` them and swap the result in with
+       :func:`overwrite_partitions` on ``cols``.
+
+    Re-running a batch recomputes the same partitions from the same
+    source, so the sink is idempotent."""
+    touched = [r[0] for r in batch_df.select(key).distinct().collect()]
+    if not touched:
+        return
+    src = spark.read.parquet(landing_dir).filter(key.isin(touched))
+    overwrite_partitions(rebuild(src), store_dir, *cols)

@@ -37,8 +37,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _doc_shingles, minhash_banded, minhash_signatures
-from .drive import drain, parquet_landing
-from .sketch_rollup import _read_store_if_exists
+from .drive import (
+    _read_store_if_exists,
+    drain,
+    overwrite_partitions,
+    parquet_landing,
+)
 
 # MinHash geometry shared by the stored index and every probe: 3-word
 # shingles, 16 hashes in 4 bands; a pair is a match at estimated
@@ -146,12 +150,8 @@ def start_near_dedup_stream(
                 matches.write.mode("overwrite")
                 .parquet(f"{matches_dir}/batch_id={batch_id}")
             )
-        (
-            rows.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
+        overwrite_partitions(
+            rows.withColumn("batch_id", F.lit(batch_id)), index_dir, "batch_id"
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, process)

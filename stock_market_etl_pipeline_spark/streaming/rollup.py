@@ -4,22 +4,9 @@ monthly OHLCV aggregate up to date as new tick rows land.
 
 The reference recomputes its whole transform per daily batch (reference
 ``src/pipeline.py`` full-table rewrite into Postgres); at 100 TB a full
-recompute per arrival is impossible. The scalable shape is PARTITION-LEVEL
-RECOMPUTE:
-
-1. each micro-batch identifies the set of (year, month) partitions its
-   rows touch (a bounded ``collect`` — #touched partitions per batch, not
-   data volume);
-2. those partitions — and ONLY those — are re-aggregated from the landing
-   table (source of truth), so the result is correct even when a partition
-   receives rows across many batches, arbitrarily late or out of order;
-3. the refreshed partitions are swapped in atomically-per-partition via
-   dynamic partition overwrite (``partitionOverwriteMode=dynamic``).
-
-Re-running a batch recomputes the same partitions from the same source —
-the sink is idempotent, which is exactly the exactly-once story Structured
-Streaming's checkpoint + deterministic batch ids need from a foreachBatch
-writer.
+recompute per arrival is impossible. Each micro-batch instead recomputes
+only the (year, month) partitions its rows touch, from the landing table
+(``drive.recompute_touched``).
 """
 
 from __future__ import annotations
@@ -27,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .drive import drain, parquet_landing
+from .drive import drain, parquet_landing, recompute_touched
 
 
 def monthly_bars(ticks_df: DataFrame) -> DataFrame:
@@ -64,29 +51,9 @@ def start_monthly_rollup(
     """
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        touched = (
-            batch_df.select(
-                F.year("date").cast("int").alias("year"),
-                F.month("date").cast("int").alias("month"),
-            )
-            .distinct()
-            .collect()  # bounded: #touched partitions, not rows
-        )
-        if not touched:
-            return
-        months = [(r["year"], r["month"]) for r in touched]
-        src = spark.read.parquet(landing_dir)
-        cond = F.lit(False)
-        for y, m in months:
-            cond = cond | (
-                (F.year("date") == F.lit(y)) & (F.month("date") == F.lit(m))
-            )
-        refreshed = monthly_bars(src.filter(cond))
-        (
-            refreshed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("year", "month")
-            .parquet(rollup_dir)
+        recompute_touched(
+            spark, batch_df, landing_dir, F.trunc("date", "month"),
+            monthly_bars, rollup_dir, "year", "month",
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

@@ -26,30 +26,17 @@ this composes the engine's streaming story with operators/sketches.py.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import DEFAULT_LGK, kll_daily_rollup
-from .drive import drain, parquet_landing
-
-
-def _read_store_if_exists(spark: SparkSession, sketch_dir: str):
-    """Read the persisted sketch table, or None iff the path does not
-    exist yet (first batch). Any OTHER read failure (FS hiccup,
-    permissions, corrupt footer) must propagate and fail the micro-batch
-    so the checkpoint retries — swallowing it would silently overwrite
-    the touched day-partitions with batch-only sketches and permanently
-    under-count history."""
-    try:
-        return spark.read.parquet(sketch_dir)
-    except AnalysisException as e:
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", lambda: None
-        )
-        if getter() == "PATH_NOT_FOUND":
-            return None
-        raise
+from .drive import (
+    _read_store_if_exists,
+    drain,
+    overwrite_partitions,
+    parquet_landing,
+    recompute_touched,
+)
 
 
 def sketch_batch(
@@ -96,12 +83,7 @@ def merge_into_store(
         )
     else:
         merged = batch_sk
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day")
-        .parquet(sketch_dir)
-    )
+    overwrite_partitions(merged, sketch_dir, "day")
 
 
 def start_distinct_sketch_rollup(
@@ -222,40 +204,27 @@ def start_quantile_sketch_rollup(
     the store and shifts every quantile the batch's distribution
     differs on. A merge-maintained KLL store would therefore need
     transactional batch-id fencing; recomputing the touched day
-    partitions from the landing table (streaming/rollup.py's pattern)
-    gets exactly-once from idempotent overwrite instead, at the cost of
-    re-reading only the touched days. tests/test_streaming_sketch.py
+    partitions from the landing table (``drive.recompute_touched``, as
+    rollup.py and transitions.py do) gets exactly-once from idempotent
+    overwrite instead, at the cost of re-reading only the touched days.
+    tests/test_streaming_sketch.py
     proves both halves: recompute-rerun is a no-op, while a naive
     double-merge of the same batch visibly shifts the merged sketch.
     """
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        days = [
-            r["day"]
-            for r in batch_df.select(
-                F.to_date(day_col).alias("day")
-            ).distinct().collect()  # bounded: touched days, not rows
-        ]
-        if not days:
-            return
-        src = spark.read.parquet(landing_dir).filter(
-            F.to_date(day_col).isin(days)
-        )
-        refreshed = kll_daily_rollup(src, key_cols, F.to_date(day_col), value_col)
-        (
-            refreshed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(sketch_dir)
+        day = F.to_date(day_col)
+        recompute_touched(
+            spark, batch_df, landing_dir, day,
+            lambda src: kll_daily_rollup(src, key_cols, day, value_col),
+            sketch_dir, "day",
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)
 
 
-def sliding_distinct_from_store(
-    spark: SparkSession, sketch_dir: str, window_days: int = 30
-) -> DataFrame:
-    """Trailing-window distinct (e.g. 30-day MAU) answered from the
+def sliding_distinct_from_store(spark: SparkSession, sketch_dir: str) -> DataFrame:
+    """30-day trailing-window distinct (MAU) answered from the
     STREAMING-MAINTAINED sketch store: per-day HLL rows merge across the
     trailing window (and across any key columns the store carries —
     register-wise-max union of per-key day sketches IS the day sketch),
@@ -266,7 +235,7 @@ def sliding_distinct_from_store(
     from ..operators.sketches import hll_sliding_distinct
 
     store = spark.read.parquet(sketch_dir).select("day", "hll")
-    return hll_sliding_distinct(store, window_days=window_days)
+    return hll_sliding_distinct(store, window_days=30)
 
 
 # ---------------------------------------------------------------------------
@@ -306,12 +275,8 @@ def start_frequency_sketch_rollup(
         cm = count_min_rollup(batch_df, [], value_col)
         if not cm.take(1):
             return
-        (
-            cm.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_dir)
+        overwrite_partitions(
+            cm.withColumn("batch_id", F.lit(batch_id)), sketch_dir, "batch_id"
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

@@ -8,23 +8,14 @@ pair; stitching per-user "last event" state into every batch is possible
 (applyInPandasWithState) but makes replay non-idempotent — a redelivered
 batch would re-emit its boundary pairs.
 
-The scalable idempotent shape is bucket recompute:
-
-1. users hash into ``n_buckets`` stable buckets (pmod(xxhash64(user))) —
-   the store's partition key;
-2. each micro-batch identifies the buckets its rows touch (bounded
-   collect: ≤ n_buckets values, never rows);
-3. those buckets' pair counts are recomputed FROM THE LANDING TABLE
-   (source of truth) — cross-batch pairs appear because the recompute
-   sees the user's whole history, however it was delivered;
-4. dynamic partition overwrite swaps the refreshed buckets in
-   atomically-per-partition. Re-running a batch rewrites the same
-   buckets from the same source — idempotent, which is the exactly-once
-   contract foreachBatch needs.
-
-At 100 TB the landing table would itself be bucket-partitioned on the
-same key so step 3's scan prunes to the touched buckets; n_buckets
-bounds both the recompute fan-in and the per-partition file count.
+Users hash into ``n_buckets`` stable buckets (pmod(xxhash64(user))), the
+store's partition key, and each micro-batch recomputes the buckets it
+touches from the landing table (``drive.recompute_touched``):
+cross-batch pairs appear because the recompute sees each user's whole
+history, however it was delivered. At 100 TB the landing table would
+itself be bucket-partitioned on the same key so the recompute scan
+prunes to the touched buckets; n_buckets bounds both the recompute
+fan-in and the per-partition file count.
 """
 
 from __future__ import annotations
@@ -32,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .drive import drain, parquet_landing
+from .drive import drain, parquet_landing, recompute_touched
 
 DEFAULT_BUCKETS = 32
 
@@ -91,23 +82,9 @@ def start_transition_rollup(
     """
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        touched = (
-            batch_df.select(user_bucket(n_buckets).alias("bucket"))
-            .distinct()
-            .collect()  # bounded: <= n_buckets values
-        )
-        if not touched:
-            return
-        buckets = [r["bucket"] for r in touched]
-        src = spark.read.parquet(landing_dir).filter(
-            user_bucket(n_buckets).isin(buckets)
-        )
-        refreshed = transition_pairs(src, n_buckets)
-        (
-            refreshed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(store_dir)
+        recompute_touched(
+            spark, batch_df, landing_dir, user_bucket(n_buckets),
+            lambda src: transition_pairs(src, n_buckets), store_dir, "bucket",
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

@@ -13,15 +13,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def tumbling_event_counts(
-    stream: DataFrame,
-    window_length: str = "1 hour",
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
-    """Per (event_type, window) counts + value sums over tumbling windows."""
+def tumbling_event_counts(stream: DataFrame) -> DataFrame:
+    """Per (event_type, window) counts + value sums over 1-hour tumbling
+    windows, late data bounded by a 30-minute watermark."""
     return (
-        stream.withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_length).alias("win"), "event_type")
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("total_value"),

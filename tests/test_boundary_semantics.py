@@ -260,7 +260,7 @@ def test_watermark_exact_cutoff_boundary(spark, tmp_path):
     def _run():
         stream = spark.readStream.schema(_WM_SCHEMA).parquet(landing)
         q = (
-            tumbling_event_counts(stream, "1 hour", "30 minutes")
+            tumbling_event_counts(stream)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)

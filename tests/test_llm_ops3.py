@@ -308,7 +308,7 @@ def test_semantic_dedup_planted_twin_recall(spark):
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     corpus = plant_near_duplicates(emb, n=100, id_offset=1_000_000, dim=64)
-    out = semantic_dedup(corpus, n_clusters=16, threshold=0.9, seed=42)
+    out = semantic_dedup(corpus, n_clusters=16, threshold=0.9)
     by_id = {r["vec_id"]: r for r in out.collect()}
     assert len(by_id) == corpus.count()  # one decision row per vector
     merged = sum(
@@ -333,7 +333,7 @@ def test_semantic_dedup_soundness_and_survivorship(spark):
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    out = semantic_dedup(emb, n_clusters=16, threshold=0.35, seed=42)
+    out = semantic_dedup(emb, n_clusters=16, threshold=0.35)
     rows = out.collect()
     exact = {
         frozenset((r["id_a"], r["id_b"]))
@@ -389,7 +389,7 @@ def test_pq_planted_twin_recall_and_adc_agreement(spark):
     ) / len(qids)
     assert recall >= 0.95, recall
 
-    books = pq_codebooks(emb, m=8, k_codes=16)
+    books = pq_codebooks(emb)
     codes = {
         (r.vec_id, r.sub): r.code
         for r in pq_encode(emb, books).filter("vec_id < 50").collect()
@@ -445,6 +445,6 @@ def test_pq_guards_fail_loudly(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     tiny = emb.filter("vec_id < 5")
     with _pytest.raises(ValueError, match="k_codes"):
-        pq_codebooks(tiny, m=8, k_codes=16)
+        pq_codebooks(tiny)
     with _pytest.raises(ValueError, match="999999999"):
         pq_topk(emb, query_ids=[0, 999_999_999], k=3)

@@ -53,7 +53,7 @@ def test_decode_real_path_raises(media):
 
 def test_frame_sample_explodes_video_rows(media):
     decoded = decode_media(media)
-    frames = frame_sample(decoded, every_nth=5)
+    frames = frame_sample(decoded)
     rows = frames.collect()
     assert rows, "expected at least one video row"
     for r in rows:
@@ -75,7 +75,7 @@ def test_frame_sample_zero_frame_video_emits_nothing(spark):
     decoded = spark.createDataFrame(
         rows, "media_id long, media_type string, n_frames int"
     )
-    got = frame_sample(decoded, every_nth=5).collect()
+    got = frame_sample(decoded).collect()
     assert {(r["media_id"], r["frame_idx"]) for r in got} == {(3, 0), (3, 5)}
 
 

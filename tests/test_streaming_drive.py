@@ -1,5 +1,5 @@
 """The single streaming scaffold (streaming/drive.py): no maintainer carries
-its own writeStream scaffold, and ``drain`` over a parquet landing
+its own writeStream scaffold or partition-overwrite write, and ``drain`` over a parquet landing
 directory delivers every landed row once and stops on its own."""
 
 import glob
@@ -21,7 +21,12 @@ def test_trigger_and_checkpoint_policy_live_only_in_drive():
             continue
         with open(path, encoding="utf-8") as fh:
             src = fh.read()
-        found = [t for t in (".trigger(", "checkpointLocation", "foreachBatch(") if t in src]
+        found = [
+            t
+            for t in (".trigger(", "checkpointLocation", "foreachBatch(",
+                      "partitionOverwriteMode")
+            if t in src
+        ]
         if found:
             offenders[os.path.basename(path)] = found
     assert offenders == {}

@@ -299,7 +299,7 @@ def test_sliding_mau_from_streaming_store_equals_batch(spark, tmp_path):
 
     got = {
         str(r["day"]): r["approx_distinct"]
-        for r in sliding_distinct_from_store(spark, store, 30).collect()
+        for r in sliding_distinct_from_store(spark, store).collect()
     }
     all_events = spark.read.parquet(landing)
     batch = hll_sliding_distinct(

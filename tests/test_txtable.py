@@ -189,7 +189,7 @@ def test_txtable_as_exactly_once_streaming_sink(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Manifest column stats + data skipping (read_band / prune_band)
+# Manifest column stats + data skipping (read_predicate / prune)
 # ---------------------------------------------------------------------------
 
 
@@ -222,14 +222,16 @@ def test_manifest_stats_recorded_per_file(spark, tmp_path):
 def test_read_band_prunes_files_and_matches_full_filter(spark, tmp_path):
     t = TxTable(str(tmp_path / "t"))
     t.append(_banded(spark, 0, 1000, 8))
-    kept, skipped = t.prune_band("id", 100, 220)
+    kept, skipped = t.prune({"id": (100, 220)})
     assert len(skipped) >= 5, f"no skipping: kept={len(kept)}"
-    got = ids(t.read_band(spark, "id", 100, 220))
+    got = ids(t.read_predicate(spark, {"id": (100, 220)}))
     want = ids(t.read(spark).filter("id BETWEEN 100 AND 220"))
     assert got == want == list(range(100, 221))
     # open bounds
-    assert ids(t.read_band(spark, "id", lo=950)) == list(range(950, 1000))
-    assert ids(t.read_band(spark, "id", hi=49)) == list(range(50))
+    assert ids(t.read_predicate(spark, {"id": (950, None)})) == list(
+        range(950, 1000)
+    )
+    assert ids(t.read_predicate(spark, {"id": (None, 49)})) == list(range(50))
 
 
 def test_prune_band_is_safe_without_stats(spark, tmp_path):
@@ -245,9 +247,9 @@ def test_prune_band_is_safe_without_stats(spark, tmp_path):
     m = json.load(open(path))
     del m["stats"]
     json.dump(m, open(path, "w"))
-    kept, skipped = t.prune_band("id", 0, 10)
+    kept, skipped = t.prune({"id": (0, 10)})
     assert skipped == [] and sorted(kept) == sorted(m["files"])
-    assert ids(t.read_band(spark, "id", 0, 10)) == list(range(11))
+    assert ids(t.read_predicate(spark, {"id": (0, 10)})) == list(range(11))
 
 
 def test_stats_survive_merge_and_optimize(spark, tmp_path):
@@ -265,9 +267,9 @@ def test_stats_survive_merge_and_optimize(spark, tmp_path):
     t.optimize(spark, n_files=4, zorder_by=["id"])
     m = t._manifest(t.latest_snapshot())
     assert set(m["stats"]) == set(m["files"])
-    kept, skipped = t.prune_band("id", 0, 99)
+    kept, skipped = t.prune({"id": (0, 99)})
     assert skipped, "z-ordered optimize should leave skippable bands"
-    assert ids(t.read_band(spark, "id", 0, 99)) == list(range(100))
+    assert ids(t.read_predicate(spark, {"id": (0, 99)})) == list(range(100))
 
 
 def test_stats_all_null_file_is_skipped_for_band(spark, tmp_path):
@@ -278,9 +280,34 @@ def test_stats_all_null_file_is_skipped_for_band(spark, tmp_path):
         ).coalesce(1)
     )
     t.append(_banded(spark, 0, 10, 1))
-    kept, skipped = t.prune_band("id", 0, 100)
+    kept, skipped = t.prune({"id": (0, 100)})
     assert len(skipped) == 1  # the all-null file can never match a band
-    assert ids(t.read_band(spark, "id", 0, 100)) == list(range(10))
+    assert ids(t.read_predicate(spark, {"id": (0, 100)})) == list(range(10))
+
+
+def test_every_leaf_kind_skips_all_null_file(spark, tmp_path):
+    """Equality, IN and degenerate-band leaves share one rule: none can
+    match NULL, so each skips the all-null file (no blooms involved) and
+    still reads exactly what the unpruned filter returns."""
+    t = TxTable(str(tmp_path / "t"))
+    t.append(
+        spark.createDataFrame(
+            [(None, 1)] * 10, "id bigint, v bigint"
+        ).coalesce(1)
+    )
+    null_file = t._manifest(t.latest_snapshot())["files"][0]
+    t.append(_banded(spark, 0, 10, 1))
+    for leaf, sql in (
+        (("=", 5), "id = 5"),
+        (("in", [5]), "id IN (5)"),
+        ((5, 5), "id BETWEEN 5 AND 5"),
+    ):
+        kept, skipped = t.prune({"id": leaf})
+        assert skipped == [null_file], leaf
+        assert len(kept) == 1 and null_file not in kept, leaf
+        got = sorted(t.read_predicate(spark, {"id": leaf}).collect())
+        assert got == sorted(t.read(spark).filter(sql).collect()), leaf
+        assert [r.id for r in got] == [5], leaf
 
 
 def test_read_band_on_date_column(spark, tmp_path):
@@ -296,9 +323,9 @@ def test_read_band_on_date_column(spark, tmp_path):
     ).repartitionByRange(5, "d").sortWithinPartitions("d")
     t.append(df)
     lo, hi = dt.date(2024, 2, 1), dt.date(2024, 2, 10)
-    kept, skipped = t.prune_band("d", lo, hi)
+    kept, skipped = t.prune({"d": (lo, hi)})
     assert skipped, "date bands should skip files"
-    got = sorted(r.d for r in t.read_band(spark, "d", lo, hi).collect())
+    got = sorted(r.d for r in t.read_predicate(spark, {"d": (lo, hi)}).collect())
     assert got[0] == lo and got[-1] == hi and len(got) == 10
 
 
@@ -312,8 +339,8 @@ def test_prune_bands_multi_column_zorder(spark, tmp_path):
     )
     t.append(df.repartition(1))
     t.optimize(spark, n_files=16, zorder_by=["x", "y"])
-    kept_x, _ = t.prune_band("x", 0, 15)
-    kept_both, skipped = t.prune_bands({"x": (0, 15), "y": (0, 15)})
+    kept_x, _ = t.prune({"x": (0, 15)})
+    kept_both, skipped = t.prune({"x": (0, 15), "y": (0, 15)})
     assert len(kept_both) <= len(kept_x)
     assert len(kept_both) + len(skipped) == 16
     assert len(kept_both) <= 4, f"z-order should isolate the quadrant: {len(kept_both)}"

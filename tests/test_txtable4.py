@@ -46,20 +46,20 @@ def test_bloom_skips_point_lookups_minmax_cannot(spark, tmp_path):
         st = m["stats"][f]["id"]
         assert st["min"] < 100 and st["max"] > N_FILES * PER_FILE - 100
         assert "bloom" in st
-    # a degenerate band IS an equality leaf: since r9 prune_band probes
+    # a degenerate band IS an equality leaf: the one leaf rule probes
     # the bloom for it (VERDICT r7 #4) — covered in depth by
     # test_band_read_equality_probes_bloom_like_prune_keys; a REAL band
     # stays stats-only and reads everything on this interleaved layout
-    band_kept, band_skipped = t.prune_band("id", 5_432, 5_433)
+    band_kept, band_skipped = t.prune({"id": (5_432, 5_433)})
     assert len(band_skipped) == 0
 
     total_kept = 0
     probes = [27, 123, 4_444, 9_979, 6_012, 5_432]
     for key in probes:
-        kept, skipped = t.prune_keys("id", [key])
+        kept, skipped = t.prune({"id": ("in", [key])})
         total_kept += len(kept)
         # zero false skips: the file that truly holds the key is kept
-        rows = t.read_keys(spark, "id", [key]).collect()
+        rows = t.read_predicate(spark, {"id": ("in", [key])}).collect()
         assert [(r.id, r.payload) for r in rows] == [(key, f"v{key}")]
         # parity with the unpruned read whatever the blooms say
         base = t.read(spark).filter(f"id = {key}").collect()
@@ -70,18 +70,19 @@ def test_bloom_skips_point_lookups_minmax_cannot(spark, tmp_path):
     assert 1 - total_kept / (len(probes) * N_FILES) >= 0.9
 
     # absent key: nothing read, nothing returned
-    kept, _ = t.prune_keys("id", [10**9])
+    kept, _ = t.prune({"id": ("in", [10**9])})
     assert len(kept) <= 2
-    assert t.read_keys(spark, "id", [10**9]).count() == 0
+    assert t.read_predicate(spark, {"id": ("in", [10**9])}).count() == 0
 
 
 def test_bloom_multi_value_probe_unions_files(spark, tmp_path):
     t = _build(spark, tmp_path / "t")
     keys = [0, 1, 2]  # three different residues → three files
-    kept, _ = t.prune_keys("id", keys)
+    kept, _ = t.prune({"id": ("in", keys)})
     assert 3 <= len(kept) <= 5
     got = sorted(
-        (r.id, r.payload) for r in t.read_keys(spark, "id", keys).collect()
+        (r.id, r.payload)
+        for r in t.read_predicate(spark, {"id": ("in", keys)}).collect()
     )
     assert got == [(k, f"v{k}") for k in keys]
 
@@ -96,14 +97,14 @@ def test_bloom_carried_across_optimize_and_restore(spark, tmp_path):
     assert len(m["files"]) <= 6
     assert all("bloom" in m["stats"][f]["id"] for f in m["files"])
     # z-order clustering makes min/max effective AND blooms still probe
-    rows = t.read_keys(spark, "id", [4_444]).collect()
+    rows = t.read_predicate(spark, {"id": ("in", [4_444])}).collect()
     assert [(r.id, r.payload) for r in rows] == [(4_444, "v4444")]
     # RESTORE re-points at the old files — their blooms come back via
     # the stats carry, and skipping still works
     t.restore(pre)
-    kept, skipped = t.prune_keys("id", [4_444])
+    kept, skipped = t.prune({"id": ("in", [4_444])})
     assert len(kept) <= 2 and len(skipped) >= N_FILES - 2
-    rows = t.read_keys(spark, "id", [4_444]).collect()
+    rows = t.read_predicate(spark, {"id": ("in", [4_444])}).collect()
     assert [(r.id, r.payload) for r in rows] == [(4_444, "v4444")]
 
 
@@ -133,13 +134,13 @@ def test_bloom_prunes_merge_discovery_scan(spark, tmp_path):
 
 
 def test_bloomless_writers_and_saturation_stay_safe(spark, tmp_path):
-    # writer WITHOUT bloom_columns: no blooms, prune_keys keeps all
+    # writer WITHOUT bloom_columns: no blooms, an IN leaf keeps all
     t0 = TxTable(str(tmp_path / "plain"))
     t0.append(_mk(spark, 0).coalesce(1))
     t0.append(_mk(spark, 1).coalesce(1))
     m = t0._manifest(t0.latest_snapshot())
     assert all("bloom" not in (m["stats"][f].get("id") or {}) for f in m["files"])
-    kept, skipped = t0.prune_keys("id", [20])
+    kept, skipped = t0.prune({"id": ("in", [20])})
     assert skipped == [] and len(kept) == 2
 
     # saturated bitmap (too many distinct values for the bits) is
@@ -153,7 +154,7 @@ def test_bloomless_writers_and_saturation_stay_safe(spark, tmp_path):
     m1 = t1._manifest(t1.latest_snapshot())
     f = m1["files"][0]
     assert "bloom" not in m1["stats"][f]["id"]
-    kept, skipped = t1.prune_keys("id", [17])
+    kept, skipped = t1.prune({"id": ("in", [17])})
     assert skipped == [] and kept == [f]
 
 
@@ -166,9 +167,9 @@ def test_bloom_string_keys_and_cross_writer_reads(spark, tmp_path):
         )
     # a bloom-unaware READER instance still prunes from the manifest
     reader = TxTable(t.root)
-    kept, skipped = reader.prune_keys("k", ["key-00123"])
+    kept, skipped = reader.prune({"k": ("in", ["key-00123"])})
     assert len(kept) <= 2 and len(skipped) >= 6
-    got = reader.read_keys(spark, "k", ["key-00123"]).collect()
+    got = reader.read_predicate(spark, {"k": ("in", ["key-00123"])}).collect()
     assert [(r.k, r.part) for r in got] == [("key-00123", 123 % 8)]
 
 
@@ -186,37 +187,37 @@ def test_bloom_log_stays_kb_scale(spark, tmp_path):
 
 def test_band_read_equality_probes_bloom_like_prune_keys(spark, tmp_path):
     """VERDICT r7 #4: a DEGENERATE band (lo == hi) is an equality leaf —
-    prune_band must skip exactly the files prune_keys skips for that
+    prune must skip exactly the files an IN leaf skips for that
     value (min/max bands prune nothing here: ids interleave across
     every file), with zero false skips."""
     t = _build(spark, tmp_path / "t")
     key = 7_777  # lives in file id % 20 == 17
-    kept_k, skipped_k = t.prune_keys("id", [key])
-    kept_b, skipped_b = t.prune_band("id", lo=key, hi=key)
+    kept_k, skipped_k = t.prune({"id": ("in", [key])})
+    kept_b, skipped_b = t.prune({"id": (key, key)})
     assert set(kept_b) == set(kept_k)
     assert set(skipped_b) == set(skipped_k)
     assert len(skipped_b) >= N_FILES - 2  # blooms actually bit
     # zero false skips: the banded read returns exactly the row
-    got = t.read_band(spark, "id", lo=key, hi=key).collect()
+    got = t.read_predicate(spark, {"id": (key, key)}).collect()
     assert [(r.id, r.payload) for r in got] == [(key, f"v{key}")]
     # a REAL band (lo < hi) must not consult blooms (they cannot
     # serve ranges): nothing skipped on the interleaved layout
-    kept_r, skipped_r = t.prune_band("id", lo=100, hi=200)
+    kept_r, skipped_r = t.prune({"id": (100, 200)})
     assert not skipped_r and len(kept_r) == N_FILES
 
 
 def test_prune_bands_equality_and_in_leaves(spark, tmp_path):
-    """prune_bands' op-tagged leaves: ('=', v) and ('in', [..]) compose
+    """prune's op-tagged leaves: ('=', v) and ('in', [..]) compose
     bloom + min/max skipping with plain band leaves under AND, and
     read_predicate returns exactly read().filter(...)."""
     t = _build(spark, tmp_path / "t")
-    kept, skipped = t.prune_bands({"id": ("=", 4_242)})
-    k2, s2 = t.prune_keys("id", [4_242])
+    kept, skipped = t.prune({"id": ("=", 4_242)})
+    k2, s2 = t.prune({"id": ("in", [4_242])})
     assert set(kept) == set(k2) and set(skipped) == set(s2)
-    kept_in, _ = t.prune_bands({"id": ("in", [4_242, 4_243])})
-    assert set(kept_in) == set(t.prune_keys("id", [4_242, 4_243])[0])
+    kept_in, _ = t.prune({"id": ("in", [4_242, 4_243])})
+    assert set(kept_in) == set(t.prune({"id": ("in", [4_242, 4_243])})[0])
     # conjunction with a band leaf can only shrink the kept set
-    kept_and, _ = t.prune_bands(
+    kept_and, _ = t.prune(
         {"id": ("in", [4_242, 4_243]), "payload": ("v4242", "v4243")}
     )
     assert set(kept_and) <= set(kept_in)

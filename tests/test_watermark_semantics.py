@@ -42,7 +42,7 @@ def _rows(spark, specs):
 def _run(spark, landing, sink, ckpt):
     stream = spark.readStream.schema(_SCHEMA).parquet(landing)
     q = (
-        tumbling_event_counts(stream, "1 hour", "30 minutes")
+        tumbling_event_counts(stream)
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
