@@ -75,15 +75,6 @@ class SnapshotUnavailable(Exception):
     (never written, or reclaimed by vacuum)."""
 
 
-class AlreadyStaged(ValueError):
-    """``stage_wap`` found pending state under this wap_id — a crashed
-    earlier attempt staged it; audit THOSE files instead of re-staging.
-    Subclasses ValueError so pre-existing broad handlers keep working,
-    but callers should catch this type: a broad ``except ValueError``
-    around the transform + stage swallows genuine transform errors
-    (ADVICE r8)."""
-
-
 class ConstraintViolation(Exception):
     """Rows being written violate a registered CHECK constraint — the
     commit is refused and the table is untouched (staged files become
@@ -394,7 +385,8 @@ class TxTable:
         specs:
 
         - ``(lo, hi)`` — band ``lo <= col <= hi``, a None bound is open;
-          a degenerate band (``lo == hi``) is an equality leaf;
+          no leaf matches NULL, so ``(None, None)`` is ``col IS NOT
+          NULL``; a degenerate band (``lo == hi``) is an equality leaf;
         - ``("in", [v, ...])`` — IN list;
         - ``("=", v)`` — equality, the same rule as ``("in", [v])``.
 
@@ -415,7 +407,7 @@ class TxTable:
         lo_n, hi_n = cls._stats_norm(lo), cls._stats_norm(hi)
 
         def band(c: Column) -> Column:
-            cond = F.lit(True)
+            cond = c.isNotNull()
             if lo is not None:
                 cond = cond & (c >= F.lit(lo))
             if hi is not None:
@@ -1075,7 +1067,7 @@ class TxTable:
         audit step may be what decides the data is acceptable)."""
         path = self._wap_path(wap_id)
         if os.path.exists(path):
-            raise AlreadyStaged(f"wap_id {wap_id!r} already staged")
+            raise ValueError(f"wap_id {wap_id!r} already staged")
         files, n, stats = self._stage(df, enforce=False)
         pending = {
             "wap_id": wap_id,
@@ -1088,7 +1080,7 @@ class TxTable:
         try:
             self._claim(path, pending)
         except FileExistsError as e:
-            raise AlreadyStaged(f"wap_id {wap_id!r} already staged") from e
+            raise ValueError(f"wap_id {wap_id!r} already staged") from e
 
     def _wap_pending(self, wap_id: str) -> dict:
         path = self._wap_path(wap_id)

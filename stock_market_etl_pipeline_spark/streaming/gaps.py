@@ -153,8 +153,8 @@ def start_event_feed_ingest(
       by bounded watermark state — a duplicate reaching the gap monitor
       after its user's state advanced would re-emit a spurious gap;
     - each availableNow drain lands as a single ``batch-<id>`` drop
-      (overwrite into a batch-keyed dir = replay-idempotent, the
-      ingest.start_pipeline_stream exactly_once pattern), so however
+      (overwrite into a batch-keyed dir = replay-idempotent, as
+      ingest.start_pipeline_stream's sink is), so however
       disordered the landing files were, the monitor sees them as one
       batch and its in-kernel sort restores order;
     - events later than the watermark horizon are the composition's

@@ -5,27 +5,37 @@ per symbol with overlap, then dedups on (symbol, date)
 (``scheduler.py:110``, ``src/load.py:252``, ``src/transform.py:199-204``;
 SURVEY.md §2.10). Here that becomes a continuous micro-batch stream:
 
-    landing dir (JSON drops) → readStream → clean → watermarked
-    keep-last dedup → foreachBatch upsert into a parquet/Delta-style sink
+    landing dir (JSON drops) → readStream → watermarked dedup →
+    foreachBatch: clean → enrich → quality gate → batch-keyed sink
 
 - The watermark bounds dedup state: late duplicates older than the horizon
   age out of state instead of accumulating forever (the unbounded-state
   bug a naive dropDuplicates would have at 100 TB).
-- ``dropDuplicatesWithinWatermark`` keeps the FIRST arrival; the
-  reference's keep-LAST semantics are preserved by the foreachBatch merge,
-  which applies per-batch keep-last against the sink (same tiebreak as
-  operators/clean.py::dedup_keep_last).
+- ``dropDuplicatesWithinWatermark`` keeps the FIRST arrival across
+  batches; inside a batch the reference's keep-LAST tiebreak applies
+  (operators/clean.py::dedup_keep_last).
+- The quality-gated ingests (``start_pipeline_stream``,
+  ``start_wap_gated_ingest``) share one body: stage, observe, route. A
+  micro-batch is written once with the quality suite observed on that
+  write, then moved whole to the sink or to quarantine. Both keep their
+  output by batch id (a ``batch_id=N`` directory, a ``wapgate-N`` txn),
+  so a replayed batch replaces or skips its own output: exactly-once
+  under foreachBatch's at-least-once delivery.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.clean import clean_quotes, dedup_keep_last
 from ..operators.enrich import enrich
-from ..operators.txtable import AlreadyStaged, TxTable
-from ..plans.quality import run_quality_suite, stock_quality_checks
+from ..operators.txtable import TxTable
+from ..plans.quality import observe_suite, score_suite, stock_quality_checks
 from ..schema import RAW_QUOTE_SCHEMA
 from .drive import drain
 
@@ -95,56 +105,23 @@ def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
     return stream.join(F.broadcast(dim), "symbol", "left")
 
 
-def _gate_and_write(sink_dir: str, quarantine_dir: str, exactly_once: bool):
-    """The per-micro-batch quality gate: clean + enrich the batch, run the
-    one-pass quality suite on it, and write it whole to the sink if it
-    meets the ≥90% threshold, else to ``quarantine_dir/batch_id=N``.
-    Blind append, unless ``exactly_once``: then the batch overwrites its
-    own ``batch_id=N`` directory (see start_pipeline_stream)."""
-
-    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        enriched = _enrich_batch(batch_df).cache()
-        try:
-            ok, _rate, _results = run_quality_suite(
-                enriched, stock_quality_checks()
-            )
-            quarantine = f"{quarantine_dir}/batch_id={batch_id}"
-            if exactly_once:
-                target = f"{sink_dir}/batch_id={batch_id}" if ok else quarantine
-                mode = "overwrite"
-            else:
-                target = sink_dir if ok else quarantine
-                mode = "append"
-            enriched.write.mode(mode).partitionBy("symbol").parquet(target)
-        finally:
-            enriched.unpersist()
-
-    return gate_batch
-
-
-def start_gated_quote_ingest(
-    spark: SparkSession,
-    landing_dir: str,
-    sink_dir: str,
-    quarantine_dir: str,
-    checkpoint_dir: str,
-):
-    """Quality-gated streaming ingest: the batch pipeline's ≥90% validation
-    gate (reference ``src/pipeline.py:227-251``) applied per micro-batch.
-
-    Each micro-batch is cleaned + enriched, then run through the one-pass
-    quality suite; batches meeting the threshold append to the sink, the
-    rest divert whole to a quarantine directory with the batch id — bad
-    feeds never contaminate the serving table, and nothing is silently
-    dropped. Returns the StreamingQuery.
-    """
-    return drain(
-        _quote_landing(spark, landing_dir),
-        checkpoint_dir,
-        _gate_and_write(sink_dir, quarantine_dir, exactly_once=False),
-    )
+def _stage_observed(
+    batch_df: DataFrame, stage: Callable[[DataFrame], None]
+) -> bool | None:
+    """The quality gate's one write: ``stage`` writes the cleaned and
+    enriched batch with the one-pass quality suite observed on it
+    (``plans/quality.observe_suite``, as ``run_pipeline`` does), so the
+    audit reads no data of its own. Returns None for an empty batch,
+    else whether it met the ≥90% threshold (reference
+    ``src/pipeline.py:227-251``)."""
+    checks = stock_quality_checks()
+    obs = Observation()
+    enriched = _enrich_batch(batch_df)
+    stage(observe_suite(enriched, obs, checks))
+    metrics = obs.get
+    if metrics["__total"] == 0:
+        return None
+    return score_suite(metrics, checks, enriched.columns)[0]
 
 
 def start_pipeline_stream(
@@ -153,7 +130,6 @@ def start_pipeline_stream(
     sink_dir: str,
     quarantine_dir: str,
     checkpoint_dir: str,
-    exactly_once: bool = False,
 ):
     """The WHOLE batch pipeline as one streaming composition:
 
@@ -168,21 +144,42 @@ def start_pipeline_stream(
     reference's daily rerun-over-recent-history model, where each drop
     carries the full lookback window it needs (scheduler.py:110).
 
-    ``exactly_once=True`` makes the sink write REPLAY-IDEMPOTENT: each
-    micro-batch overwrites its own ``batch_id=N`` subdirectory instead of
-    blind-appending to the sink root. foreachBatch gives at-least-once
-    delivery — a crash between the sink write and the checkpoint commit
-    replays the batch on restart, and an append sink would duplicate every
-    row (proven in tests/test_streaming_pipeline_e2e.py). Keyed-by-batch
-    overwrite makes the replay write the SAME directory with the SAME
-    deterministic content: exactly-once by idempotence, the parquet-sink
-    analog of a transactional MERGE. Readers see batch_id as an ordinary
-    partition column.
+    Each micro-batch is one Spark job: stage, observe, route. The batch
+    is written once to ``sink_dir/_staging/batch_id=N`` with the quality
+    suite observed on that write, then the staged directory is renamed
+    to ``batch_id=N`` under the sink (pass) or ``quarantine_dir`` (fail).
+    An empty batch still runs its write, which keeps the dedup state
+    store's version chain intact, and then leaves nothing behind.
+
+    The sink is exactly-once by idempotence. foreachBatch delivers at
+    least once: a crash between the rename and the checkpoint commit
+    replays the batch with the same id and the same deterministic rows,
+    and the replay replaces the same ``batch_id=N`` directory (Structured
+    Streaming, SIGMOD 2018: exactly-once needs an idempotent sink).
+    Readers see ``batch_id`` as an ordinary partition column; the
+    ``_staging`` directory is hidden from Spark and pyarrow readers.
     """
+
+    def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
+        part = f"batch_id={batch_id}"
+        staging = os.path.join(sink_dir, "_staging", part)
+        ok = _stage_observed(
+            batch_df,
+            lambda df: df.write.mode("overwrite")
+            .partitionBy("symbol")
+            .parquet(staging),
+        )
+        if ok is None:
+            shutil.rmtree(staging)
+            return
+        root = sink_dir if ok else quarantine_dir
+        os.makedirs(root, exist_ok=True)
+        target = os.path.join(root, part)
+        shutil.rmtree(target, ignore_errors=True)
+        os.rename(staging, target)
+
     return drain(
-        dedup_stream(_quote_landing(spark, landing_dir)),
-        checkpoint_dir,
-        _gate_and_write(sink_dir, quarantine_dir, exactly_once),
+        dedup_stream(_quote_landing(spark, landing_dir)), checkpoint_dir, gate_batch
     )
 
 
@@ -194,25 +191,25 @@ def start_wap_gated_ingest(
     checkpoint_dir: str,
 ):
     """The quality gate as WRITE-AUDIT-PUBLISH into transactional
-    tables: each micro-batch is cleaned + enriched, STAGED invisibly
-    into the serving TxTable (operators/txtable.stage_wap), audited by
-    the one-pass quality suite READING THE STAGED FILES (staging is the
-    single materialization — no cache/unpersist dance), then atomically
-    published (txn_id-idempotent) or diverted whole to a quarantine
-    TxTable. start_gated_quote_ingest writes raw parquet directories;
-    this is the same ≥90% gate (reference ``src/pipeline.py:227-251``)
-    upgraded to the lakehouse contract: readers of the serving table see
-    a batch entirely or not at all, at EVERY crash point —
+    tables, with the same stage, observe, route body as
+    start_pipeline_stream: each micro-batch is cleaned, enriched and
+    STAGED invisibly into the serving TxTable (operators/txtable.stage_wap)
+    with the quality suite observed on that write, then atomically
+    published (txn_id-idempotent) or copied whole to a quarantine
+    TxTable. start_pipeline_stream renames parquet directories; this is
+    the same ≥90% gate upgraded to the lakehouse contract: readers of the
+    serving table see a batch entirely or not at all, at EVERY crash
+    point —
 
     - crash before/during stage: unreferenced orphans, vacuum sweeps;
-    - crash after stage, before the audit/publish: the replay finds the
-      pending marker and audits THE SAME staged files (stage_wap is
-      wap_id-idempotent here by reuse, not re-write);
+    - crash after stage, before publish/quarantine: the replay drops the
+      pending marker (its files become orphans) and stages again, so an
+      observation is attached to exactly one write per delivery;
     - crash after publish/quarantine-append, before the checkpoint
       commit: the replay sees the txn marker on whichever table won and
-      drops the stale pending marker without recomputing anything —
-      decisions are never re-derived against moved state (the
-      semantic_dedup ADVICE-r7 lesson applied at design time).
+      stops without recomputing anything — decisions are never
+      re-derived against moved state (the semantic_dedup ADVICE-r7
+      lesson applied at design time).
 
     Returns the started StreamingQuery (availableNow).
     """
@@ -220,32 +217,24 @@ def start_wap_gated_ingest(
     quarantine = TxTable(quarantine_root)
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         txn = f"wapgate-{batch_id}"
         wap = f"gate-{batch_id}"
-        if table.txn_committed(txn) or quarantine.txn_committed(txn):
-            # this batch already landed on a previous delivery; a crash
-            # between the commit and the marker cleanup may have left a
-            # stale pending WAP — drop it, never re-audit
-            try:
-                table.abort_wap(wap)
-            except ValueError:
-                pass
-            return
         try:
-            table.stage_wap(_enrich_batch(batch_df), wap)
-        except AlreadyStaged:
-            pass  # staged by a crashed earlier attempt: audit those files
-        staged = table.read_wap(spark, wap)
-        ok, _rate, _results = run_quality_suite(staged, stock_quality_checks())
-        if ok:
+            table.abort_wap(wap)  # left pending by an earlier delivery
+        except ValueError:
+            pass
+        if table.txn_committed(txn) or quarantine.txn_committed(txn):
+            return
+        ok = _stage_observed(batch_df, lambda df: table.stage_wap(df, wap))
+        if ok is None:
+            table.abort_wap(wap)
+        elif ok:
             table.publish_wap(spark, wap, txn_id=txn)
         else:
             # copy staged rows to quarantine FIRST, then release the
             # staged files (replay after a crash in between is caught
             # by the quarantine txn marker above)
-            quarantine.append(staged, txn_id=txn)
+            quarantine.append(table.read_wap(spark, wap), txn_id=txn)
             table.abort_wap(wap)
 
     return drain(_quote_landing(spark, landing_dir), checkpoint_dir, gate_batch)

@@ -38,27 +38,3 @@ def test_readme_query_counts_match_registry():
 
     m = re.search(r"`-m oracle`: all\s+(\d+) queries", text)
     assert m and int(m.group(1)) == n_queries
-
-
-def test_readme_pytest_count_matches_collection():
-    """The README's default-suite test count rotted r5→r6 (494 vs 497)
-    because only registry counts were derived; derive the pytest count
-    the same way via a collect-only subprocess (≈3 s — collection never
-    starts Spark)."""
-    import subprocess
-    import sys
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    out = subprocess.run(
-        [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
-        cwd=root, capture_output=True, text=True, timeout=300,
-    ).stdout
-    m = re.search(r"(\d+)/\d+ tests collected", out)
-    assert m, f"could not parse collection output tail: {out[-300:]}"
-    n_default = int(m.group(1))
-    stated = re.search(r"tests/\s+(\d+) pytest cases", _readme_text())
-    assert stated, "README layout block must state '<N> pytest cases'"
-    assert int(stated.group(1)) == n_default, (
-        f"README says {stated.group(1)} pytest cases; collection finds "
-        f"{n_default} (default suite, oracle marker excluded)"
-    )

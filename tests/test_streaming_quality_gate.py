@@ -1,4 +1,4 @@
-"""Per-micro-batch quality gate (streaming/ingest.py::start_gated_quote_ingest):
+"""Per-micro-batch quality gate (streaming/ingest.py::start_pipeline_stream):
 healthy batches land in the sink, failing batches divert whole to
 quarantine — the reference's ≥90% validation gate applied continuously."""
 
@@ -6,7 +6,7 @@ import os
 
 from stock_market_etl_pipeline_spark.schema import RAW_QUOTE_SCHEMA
 from stock_market_etl_pipeline_spark.streaming.ingest import (
-    start_gated_quote_ingest,
+    start_pipeline_stream,
 )
 
 from conftest import make_raw_rows
@@ -28,7 +28,7 @@ def _drop(spark, rows, landing, name):
 
 
 def _ingest(spark, landing, sink, quarantine, ckpt):
-    q = start_gated_quote_ingest(spark, landing, sink, quarantine, ckpt)
+    q = start_pipeline_stream(spark, landing, sink, quarantine, ckpt)
     q.awaitTermination(120)
 
 

@@ -310,6 +310,27 @@ def test_every_leaf_kind_skips_all_null_file(spark, tmp_path):
         assert [r.id for r in got] == [5], leaf
 
 
+def test_open_band_reads_non_null_rows_of_every_file(spark, tmp_path):
+    """The open band ``(None, None)`` means ``c IS NOT NULL`` in both the
+    skipping rule and the residual: the all-null file is skipped and the
+    mixed file's NULL rows are filtered, so no NULL row survives anywhere."""
+    t = TxTable(str(tmp_path / "t"))
+    schema = "c bigint, v bigint"
+    t.append(spark.createDataFrame([(None, i) for i in range(3)], schema).coalesce(1))
+    t.append(
+        spark.createDataFrame(
+            [(None, 3), (1, 4), (None, 5), (2, 6)], schema
+        ).coalesce(1)
+    )
+    assert t.read(spark).count() == 7
+    got = sorted(t.read_predicate(spark, {"c": (None, None)}).collect(), key=lambda r: r.v)
+    want = sorted(
+        t.read(spark).filter(F.col("c").isNotNull()).collect(), key=lambda r: r.v
+    )
+    assert got == want
+    assert [r.v for r in got] == [4, 6]
+
+
 def test_read_band_on_date_column(spark, tmp_path):
     import datetime as dt
 
