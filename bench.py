@@ -39,7 +39,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from stock_market_etl_pipeline_spark import registry  # noqa: E402
+from stock_market_etl_pipeline_spark import obs, registry  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -171,9 +171,10 @@ def run_loop(
             assert spark.sparkContext._jsc.sc().getPersistentRDDs().isEmpty(), \
                 "cached relations present at uncached-phase start"
         for name in raw:
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            raw[name].append(round(time.perf_counter() - t0, 3))
+            with obs.labelled(spark, name):
+                t0 = time.perf_counter()
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                raw[name].append(round(time.perf_counter() - t0, 3))
     return {n: min(reps) for n, reps in raw.items()}, raw
 
 
@@ -200,7 +201,8 @@ def main() -> None:
     # it, but a retry pass shouldn't re-pay compilation either.)
     for name in HEADLINE:
         if name in qs:
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            with obs.labelled(spark, name):
+                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     def probe_factor(reps: list[float]) -> float:
         # min-of-reps, matching the historical lf_phases semantics: the

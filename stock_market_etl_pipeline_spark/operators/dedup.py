@@ -390,18 +390,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def jaccard_pairs_from_shingles(
-    sh: DataFrame, threshold: float = 0.5
-) -> DataFrame:
-    """Exact-Jaccard near-dup pairs over a prebuilt (doc_id, shingle) table.
-
-    Thin wrapper building the inverted index first; callers that can
-    materialize the (much smaller) bucket table instead of the shingle
-    rows — corpus_prep — use :func:`jaccard_pairs_from_buckets` directly.
-    """
-    return jaccard_pairs_from_buckets(shingle_buckets(sh), threshold)
-
-
 def jaccard_pairs_from_buckets(
     buckets: DataFrame, threshold: float = 0.5
 ) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import obs
 from .io_sink import write_parquet
 from .operators.clean import clean_quotes
 from .operators.enrich import enrich
@@ -64,7 +65,8 @@ def health_check(spark: SparkSession) -> bool:
     """S14: SELECT 1 liveness probe (reference ``dashboard/app.py:125-137``
     pings the database the same way before rendering)."""
     try:
-        return spark.sql("SELECT 1 AS ok").collect()[0]["ok"] == 1
+        with obs.labelled(spark, "pipeline.health_check"):
+            return spark.sql("SELECT 1 AS ok").collect()[0]["ok"] == 1
     except Exception:  # noqa: BLE001
         return False
 
@@ -109,7 +111,8 @@ def run_pipeline(
     quality_obs = Observation("quality")
     # reference proceeds to load even on warning (pipeline.py:244), so the
     # gate is observed on the write instead of run before it
-    write_parquet(observe_suite(enriched, quality_obs, checks), sink_path)
+    with obs.labelled(spark, "pipeline.write"):
+        write_parquet(observe_suite(enriched, quality_obs, checks), sink_path)
     metrics = quality_obs.get
     ok, rate, results = score_suite(metrics, checks, enriched.columns)
     if report_path:

@@ -22,12 +22,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tables import load_table
+
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Self-sufficient: the driver passes its own SparkSession, which won't
     # have session.py's config. The conf is runtime-settable.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     ts_type = ev.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         ev = ev.withColumn(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_hash60
+from .tables import load_table
 
 TWO_60 = float(1 << 60)
 
@@ -56,12 +57,12 @@ def company_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier × broadcast(nation) for name/country; hash-derived sector,
     industry, market cap, P/E, dividend yield, and 52-week price range.
     """
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    sup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("symbol"),
         F.col("s_name").alias("company_name"),
         "s_nationkey",
     )
-    nat = spark.read.parquet(f"{sf_dir}/nation.parquet").select(
+    nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", F.col("n_name").alias("country")
     )
     sym = F.col("symbol").cast("string")

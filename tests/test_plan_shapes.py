@@ -1102,6 +1102,17 @@ def test_run_pipeline_is_one_write_without_caches(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert (result.records_loaded, result.corrupt_records) == (30, 1)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+    # each job names its stage: the probe, then the write's two
+    tracker = sc._jsc.sc().statusTracker()
+    stage_of = {
+        job: tag
+        for tag in ("pipeline.health_check", "pipeline.write")
+        for job in tracker.getJobIdsForTag(tag)
+    }
+    assert [
+        stage_of.get(job)
+        for job in sorted(sc.statusTracker().getJobIdsForGroup(group))
+    ] == ["pipeline.health_check", "pipeline.write", "pipeline.write"]
     # earlier tests' RDDs may be cleaned meanwhile; none may be added
     assert not set(sc._jsc.getPersistentRDDs().keySet()) - persisted
     plan = executed_plan_of_last_write(spark)

@@ -22,12 +22,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from stock_market_etl_pipeline_spark.obs import profile  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
 from stock_market_etl_pipeline_spark.sources.tables import load_table  # noqa: E402
 
@@ -55,14 +55,11 @@ def time_join(spark, fact, dim, hint: str) -> float:
         joined = fact.join(F.broadcast(dim), "l_partkey")
     else:
         joined = fact.hint("merge").join(dim.hint("merge"), "l_partkey")
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        joined.groupBy("bucket").agg(
-            F.sum("l_quantity").alias("q")
-        ).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
+    query = joined.groupBy("bucket").agg(F.sum("l_quantity").alias("q"))
+    return min(
+        profile(spark, f"broadcast_probe.{hint}", lambda: query)["wall_s"]
+        for _ in range(2)
+    )
 
 
 def main() -> None:

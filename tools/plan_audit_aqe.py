@@ -30,6 +30,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from stock_market_etl_pipeline_spark import registry  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
 
+from plan_audit import node_count  # noqa: E402  (tools/ is the script dir)
+
 HEADLINE = [
     "ticks_ohlcv", "enriched_features", "pricing_summary",
     "revenue_by_nation", "performance_summary", "predictions",
@@ -38,10 +40,6 @@ HEADLINE = [
     "text_stats", "sessionize_events", "gap_fill_forward", "corpus_prep",
     "priority_revenue",
 ]
-
-
-def node_count(plan: str, name: str) -> int:
-    return len(re.findall(rf"^\(\d+\) {re.escape(name)}\s*$", plan, re.M))
 
 
 def final_plan(spark, df) -> str:

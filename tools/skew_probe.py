@@ -40,12 +40,14 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stock_market_etl_pipeline_spark import registry  # noqa: E402
+from stock_market_etl_pipeline_spark.obs import profile  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
+
+from plan_audit_aqe import final_plan  # noqa: E402  (tools/ is the script dir)
 
 PROBE = [
     # aggregation family (map-side combine should absorb the hot key)
@@ -65,23 +67,12 @@ PROBE = [
 ]
 
 
-def wall(spark, fn, sf_dir: str) -> float:
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 2)
-
-
-def final_plan(spark, df) -> str:
-    qe = df._jdf.queryExecution()
-    qe.toRdd().count()
-    return qe.explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+def wall(spark, name: str, fn, sf_dir: str) -> float:
+    """Min wall of two profiled runs (build + noop-sink write)."""
+    return round(min(
+        profile(spark, name, lambda: fn(spark, sf_dir))["wall_s"]
+        for _ in range(2)
+    ), 2)
 
 
 def main() -> None:
@@ -103,8 +94,8 @@ def main() -> None:
     print("|---|---|---|---|---|---|")
     degraded = []
     for name in probe:
-        t_base = wall(spark, qs[name], base)
-        t_skew = wall(spark, qs[name], skew)
+        t_base = wall(spark, name, qs[name], base)
+        t_skew = wall(spark, name, qs[name], skew)
         p = final_plan(spark, qs[name](spark, skew))
         n_split = len(re.findall(r"skew=true", p))
         aqe_reads = len(re.findall(r"^\(\d+\) AQEShuffleRead", p, re.M))
@@ -130,7 +121,7 @@ def main() -> None:
         spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
         try:
             for name in degraded:
-                t_forced = wall(spark, qs[name], skew)
+                t_forced = wall(spark, name, qs[name], skew)
                 p = final_plan(spark, qs[name](spark, skew))
                 n_split = len(re.findall(r"skew=true", p))
                 print(f"| {name} | {t_forced} | {n_split} |")

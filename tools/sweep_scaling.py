@@ -28,11 +28,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stock_market_etl_pipeline_spark import registry  # noqa: E402
+from stock_market_etl_pipeline_spark.obs import profile  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
 
 DEFAULT_QUERIES = [
@@ -211,13 +211,12 @@ DEFAULT_QUERIES = [
 ]
 
 
-def time_query(spark, fn, sf_dir: str, reps: int = 2) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+def time_query(spark, name: str, fn, sf_dir: str) -> float:
+    """Min wall of two profiled runs (build + noop-sink write)."""
+    return min(
+        profile(spark, name, lambda: fn(spark, sf_dir))["wall_s"]
+        for _ in range(2)
+    )
 
 
 BASELINE_PATH = os.path.join(
@@ -251,8 +250,8 @@ def main() -> None:
         if n not in qs:
             print(f"?? unknown query {n}", file=sys.stderr)
             continue
-        t_small = time_query(spark, qs[n], small)
-        t_big = time_query(spark, qs[n], big)
+        t_small = time_query(spark, n, qs[n], small)
+        t_big = time_query(spark, n, qs[n], big)
         out[n] = {
             "small_s": t_small,
             "big_s": t_big,
