@@ -26,22 +26,20 @@ def write_jdbc(
     df: DataFrame,
     url: str,
     table: str,
-    batchsize: int = 1000,
-    num_partitions: int = 8,
-    mode: str = "append",
     **options: str,
 ) -> None:
-    """S6: chunked JDBC append — writer-side batchsize replaces the
-    reference's manual 1000-row chunk loop; numPartitions bounds concurrent
-    connections so the database isn't overwhelmed (SURVEY.md §4)."""
+    """S6: chunked JDBC append — a writer-side batchsize of 1000 replaces
+    the reference's manual 1000-row chunk loop; 8 write partitions bound
+    the concurrent connections so the database isn't overwhelmed
+    (SURVEY.md §4)."""
     (
-        df.repartition(num_partitions)
+        df.repartition(8)
         .write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("batchsize", str(batchsize))
+        .option("batchsize", "1000")
         .options(**options)
-        .mode(mode)
+        .mode("append")
         .save()
     )
 
@@ -50,14 +48,13 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_by: str,
-    n_buckets: int = 16,
 ) -> None:
-    """Bucketed managed table: pre-shuffled storage layout so repeated
-    joins/aggregations on the bucket key skip the exchange entirely —
+    """Bucketed managed table (16 buckets): pre-shuffled storage layout so
+    repeated joins/aggregations on the bucket key skip the exchange entirely —
     the storage-level answer to 'this join shuffles every run' at 100 TB.
     Requires a metastore-backed saveAsTable (works with the default local
     warehouse)."""
-    (df.write.mode("overwrite").bucketBy(n_buckets, bucket_by)
+    (df.write.mode("overwrite").bucketBy(16, bucket_by)
      .format("parquet").saveAsTable(table))
 
 

@@ -61,19 +61,18 @@ def exact_duplicate_groups(docs: DataFrame, with_doc_ids: bool = False) -> DataF
     return groups
 
 
-def _spread(docs: DataFrame) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Small parquet inputs arrive as ONE split → one task would do all the
-    hashing. Fan the rows across the cluster before the per-row expression
-    work; at real scale the input has many splits and this is a no-op cost
-    (one narrow-ish shuffle of raw docs vs serial md5 of every shingle).
+    per-row work (md5 of every shingle, every dot product). Fan the rows
+    across the cluster first; at real scale the input has many splits and
+    this is a no-op cost (one narrow-ish shuffle of the raw rows).
 
     Floored at the input's current partition count so this single-file fix
     can never REPARTITION A LARGE INPUT DOWN: a 200-split scan on a small
     cluster keeps its 200 partitions (`getNumPartitions` is plan metadata —
     no job runs)."""
-    sc = docs.sparkSession.sparkContext
-    target = max(sc.defaultParallelism, docs.rdd.getNumPartitions())
-    return docs.repartition(target)
+    sc = df.sparkSession.sparkContext
+    return df.repartition(max(sc.defaultParallelism, df.rdd.getNumPartitions()))
 
 
 def plant_exact_duplicates(
@@ -550,26 +549,24 @@ def minhash_lsh_candidates(
     return bucket_pairs(banded, ["band", "band_sig"])
 
 
-def incremental_minhash_candidates(
-    banded: DataFrame, is_new, out: tuple[str, str] = ("doc_a", "doc_b")
-) -> DataFrame:
+def incremental_minhash_candidates(banded: DataFrame, is_new) -> DataFrame:
     """Candidate pairs between NEW docs and the EXISTING corpus only:
     equi-join the new side's band signatures against the old side's — the
     corpus never self-joins, so a daily batch costs |batch|·bands bucket
     probes against the persisted band index instead of a corpus-wide
     Σ bucket² pass (the near-dup analog of the exact-fingerprint
     bucketed anti-join in dedup_incremental). ``is_new`` is a boolean
-    Column over the banded table; ``out`` is (old_id_col, new_id_col)."""
-    old_col, new_col = out
+    Column over the banded table. Returns (doc_a, doc_b) = (old doc, new
+    doc)."""
     new = banded.filter(is_new).select(
-        F.col("doc_id").alias(new_col), "band", "band_sig"
+        F.col("doc_id").alias("doc_b"), "band", "band_sig"
     )
     old = banded.filter(~is_new).select(
-        F.col("doc_id").alias(old_col), "band", "band_sig"
+        F.col("doc_id").alias("doc_a"), "band", "band_sig"
     )
     return (
         new.join(old, ["band", "band_sig"])
-        .select(old_col, new_col)
+        .select("doc_a", "doc_b")
         .distinct()
     )
 

@@ -142,11 +142,11 @@ def zorder_layout(
     df: DataFrame,
     path: str,
     cols: list[str],
-    n_files: int = 8,
     bits: int = 16,
     rank: str = "minmax",
 ) -> None:
-    """Write ``df`` to parquet clustered along the Z curve of ``cols``.
+    """Write ``df`` to 8 parquet files clustered along the Z curve of
+    ``cols``.
 
     One range exchange on the interleaved key + in-partition sort; the
     key itself is dropped before the write (pure layout, no schema
@@ -154,7 +154,7 @@ def zorder_layout(
     """
     keyed = zorder_key(df, cols, bits=bits, rank=rank)
     (
-        keyed.repartitionByRange(n_files, "_zkey")
+        keyed.repartitionByRange(8, "_zkey")
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
         .write.mode("overwrite")
@@ -166,13 +166,12 @@ def linear_layout(
     df: DataFrame,
     path: str,
     cols: list[str],
-    n_files: int = 8,
 ) -> None:
-    """Write ``df`` range-partitioned + sorted by ``cols`` — the
+    """Write ``df`` as 8 files range-partitioned + sorted by ``cols`` — the
     composite-index layout: perfect skipping on ``cols[0]`` prefixes,
     none on trailing columns queried alone."""
     (
-        df.repartitionByRange(n_files, *cols)
+        df.repartitionByRange(8, *cols)
         .sortWithinPartitions(*cols)
         .write.mode("overwrite")
         .parquet(path)

@@ -43,7 +43,6 @@ def priority_sample(
     k: int,
     salt: str = "prio",
     keep_cols: tuple[str, ...] = (),
-    materialize: bool = True,
 ) -> DataFrame:
     """Deterministic k-item priority sample with the max(w, τ) estimator.
 
@@ -65,14 +64,9 @@ def priority_sample(
     )
     # distributed top-(k+1): TakeOrderedAndProject, then every later step
     # runs over ≤ k+1 checkpointed rows (corpus scanned once).
-    # materialize=False keeps the lineage visible for the plan-shape test
-    # (the TakeOrdered subtree hides behind the checkpoint otherwise) at
-    # the cost of re-running the top-k for each downstream branch.
     top = scored.orderBy(
         F.col("priority").desc(), F.col("doc_id")
-    ).limit(k + 1)
-    if materialize:
-        top = top.localCheckpoint(eager=True)
+    ).limit(k + 1).localCheckpoint(eager=True)
     tau = top.agg(F.min("priority").alias("tau"))
     sample = top.orderBy(F.col("priority").desc(), F.col("doc_id")).limit(k)
     return sample.crossJoin(F.broadcast(tau)).select(

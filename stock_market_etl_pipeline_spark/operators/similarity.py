@@ -18,18 +18,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _spread
+
 
 def _to_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Single-split parquet inputs would put every dot product on one task;
-    fan rows across the cluster first (no-op at real multi-split scale).
-    Floored at the current partition count so it can never shrink a
-    many-split input down to defaultParallelism."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(max(sc.defaultParallelism, df.rdd.getNumPartitions()))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -150,17 +143,17 @@ def embedding_near_pairs(
     )
 
 
-def perturbation_constants(dim: int, scale: float = 0.05) -> list[float]:
+def perturbation_constants(dim: int) -> list[float]:
     """Deterministic per-dimension additive noise for planting near-dups.
 
     A fixed rational pattern (no RNG, no libm) so the Spark expression and
     the generated DuckDB oracle SQL add the SAME double constants — keeps
     the planted corpus bit-identical across engines. For UNIT-NORM 64-dim
-    vectors (the testdata embeddings) the default scale puts the planted
+    vectors (the testdata embeddings) the 0.05 scale puts the planted
     twin at cosine ≈ 0.97 from its original — a realistic near-dup, not a
     trivially-identical copy (measured 0.9669–0.9751 at sf0.001).
     """
-    return [scale * (((j * 37) % 11) - 5) / 5.0 for j in range(dim)]
+    return [0.05 * (((j * 37) % 11) - 5) / 5.0 for j in range(dim)]
 
 
 def plant_near_duplicates(

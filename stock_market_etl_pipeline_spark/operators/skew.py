@@ -31,23 +31,22 @@ def salted_join(
     skewed: DataFrame,
     small: DataFrame,
     key: str,
-    n_salts: int = N_SALTS,
     how: str = "inner",
 ) -> DataFrame:
     """Join a skewed fact against a replicable side without one hot-key task.
 
     The skewed side gets a salt derived from its first two non-key
     columns (the key itself when it has none); the small side is exploded
-    into n_salts copies; the join key becomes (key, salt) so a hot key's rows
-    spread across n_salts tasks. Replication cost: |small| × n_salts —
+    into N_SALTS copies; the join key becomes (key, salt) so a hot key's rows
+    spread across N_SALTS tasks. Replication cost: |small| × N_SALTS —
     only use when `small` is broadcast-marginal (too big to broadcast
     whole, small enough to replicate).
     """
     salt_src = [c for c in skewed.columns if c != key][:2] or [key]
-    left = with_salt(skewed, salt_src, n_salts)
+    left = with_salt(skewed, salt_src, N_SALTS)
     right = small.withColumn(
         "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))),
+        F.explode(F.sequence(F.lit(0), F.lit(N_SALTS - 1))),
     )
     out = left.join(right, on=[key, "__salt"], how=how)
     return out.drop("__salt")

@@ -1428,7 +1428,6 @@ class TxTable:
         spark: SparkSession,
         n_files: int = 8,
         zorder_by: list[str] | None = None,
-        bits: int = 16,
         txn_id: str | None = None,
     ) -> int:
         """Compact the current snapshot into ``n_files`` files —
@@ -1449,7 +1448,7 @@ class TxTable:
             from .layout import zorder_key
 
             df = (
-                zorder_key(df, zorder_by, bits=bits)
+                zorder_key(df, zorder_by)
                 .repartitionByRange(n_files, "_zkey")
                 .sortWithinPartitions("_zkey")
                 .drop("_zkey")

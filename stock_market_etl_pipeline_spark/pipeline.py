@@ -19,7 +19,8 @@ effects — the scheduler/mailer glue the reference bakes in
 (SURVEY.md §7.8).
 
 Run: ``python -m stock_market_etl_pipeline_spark.pipeline <in> <out>``
-where <in> is a directory of raw-quote JSON/parquet drops.
+where <in> is a directory of raw-quote JSON drops. Parquet drops are read
+by calling ``run_pipeline(..., input_format="parquet")``.
 """
 
 from __future__ import annotations

@@ -22,6 +22,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+# the compound key the suite checks for uniqueness
+UNIQUE_KEY = ("symbol", "date")
+
 
 @dataclass
 class Check:
@@ -76,14 +79,13 @@ def stock_quality_checks() -> list[Check]:
 
 def suite_aggregates(
     checks: list[Check],
-    unique_key: tuple[str, ...] | None = ("symbol", "date"),
     distinct_keys: Column | None = None,
 ) -> list[Column]:
     """The suite's aggregates as Columns, ready for ``agg`` or ``observe``.
 
-    One ``__chk_<i>`` pass fraction per aggregate check, then, with a
-    ``unique_key``, ``__total`` and ``__distinct_keys`` for the
-    compound-uniqueness check. ``distinct_keys`` replaces the default
+    One ``__chk_<i>`` pass fraction per aggregate check, then ``__total``
+    and ``__distinct_keys`` for the compound-uniqueness check on
+    :data:`UNIQUE_KEY`. ``distinct_keys`` replaces the default
     ``count(DISTINCT key-struct)``: observed metrics reject DISTINCT, so an
     observer supplies an equivalent count (see :func:`observe_suite`).
     """
@@ -91,11 +93,10 @@ def suite_aggregates(
         c.pass_fraction.alias(f"__chk_{i}")
         for i, c in enumerate(c for c in checks if c.pass_fraction is not None)
     ]
-    if unique_key:
-        if distinct_keys is None:
-            distinct_keys = F.countDistinct(F.struct(*unique_key))
-        aggs.append(F.count(F.lit(1)).alias("__total"))
-        aggs.append(distinct_keys.alias("__distinct_keys"))
+    if distinct_keys is None:
+        distinct_keys = F.countDistinct(F.struct(*UNIQUE_KEY))
+    aggs.append(F.count(F.lit(1)).alias("__total"))
+    aggs.append(distinct_keys.alias("__distinct_keys"))
     return aggs
 
 
@@ -103,12 +104,11 @@ def score_suite(
     row,
     checks: list[Check],
     columns: list[str],
-    unique_key: tuple[str, ...] | None = ("symbol", "date"),
-    success_threshold: float = 0.90,
 ) -> tuple[bool, float, list[CheckResult]]:
     """Score one collected row of :func:`suite_aggregates` (a ``Row`` or the
     dict ``Observation.get`` returns); ``columns`` answers the schema-level
-    checks. Returns (success, rate, results)."""
+    checks. Returns (success, rate, results); success is a pass rate of
+    at least 90%, the reference's gate."""
     results: list[CheckResult] = []
     for c in checks:
         if c.column_exists is not None:
@@ -118,33 +118,30 @@ def score_suite(
     for i, c in enumerate(agg_checks):
         frac = float(row[f"__chk_{i}"] or 0.0)
         results.append(CheckResult(c.name, frac >= c.mostly, frac))
-    if unique_key:
-        ok = row["__total"] == row["__distinct_keys"]
-        results.append(
-            CheckResult(
-                "compound_unique_" + "_".join(unique_key),
-                ok,
-                1.0 if ok else row["__distinct_keys"] / max(row["__total"], 1),
-            )
+    ok = row["__total"] == row["__distinct_keys"]
+    results.append(
+        CheckResult(
+            "compound_unique_" + "_".join(UNIQUE_KEY),
+            ok,
+            1.0 if ok else row["__distinct_keys"] / max(row["__total"], 1),
         )
+    )
     passed = sum(1 for r in results if r.success)
     rate = passed / len(results) if results else 1.0
-    return rate >= success_threshold, rate, results
+    return rate >= 0.90, rate, results
 
 
 def run_quality_suite(
     df: DataFrame,
     checks: list[Check],
-    unique_key: tuple[str, ...] | None = ("symbol", "date"),
-    success_threshold: float = 0.90,
 ) -> tuple[bool, float, list[CheckResult]]:
     """Run all checks in one aggregate pass; returns (success, rate, results).
 
     The compound-uniqueness check rides in the same pass as
     ``count(*) == count(distinct key-struct)`` — no extra scan.
     """
-    row = df.agg(*suite_aggregates(checks, unique_key)).collect()[0]
-    return score_suite(row, checks, df.columns, unique_key, success_threshold)
+    row = df.agg(*suite_aggregates(checks)).collect()[0]
+    return score_suite(row, checks, df.columns)
 
 
 def observe_suite(

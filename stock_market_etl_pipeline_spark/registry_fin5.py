@@ -267,19 +267,11 @@ _TS_WIDTH_FINE = 0.01
 # made every plan-only consumer (plan_audit, plan-shape tests) execute
 # a scan+aggregate per DataFrame construction. The per-symbol depth of
 # a given sf_dir is fixed for the life of the process, so probe once
-# and memoize; SPARK_GRAFT_TS_FORCE={shallow,deep} skips the probe
-# entirely (used by plan tests to pin a branch action-free).
+# and memoize.
 _DEPTH_MEMO: dict = {}
 
 
 def _max_symbol_depth(spark, sf_dir) -> int:
-    import os
-
-    forced = os.environ.get("SPARK_GRAFT_TS_FORCE", "")
-    if forced == "shallow":
-        return 0
-    if forced == "deep":
-        return _TS_ARRAY_MAX_DAYS + 1
     if sf_dir not in _DEPTH_MEMO:
         t = ticks(spark, sf_dir)
         _DEPTH_MEMO[sf_dir] = (

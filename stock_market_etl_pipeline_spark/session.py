@@ -69,21 +69,12 @@ def get_spark(app_name: str = "stock-market-etl-pipeline-spark",
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    # Pre-coalesce shuffle width: sources/tables.py now sizes
-    # initialPartitionNum AUTOMATICALLY from the bytes of the largest
-    # table a session reads (next pow2 of bytes/32 MiB, clamped
-    # [shuffle.partitions, 2048] — at sf100 that lands on the 512 the
-    # NOTES r5 probe measured: ticks 255 s -> 161 s, validation
-    # 268 s -> 118 s; at <=sf1 it stays at the floor so small-scale
-    # plans are unchanged). This env var remains an explicit FLOOR for
-    # cluster operators who know better than the on-disk byte heuristic
-    # (e.g. highly-compressed or remote inputs).
-    initial = os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    if initial:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            initial,
-        )
+    # Pre-coalesce shuffle width: sources/tables.py sizes AQE's
+    # initialPartitionNum from the bytes of the largest table a session
+    # reads (next pow2 of bytes/32 MiB, clamped [shuffle.partitions,
+    # 2048] — at sf100 that lands on the 512 the NOTES r5 probe measured:
+    # ticks 255 s -> 161 s, validation 268 s -> 118 s; at <=sf1 it stays
+    # at the floor so small-scale plans are unchanged).
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER_OVERRIDE_DISABLED"):

@@ -1,4 +1,4 @@
-from .tables import TABLE_NAMES, load_table, load_tables
+from .tables import TABLE_NAMES, load_table
 from .ticks import ticks
 
-__all__ = ["TABLE_NAMES", "load_table", "load_tables", "ticks"]
+__all__ = ["TABLE_NAMES", "load_table", "ticks"]

@@ -74,9 +74,7 @@ def tune_shuffle_width(spark: SparkSession, input_bytes: int) -> int:
     down, so the only cost of a wide ceiling is map-side fan-out on the
     queries that actually shuffle the big table. Runtime-settable conf:
     applies to every query planned after this read, including under the
-    driver's own plain SparkSession where session.py configs are absent.
-    ``SPARK_GRAFT_INITIAL_PARTITIONS`` remains an explicit floor/override
-    for cluster operators (session.py)."""
+    driver's own plain SparkSession where session.py configs are absent."""
     try:
         floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
@@ -106,10 +104,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     tune_shuffle_width(spark, _BYTES_CACHE.get(path, 0))
     return spark.read.schema(cached).parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:

@@ -63,10 +63,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import bucket_pairs
+from ..operators.dedup import _spread, bucket_pairs
 from ..operators.graph import connected_components
 from ..operators.similarity import (
-    _spread,
     _to_double,
     cosine,
     ivf_assignments,
@@ -75,6 +74,10 @@ from ..operators.txtable import TxTable
 from .drive import drain, parquet_landing
 
 _SURVIVOR_SCHEMA = "vec_id bigint, cluster int, v array<double>"
+# the first batch's k-means k and the cosine at which two vectors are
+# duplicates
+N_CLUSTERS = 8
+THRESHOLD = 0.95
 
 
 def _train_centroids_df(
@@ -112,7 +115,6 @@ def recluster(
     survivors_dir: str,
     centroids_dir: str,
     n_clusters: int | None = None,
-    seed: int = 43,
 ) -> int | None:
     """Offline centroid refresh (VERDICT r7 #7): first-batch geometry
     drifts as the corpus grows — clusters inflate past the pair cap or
@@ -157,7 +159,7 @@ def recluster(
         .select("vec_id", F.col("v").alias("embedding"))
     )
     ctable.overwrite(
-        _train_centroids_df(sample, int(n_clusters), seed), txn_id=tag
+        _train_centroids_df(sample, int(n_clusters), 43), txn_id=tag
     )
     centroids = ctable.read(spark).select("cluster", "centroid")
     reassigned = assign_to_centroids(
@@ -279,11 +281,10 @@ def start_semantic_dedup_stream(
     centroids_dir: str,
     decisions_dir: str,
     checkpoint_dir: str,
-    n_clusters: int = 8,
-    threshold: float = 0.95,
 ):
     """availableNow stream: maintain the survivor TxTable + frozen
-    centroids, emit per-batch keep/drop decisions. Returns the started
+    centroids (:data:`N_CLUSTERS` of them), emit per-batch keep/drop
+    decisions at cosine ≥ :data:`THRESHOLD`. Returns the started
     StreamingQuery."""
     table = TxTable(survivors_dir)
 
@@ -304,14 +305,16 @@ def start_semantic_dedup_stream(
             return
         ctable = TxTable(centroids_dir)
         if ctable.latest_snapshot() is None:
-            train_and_store_centroids(batch_df, centroids_dir, n_clusters, seed=42)
+            train_and_store_centroids(
+                batch_df, centroids_dir, N_CLUSTERS, seed=42
+            )
         centroids = ctable.read(spark).select("cluster", "centroid")
         assigned = assign_to_centroids(batch_df, centroids)
         survivors = (
             table.read(spark) if table.latest_snapshot() is not None else None
         )
         decisions = resolve_batch(
-            assigned, survivors, threshold, max_cluster=4096
+            assigned, survivors, THRESHOLD, max_cluster=4096
         ).localCheckpoint(eager=True)  # consumed by merge AND the log
         # Log first, merge second: every pre-merge crash point replays
         # against the UNCHANGED survivor table and deterministically

@@ -8,13 +8,13 @@ pair; stitching per-user "last event" state into every batch is possible
 (applyInPandasWithState) but makes replay non-idempotent — a redelivered
 batch would re-emit its boundary pairs.
 
-Users hash into ``n_buckets`` stable buckets (pmod(xxhash64(user))), the
+Users hash into ``N_BUCKETS`` stable buckets (pmod(xxhash64(user))), the
 store's partition key, and each micro-batch recomputes the buckets it
 touches from the landing table (``drive.recompute_touched``):
 cross-batch pairs appear because the recompute sees each user's whole
 history, however it was delivered. At 100 TB the landing table would
 itself be bucket-partitioned on the same key so the recompute scan
-prunes to the touched buckets; n_buckets bounds both the recompute
+prunes to the touched buckets; N_BUCKETS bounds both the recompute
 fan-in and the per-partition file count.
 """
 
@@ -25,14 +25,14 @@ from pyspark.sql import functions as F
 
 from .drive import drain, parquet_landing, recompute_touched
 
-DEFAULT_BUCKETS = 32
+N_BUCKETS = 32
 
 
-def user_bucket(n_buckets: int = DEFAULT_BUCKETS):
-    return F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).cast("int")
+def user_bucket():
+    return F.pmod(F.xxhash64("user_id"), F.lit(N_BUCKETS)).cast("int")
 
 
-def transition_pairs(events_df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+def transition_pairs(events_df: DataFrame) -> DataFrame:
     """Per-bucket (from_event, to_event) counts over per-user consecutive
     pairs in (ts, event_id) order — the store's partition contents.
     Same pair definition as the registered ``event_transition_matrix``
@@ -41,7 +41,7 @@ def transition_pairs(events_df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         events_df.select(
-            user_bucket(n_buckets).alias("bucket"),
+            user_bucket().alias("bucket"),
             F.col("event_type").alias("from_event"),
             F.lead("event_type").over(w).alias("to_event"),
         )
@@ -74,7 +74,6 @@ def start_transition_rollup(
     landing_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    n_buckets: int = DEFAULT_BUCKETS,
 ):
     """Maintain ``store_dir`` (parquet partitioned by bucket) as an
     incremental materialization of ``transition_pairs`` over the events
@@ -83,8 +82,8 @@ def start_transition_rollup(
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         recompute_touched(
-            spark, batch_df, landing_dir, user_bucket(n_buckets),
-            lambda src: transition_pairs(src, n_buckets), store_dir, "bucket",
+            spark, batch_df, landing_dir, user_bucket(), transition_pairs,
+            store_dir, "bucket",
         )
 
     return drain(parquet_landing(spark, landing_dir), checkpoint_dir, refresh)

@@ -35,9 +35,9 @@ def test_partitioned_parquet_roundtrip(spark, tmp_path):
 def test_bucketed_join_skips_exchange(spark, tmp_path):
     t = ticks(spark, SF_DIR)
     write_bucketed(t.select("symbol", "date", "close"), "t_close",
-                   bucket_by="symbol", n_buckets=8)
+                   bucket_by="symbol")
     write_bucketed(t.select("symbol", "date", "volume"), "t_vol",
-                   bucket_by="symbol", n_buckets=8)
+                   bucket_by="symbol")
     a = spark.table("t_close")
     b = spark.table("t_vol").groupBy("symbol").agg(F.sum("volume").alias("v"))
     joined = a.join(b, "symbol")

@@ -29,10 +29,7 @@ def quotes_in_db(spark, derby_url):
         (F.col("id") % 10).alias("bucket"),
         (F.lit(100.0) + F.col("id")).alias("close"),
     )
-    write_jdbc(
-        df, derby_url, "quotes", batchsize=25, num_partitions=2,
-        mode="overwrite", driver=DRIVER,
-    )
+    write_jdbc(df, derby_url, "quotes", driver=DRIVER)
     return derby_url
 
 

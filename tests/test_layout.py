@@ -55,7 +55,7 @@ def grid(spark):
 
 def test_zorder_write_preserves_rows_exactly(spark, grid, tmp_path):
     path = str(tmp_path / "z")
-    zorder_layout(grid, path, ["x", "y"], n_files=8)
+    zorder_layout(grid, path, ["x", "y"])
     back = spark.read.parquet(path)
     assert back.columns == grid.columns
     assert (
@@ -69,8 +69,8 @@ def test_zorder_skips_on_both_dims_linear_only_on_leading(spark, grid, tmp_path)
     y-only predicate nothing; z-order serves both at once."""
     lin = str(tmp_path / "lin")
     zed = str(tmp_path / "zed")
-    linear_layout(grid, lin, ["x", "y"], n_files=16)
-    zorder_layout(grid, zed, ["x", "y"], n_files=16)
+    linear_layout(grid, lin, ["x", "y"])
+    zorder_layout(grid, zed, ["x", "y"])
 
     # y-only probe, 1/8 of the domain: the composite index dead zone.
     y_lin = skip_ratio(lin, "y", 0, 24)
@@ -102,7 +102,7 @@ def test_linear_date_layout_serves_date_band(spark, tmp_path):
     sorted_ = str(tmp_path / "bydate")
     # shuffle destroys any incidental date order in the generated file
     li.repartition(16).write.mode("overwrite").parquet(unsorted)
-    linear_layout(li, sorted_, ["l_shipdate"], n_files=16)
+    linear_layout(li, sorted_, ["l_shipdate"])
 
     lo, hi = li.select(
         F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi")
@@ -132,8 +132,8 @@ def test_quantile_rank_survives_skew_minmax_does_not(spark, tmp_path):
     )
     mm = str(tmp_path / "mm")
     qt = str(tmp_path / "qt")
-    zorder_layout(skewed, mm, ["x", "y"], n_files=16, rank="minmax")
-    zorder_layout(skewed, qt, ["x", "y"], n_files=16, rank="quantile", bits=8)
+    zorder_layout(skewed, mm, ["x", "y"], rank="minmax")
+    zorder_layout(skewed, qt, ["x", "y"], rank="quantile", bits=8)
 
     s_mm = skip_ratio(mm, "y", 0, 12)   # 1/8 of the bulk's domain
     s_qt = skip_ratio(qt, "y", 0, 12)
@@ -166,7 +166,7 @@ def test_partition_pruning_reaches_the_scan(spark, tmp_path):
 
 def test_rowgroup_stats_reports_footer_ranges(spark, grid, tmp_path):
     path = str(tmp_path / "one")
-    linear_layout(grid, path, ["x"], n_files=4)
+    linear_layout(grid, path, ["x"])
     stats = rowgroup_stats(path, "x")
     assert len(stats) >= 4
     assert sum(n for _, _, n in stats) == 40_000
@@ -194,5 +194,5 @@ def test_zorder_constant_column_is_harmless(spark, tmp_path):
         )
     )
     path = str(tmp_path / "const")
-    zorder_layout(df, path, ["x", "y"], n_files=8)
+    zorder_layout(df, path, ["x", "y"])
     assert skip_ratio(path, "y", 0, 12) >= 0.5

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_market_etl_pipeline_spark import registry
+from stock_market_etl_pipeline_spark.obs import _last_execution, _settled
 from stock_market_etl_pipeline_spark.operators.sampling import priority_sample
 from stock_market_etl_pipeline_spark.operators.similarity import (
     cosine_topk,
@@ -102,11 +103,17 @@ def test_priority_sample_estimator_unbiased(spark):
 
 def test_priority_sample_plan_distributed_topk(spark):
     """The full-data side is a TakeOrderedAndProject (per-partition heaps),
-    never a global sort (no range-partitioning exchange)."""
+    never a global sort (no range-partitioning exchange). That side runs
+    as the top-(k+1) job of the build's eager checkpoint, so its plan is
+    the SQL execution the build started, read from the SQL status store."""
+    sql_store = spark._jsparkSession.sharedState().statusStore()
     docs = load_table(spark, SF_DIR, "documents")
-    plan = plan_of(
-        priority_sample(docs, "n_chars", 64, materialize=False)
-    )
+    before = _last_execution(sql_store)
+    priority_sample(docs, "n_chars", 64)
+    _settled(spark)
+    topk = _last_execution(sql_store)
+    assert topk > before
+    plan = sql_store.execution(topk).get().physicalPlanDescription()
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan.lower()
 

@@ -37,7 +37,7 @@ def test_mostly_threshold_allows_outliers(spark):
     from stock_market_etl_pipeline_spark.plans.quality import Check, _fraction
 
     checks = [Check("v_mostly", _fraction(F.col("v").between(-50, 50)), mostly=0.95)]
-    ok, rate, results = run_quality_suite(df, checks, unique_key=None)
+    ok, rate, results = run_quality_suite(df, checks)
     assert results[0].success
     assert results[0].pass_fraction == pytest.approx(0.96)
 
@@ -47,9 +47,7 @@ def test_duplicate_keys_fail_uniqueness(spark):
         [("A", "2024-01-01", 1.0), ("A", "2024-01-01", 2.0)],
         "symbol string, date string, close double",
     )
-    ok, rate, results = run_quality_suite(
-        df, [], unique_key=("symbol", "date"), success_threshold=1.0
-    )
+    ok, rate, results = run_quality_suite(df, [])
     assert not ok
     assert not results[0].success
 

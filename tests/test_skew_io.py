@@ -26,7 +26,7 @@ def test_salted_join_equals_plain_join(spark):
     )
     small = spark.createDataFrame([(i, f"dim{i}") for i in range(7)], "k int, name string")
     plain = big.join(small, "k").select("k", "payload", "name")
-    salted = salted_join(big, small, key="k", n_salts=4).select(
+    salted = salted_join(big, small, key="k").select(
         "k", "payload", "name"
     )
     assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
@@ -35,7 +35,7 @@ def test_salted_join_equals_plain_join(spark):
 def test_salted_join_left_outer_keeps_unmatched(spark):
     big = spark.createDataFrame([(1, 10), (99, 20)], "k int, payload int")
     small = spark.createDataFrame([(1, "a")], "k int, name string")
-    out = salted_join(big, small, key="k", n_salts=3, how="left").collect()
+    out = salted_join(big, small, key="k", how="left").collect()
     got = {r["k"]: r["name"] for r in out}
     assert got == {1: "a", 99: None}
 

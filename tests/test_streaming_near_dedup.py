@@ -144,13 +144,11 @@ def test_stream_matches_equal_batch_incremental_and_survive_replay(
     # batch parity: same candidates as the batch-mode incremental op
     union = w1.unionByName(w2)
     banded = minhash_banded(union, k=3, num_hashes=16, bands=4)
-    cand = incremental_minhash_candidates(
-        banded, F.col("doc_id") >= 100, out=("corpus_doc", "new_doc")
-    )
+    cand = incremental_minhash_candidates(banded, F.col("doc_id") >= 100)
     batch_pairs = {
-        (r["corpus_doc"], r["new_doc"])
+        (r["doc_a"], r["doc_b"])
         for r in cand.collect()
-        if r["corpus_doc"] < 100  # exclude fresh-vs-fresh side
+        if r["doc_a"] < 100  # exclude fresh-vs-fresh side
     }
     assert set(got) <= batch_pairs  # stream matched only true candidates
 

@@ -24,16 +24,14 @@ from stock_market_etl_pipeline_spark.operators.similarity import (
 )
 from stock_market_etl_pipeline_spark.operators.txtable import TxTable
 from stock_market_etl_pipeline_spark.streaming.semantic_dedup import (
-
+    N_CLUSTERS,
+    THRESHOLD,
     start_semantic_dedup_stream,
 )
 
 N_BASE = 100
 BASE_OFF = 10_000
 TWIN_OFF = 1_000_000
-THRESH = 0.95
-N_CLUSTERS = 8
-SCALE = 0.02  # twin cosine ≈ 0.995 — far above threshold, same cluster
 
 
 def _base(spark):
@@ -51,7 +49,7 @@ def _twins(base, ids: list[int], new_id):
     vec_id = new_id(i) — the deterministic planting recipe from
     operators/similarity.plant_near_duplicates."""
     dim = 64
-    pert = F.array(*[F.lit(c) for c in perturbation_constants(dim, SCALE)])
+    pert = F.array(*[F.lit(c) for c in perturbation_constants(dim)])
     return (
         base.filter(F.col("vec_id").isin([BASE_OFF + i for i in ids]))
         .select(
@@ -74,7 +72,6 @@ def _run(spark, d):
     q = start_semantic_dedup_stream(
         spark, d["landing"], d["survivors"], d["centroids"],
         d["decisions"], d["ckpt"],
-        n_clusters=N_CLUSTERS, threshold=THRESH,
     )
     await_drained(spark, q)
 
@@ -109,7 +106,7 @@ def test_stream_equals_oneshot_semantic_dedup_on_union(spark, tmp_path):
     got = _survivor_ids(spark, d)
     union = base.unionByName(w1).unionByName(w2)
     oneshot = semantic_dedup(
-        union, n_clusters=N_CLUSTERS, threshold=THRESH, survivor="min_id"
+        union, n_clusters=N_CLUSTERS, threshold=THRESHOLD, survivor="min_id"
     )
     expect = {r.vec_id for r in oneshot.filter("is_kept").collect()}
     assert got == expect
@@ -156,7 +153,7 @@ def test_stream_survives_restart_storm(spark, tmp_path):
     expect = {
         r.vec_id
         for r in semantic_dedup(
-            union, n_clusters=N_CLUSTERS, threshold=THRESH,
+            union, n_clusters=N_CLUSTERS, threshold=THRESHOLD,
             survivor="min_id",
         ).filter("is_kept").collect()
     }
@@ -187,7 +184,7 @@ def test_decision_log_stable_across_post_merge_replay(spark, tmp_path):
 
     dim = 64
     pert = F.array(
-        *[F.lit(c) for c in perturbation_constants(dim, 0.05)]
+        *[F.lit(c) for c in perturbation_constants(dim)]
     )
     sel = base.filter(
         F.col("vec_id").isin([BASE_OFF + i for i in chain_ids])
@@ -215,8 +212,8 @@ def test_decision_log_stable_across_post_merge_replay(spark, tmp_path):
 
     for i in chain_ids:
         s, v1, v2 = vecs[BASE_OFF + i], vecs[i], vecs[TWIN_OFF + i]
-        assert cos(v1, s) >= THRESH and cos(v2, s) >= THRESH
-        assert cos(v1, v2) < THRESH
+        assert cos(v1, s) >= THRESHOLD and cos(v2, s) >= THRESHOLD
+        assert cos(v1, v2) < THRESHOLD
 
     base.coalesce(1).write.mode("append").parquet(d["landing"])
     _run(spark, d)
@@ -288,7 +285,7 @@ def test_recluster_swaps_geometry_decisions_stay_min_id_stable(
 
     snap = recluster(
         spark, d["survivors"], d["centroids"],
-        n_clusters=N_CLUSTERS + 3, seed=7,
+        n_clusters=N_CLUSTERS + 3,
     )
     assert snap is not None
 
@@ -317,7 +314,7 @@ def test_recluster_swaps_geometry_decisions_stay_min_id_stable(
     expect = {
         r.vec_id
         for r in semantic_dedup(
-            union, n_clusters=N_CLUSTERS, threshold=THRESH,
+            union, n_clusters=N_CLUSTERS, threshold=THRESHOLD,
             survivor="min_id",
         ).filter("is_kept").collect()
     }
@@ -358,10 +355,11 @@ def test_recluster_replay_after_crash_between_commits(spark, tmp_path):
         r.cluster: tuple(r.centroid) for r in ctable.read(spark).collect()
     }
 
-    # rerun with a DIFFERENT seed/k request: the txn marker must win
+    # rerun with a DIFFERENT seed/k request (recluster trains with its
+    # own seed, not 99): the txn marker must win
     snap = recluster(
         spark, d["survivors"], d["centroids"],
-        n_clusters=N_CLUSTERS + 5, seed=1234,
+        n_clusters=N_CLUSTERS + 5,
     )
     assert snap is not None
     assert ctable.latest_snapshot() == ct_snap  # no second geometry

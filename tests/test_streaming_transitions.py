@@ -93,7 +93,7 @@ def test_incremental_matches_batch_across_wave_boundary(spark, tmp_path):
     )
 
     wave1.write.mode("append").parquet(landing)
-    q = start_transition_rollup(spark, landing, store, ckpt, n_buckets=4)
+    q = start_transition_rollup(spark, landing, store, ckpt)
     q.awaitTermination(120)
     all1 = spark.read.parquet(landing)
     expected1 = _matrix(
@@ -102,7 +102,7 @@ def test_incremental_matches_batch_across_wave_boundary(spark, tmp_path):
     assert _matrix(transition_matrix_from_store(spark, store)) == expected1
 
     wave2.write.mode("append").parquet(landing)
-    q = start_transition_rollup(spark, landing, store, ckpt, n_buckets=4)
+    q = start_transition_rollup(spark, landing, store, ckpt)
     q.awaitTermination(120)
     got = _matrix(transition_matrix_from_store(spark, store))
     all2 = spark.read.parquet(landing)
@@ -112,14 +112,14 @@ def test_incremental_matches_batch_across_wave_boundary(spark, tmp_path):
     assert ("click", "click") in got
 
     # replay: same checkpoint, no new files -> store unchanged
-    q = start_transition_rollup(spark, landing, store, ckpt, n_buckets=4)
+    q = start_transition_rollup(spark, landing, store, ckpt)
     q.awaitTermination(120)
     assert _matrix(transition_matrix_from_store(spark, store)) == got
 
     # cold restart (fresh checkpoint over the same landing data) must
     # converge to the same store — bucket overwrite is idempotent
     q = start_transition_rollup(
-        spark, landing, store, str(tmp_path / "ckpt2"), n_buckets=4
+        spark, landing, store, str(tmp_path / "ckpt2")
     )
     q.awaitTermination(120)
     assert _matrix(transition_matrix_from_store(spark, store)) == got
@@ -173,7 +173,7 @@ def test_transition_store_survives_restart_storm(spark, tmp_path):
     ]
 
     def run():
-        q = start_transition_rollup(spark, landing, store, ckpt, n_buckets=4)
+        q = start_transition_rollup(spark, landing, store, ckpt)
         q.awaitTermination(120)
 
     n_crashes = 0

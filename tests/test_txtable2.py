@@ -266,7 +266,7 @@ def test_optimize_zorder_improves_skip_ratio(spark, tmp_path):
     t.append(grid.repartition(8))
     t.vacuum(keep_last=1)
     before = skip_ratio(t.data_dir, "y", 10, 12)
-    t.optimize(spark, n_files=8, zorder_by=["x", "y"], bits=8)
+    t.optimize(spark, n_files=8, zorder_by=["x", "y"])
     t.vacuum(keep_last=1)
     after = skip_ratio(t.data_dir, "y", 10, 12)
     assert before <= 0.2

@@ -30,16 +30,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from stock_market_etl_pipeline_spark import registry  # noqa: E402
 from stock_market_etl_pipeline_spark.session import get_spark  # noqa: E402
 
+from bench import HEADLINE  # noqa: E402  (the repo root is on sys.path)
 from plan_audit import node_count  # noqa: E402  (tools/ is the script dir)
-
-HEADLINE = [
-    "ticks_ohlcv", "enriched_features", "pricing_summary",
-    "revenue_by_nation", "performance_summary", "predictions",
-    "trading_signals", "dedup_keep_last", "validation_aggregates",
-    "asof_last_order_value", "dedup_minhash_lsh", "embedding_cosine_topk",
-    "text_stats", "sessionize_events", "gap_fill_forward", "corpus_prep",
-    "priority_revenue",
-]
 
 
 def final_plan(spark, df) -> str:
