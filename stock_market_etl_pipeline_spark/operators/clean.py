@@ -50,12 +50,14 @@ def positive_price_predicate(df: DataFrame) -> Column:
     )
 
 
-def clean_quotes(raw: DataFrame) -> DataFrame:
-    """Full cleaning pass over raw string-typed quote rows (RAW_QUOTE_SCHEMA).
+def typed_quotes(raw: DataFrame) -> DataFrame:
+    """Raw string-typed quote rows (RAW_QUOTE_SCHEMA) renamed to canonical
+    names and cast to their types; the other columns pass through.
 
     Cast-with-null-on-error matches pandas ``to_numeric(errors='coerce')``
     (src/transform.py:133-136): Spark's cast of an invalid string is null,
-    then the null-drop removes the row.
+    and ``clean_quotes``' null-drop then removes the row. On rows already
+    typed this is a no-op: the optimizer drops same-type casts.
     """
     df = raw
     renames = {k: v for k, v in RAW_RENAME_MAP.items() if k in df.columns}
@@ -64,7 +66,7 @@ def clean_quotes(raw: DataFrame) -> DataFrame:
     # try_cast, not cast: Spark 4 runs in ANSI mode where a malformed string
     # cast THROWS; pandas to_numeric(errors='coerce') semantics need
     # null-on-error, which try_cast provides.
-    df = df.withColumns(
+    return df.withColumns(
         {
             "date": F.to_date("date"),
             "open": F.col("open").try_cast("double"),
@@ -74,11 +76,24 @@ def clean_quotes(raw: DataFrame) -> DataFrame:
             "volume": F.col("volume").try_cast("bigint"),
         }
     )
-    df = df.na.drop(subset=CRITICAL_COLUMNS)
+
+
+def clean_quotes(raw: DataFrame) -> DataFrame:
+    """Full cleaning pass over quote rows, raw (RAW_QUOTE_SCHEMA) or
+    already passed through :func:`typed_quotes`.
+
+    The optimizer pushes the filters below through ``typed_quotes``'
+    casting projection into the scan, where each predicate casts its
+    column again. A caller that observes metrics on ``typed_quotes(raw)``
+    stops that push (``pipeline.run_pipeline`` does), so every raw field
+    is cast once.
+    """
+    df = typed_quotes(raw).na.drop(subset=CRITICAL_COLUMNS)
     df = df.filter(ohlc_consistency_predicate(df))
     df = df.filter(positive_price_predicate(df))
     # hash(symbol), not the dedup's own hash(symbol, date): see the module
-    # docstring. No partition count, so AQE still coalesces.
+    # docstring. No partition count, so AQE coalesces it, in batch jobs and
+    # in stream micro-batches alike (streaming/drive.py).
     return dedup_keep_last(
         df.repartition("symbol"), keys=["symbol", "date"], order_by=["extracted_at"]
     )

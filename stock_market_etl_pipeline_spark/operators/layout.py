@@ -38,9 +38,12 @@ repartitionByRange exchange, the same cost linear_layout already pays.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
+
+_RANGE_SAMPLE = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
 
 
 def _scaled_rank_minmax(col: str, lo, hi, bits: int):
@@ -64,19 +67,27 @@ def _scaled_rank_quantile(col: str, boundaries: list[float], bits: int):
     a hot value can't collapse the curve onto one rank the way min/max
     scaling does under skew.
 
-    boundaries is the bounded driver-side list (2^bits - 1 doubles); the
-    per-row mapping is an aggregate over the literal array (interpreted,
-    ~us/element — a write-time cost only, never in a query path).
+    The rank is the number of boundaries ``b`` with ``col >= b`` (0 for a
+    null; NaN sorts above every number, as Spark orders it). boundaries
+    is the bounded driver-side list of 2^bits - 1 doubles, sorted here in
+    Spark's order; each row finds its rank by binary search, ``bits``
+    probes of the literal array instead of one per boundary.
     """
+    if not boundaries:
+        return F.lit(0).cast("long")
     v = F.col(col).cast("double")
-    arr = F.lit(boundaries) if boundaries else F.lit([]).cast("array<double>")
-    rank = F.aggregate(
-        arr,
-        F.lit(0).cast("long"),
-        lambda acc, b: acc + F.when(v >= b, F.lit(1)).otherwise(F.lit(0)),
-    )
-    n = (1 << bits) - 1
-    return F.least(rank, F.lit(n)).cast("long")
+    ordered = sorted(boundaries, key=lambda b: (math.isnan(b), b))
+    # one string literal the optimizer folds into the array, not one
+    # literal per boundary: F.lit(list) costs a py4j call per element
+    # and 2^bits - 1 nodes in every plan the rank appears in
+    arr = F.split(F.lit(",".join(map(repr, ordered))), ",").cast("array<double>")
+    steps = F.array(*[F.lit(1 << i) for i in reversed(range(bits))])
+
+    def probe(pos, step):
+        nxt = pos + step
+        return F.when(v >= F.element_at(arr, nxt), nxt).otherwise(pos)
+
+    return F.aggregate(steps, F.lit(0), probe).cast("long")
 
 
 def zorder_key(
@@ -96,8 +107,10 @@ def zorder_key(
     ``k * bits`` must fit in a signed 64-bit key (<= 62 here). The rank
     pass is one driver-bounded stats action: a single min/max aggregate
     row (``rank='minmax'``) or one approx_quantile collect of
-    ``2^bits - 1`` doubles per column (``rank='quantile'`` — use
-    ``bits<=8`` there; boundary count, not row count).
+    ``2^bits - 1`` doubles per column (``rank='quantile'``; each row then
+    takes ``bits`` probes of them). PySpark's approxQuantile moves the
+    probabilities and boundaries one py4j call per element, so at 16
+    bits that collect, not the ranking, takes most of the time.
     """
     k = len(cols)
     if k < 1:
@@ -151,15 +164,30 @@ def zorder_layout(
     One range exchange on the interleaved key + in-partition sort; the
     key itself is dropped before the write (pure layout, no schema
     change).
+
+    Where the 8 file boundaries fall decides which row groups a probe
+    skips. Spark places them from a reservoir sample of about 100 keys
+    per file, seeded by the RDD id, so the same rows could be laid out
+    differently (x-probe skip 0.5 or 0.375 on the 40k-row grid) depending
+    on how many RDDs the session made before. The exchange runs with
+    Spark's largest sample instead (1e6 keys in all, up to 3e6 / n from
+    each of n input partitions): a table of that size is sampled whole,
+    so its layout depends on its rows alone.
     """
     keyed = zorder_key(df, cols, bits=bits, rank=rank)
-    (
-        keyed.repartitionByRange(8, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    conf = df.sparkSession.conf
+    prior = conf.get(_RANGE_SAMPLE)
+    conf.set(_RANGE_SAMPLE, str(1_000_000 // 8))
+    try:
+        (
+            keyed.repartitionByRange(8, "_zkey")
+            .sortWithinPartitions("_zkey")
+            .drop("_zkey")
+            .write.mode("overwrite")
+            .parquet(path)
+        )
+    finally:
+        conf.set(_RANGE_SAMPLE, prior)
 
 
 def linear_layout(

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from . import obs
 from .io_sink import write_parquet
-from .operators.clean import clean_quotes
+from .operators.clean import clean_quotes, typed_quotes
 from .operators.enrich import enrich
 from .plans.analytics import db_summary  # noqa: F401 -- not called; perfbench patches this name
 from .plans.quality import (
@@ -89,16 +89,20 @@ def run_pipeline(
         # The count is observed BELOW the filter (Spark pushes no filter
         # through an observation); the scan still reads every column, so
         # Spark's ban on corrupt-column-only JSON queries does not apply.
+        # It is observed on the typed rows, so the cleaning filters stay
+        # above the casts and each raw field is cast once.
         schema = T.StructType(
             RAW_QUOTE_SCHEMA.fields
             + [T.StructField("__corrupt", T.StringType(), True)]
         )
         corrupt_obs = Observation("corrupt_records")
         raw = (
-            spark.read.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "__corrupt")
-            .json(input_path)
+            typed_quotes(
+                spark.read.schema(schema)
+                .option("mode", "PERMISSIVE")
+                .option("columnNameOfCorruptRecord", "__corrupt")
+                .json(input_path)
+            )
             .observe(corrupt_obs, F.count("__corrupt").alias("n"))
             .filter(F.col("__corrupt").isNull())
             .drop("__corrupt")

@@ -8,6 +8,16 @@ daily rerun over overlapping recent history (``scheduler.py:110``,
 ``src/load.py:252``). Trigger and checkpoint policy live here, once;
 the maintainers only say what a batch does (Structured Streaming,
 SIGMOD 2018: the engine, not each query, owns execution policy).
+
+That policy includes the width a batch body runs at. Spark plans a
+stateful streaming query on a clone of the session with AQE off, so its
+stateful operators keep the partition count stored in the checkpoint,
+and each ``foreachBatch`` body inherits that clone. ``drain`` runs each body with
+the caller's ``spark.sql.adaptive.enabled`` instead and puts the clone's
+own value back afterwards. The body plans on top of the batch Spark has
+already planned (an ``ExistingRDD`` scan), so its own shuffles coalesce
+to the rows a micro-batch carries, and the stateful exchange of the next
+micro-batch is planned as before.
 """
 
 from __future__ import annotations
@@ -17,6 +27,8 @@ from collections.abc import Callable
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def drain(
@@ -28,9 +40,24 @@ def drain(
     ``stream`` until the available input is drained, with offsets and
     commits in ``checkpoint_dir``. Empty batches reach ``on_batch`` too:
     whether they do anything is the batch body's decision. Returns the
-    started query; callers await ``query.awaitTermination()``."""
+    started query; callers await ``query.awaitTermination()``.
+
+    The body runs with the caller's ``spark.sql.adaptive.enabled`` (see
+    the module docstring); the stream's own session gets its value back
+    before the next micro-batch is planned."""
+    adaptive = stream.sparkSession.conf.get(_AQE)
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        conf = batch_df.sparkSession.conf
+        own = conf.get(_AQE)
+        conf.set(_AQE, adaptive)
+        try:
+            on_batch(batch_df, batch_id)
+        finally:
+            conf.set(_AQE, own)
+
     return (
-        stream.writeStream.foreachBatch(on_batch)
+        stream.writeStream.foreachBatch(run_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -11,9 +11,13 @@ SURVEY.md §2.10). Here that becomes a continuous micro-batch stream:
 - The watermark bounds dedup state: late duplicates older than the horizon
   age out of state instead of accumulating forever (the unbounded-state
   bug a naive dropDuplicates would have at 100 TB).
-- ``dropDuplicatesWithinWatermark`` keeps the FIRST arrival across
-  batches; inside a batch the reference's keep-LAST tiebreak applies
-  (operators/clean.py::dedup_keep_last).
+- ``dropDuplicatesWithinWatermark`` runs before the batch body and keeps
+  the first copy of a (symbol, date) its state operator sees, across
+  batches and within one trigger alike. ``clean_quotes``' keep-LAST
+  tiebreak (operators/clean.py::dedup_keep_last) therefore never sees a
+  duplicate in these streams: a revised quote that arrives after its
+  first copy is dropped, not applied. The stream tests land identical
+  copies for this reason.
 - The quality-gated ingests (``start_pipeline_stream``,
   ``start_wap_gated_ingest``) share one body: stage, observe, route. A
   micro-batch is written once with the quality suite observed on that
@@ -75,8 +79,9 @@ def start_quote_ingest(
 ):
     """File-source micro-batch ingest: landing JSON → cleaned parquet sink.
 
-    ``foreachBatch`` writes per-micro-batch with keep-last dedup INSIDE the
-    batch (cross-batch duplicates are handled by the watermark state above).
+    ``foreachBatch`` writes per-micro-batch with a keep-last dedup inside
+    the batch, behind the watermark state above, which has already kept
+    the first copy of each (symbol, date) (see the module docstring).
     Returns the StreamingQuery; callers await ``query.awaitTermination()``.
     """
 
@@ -144,7 +149,7 @@ def start_pipeline_stream(
     reference's daily rerun-over-recent-history model, where each drop
     carries the full lookback window it needs (scheduler.py:110).
 
-    Each micro-batch is one Spark job: stage, observe, route. The batch
+    Each micro-batch is one data action: stage, observe, route. The batch
     is written once to ``sink_dir/_staging/batch_id=N`` with the quality
     suite observed on that write, then the staged directory is renamed
     to ``batch_id=N`` under the sink (pass) or ``quarantine_dir`` (fail).

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stock_market_etl_pipeline_spark.operators.layout import (
+    _scaled_rank_quantile,
     linear_layout,
     rowgroup_stats,
     skip_ratio,
@@ -141,6 +142,31 @@ def test_quantile_rank_survives_skew_minmax_does_not(spark, tmp_path):
     assert s_qt > s_mm + 0.25, (
         f"quantile ({s_qt}) should clearly beat minmax ({s_mm}) under skew"
     )
+
+
+def test_quantile_rank_binary_search_counts_boundaries(spark):
+    """The per-row quantile rank is the number of boundaries at or below
+    the value, in Spark's order (null ranks 0, NaN above every number).
+    The binary search must give exactly what a count over every
+    boundary gives, ties and non-finite boundaries included."""
+    nan, inf = float("nan"), float("inf")
+    bits = 4
+    bounds = [-inf, -1.0, 0.0, 0.0, 0.0, 2.5, 2.5, 7.0, 9.0, 9.0, 11.0,
+              40.0, inf, nan, nan]
+    assert len(bounds) == (1 << bits) - 1
+    values = [None, nan, inf, -inf, -5.0, -1.0, 0.0, 1.0, 2.5, 3.0, 9.0,
+              10.0, 11.0, 39.0, 40.0, 1e9]
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    count = F.aggregate(
+        F.array(*[F.lit(b) for b in bounds]),
+        F.lit(0),
+        lambda acc, b: acc + F.when(F.col("v") >= b, 1).otherwise(0),
+    )
+    rows = df.select(
+        count.alias("want"), _scaled_rank_quantile("v", bounds[::-1], bits).alias("got")
+    ).collect()
+    assert [r.got for r in rows] == [r.want for r in rows]
+    assert [r.got for r in rows][:4] == [0, 15, 13, 1]
 
 
 def test_partition_pruning_reaches_the_scan(spark, tmp_path):

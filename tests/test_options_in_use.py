@@ -75,8 +75,9 @@ _TEST_WITNESSED = {
     # quantile ranks skip ≥ 0.4 of y's row groups and beat minmax by 0.25
     ("operators/layout.py", "zorder_layout", "rank"),
     # the same test's quantile layout at bits=8: at the default 16 bits
-    # each row ranks against 2^16 - 1 quantile boundaries, and the test
-    # takes 353 s instead of seconds (it still passes)
+    # it still passes, but the quantile layout takes about 30 s instead
+    # of 2, nearly all of it approxQuantile moving 2^16 - 1 probabilities
+    # and boundaries per column through py4j one element at a time
     ("operators/layout.py", "zorder_layout", "bits"),
     # test_multimodal_streaming.py::test_real_decode_ppm_and_wav: a 2x2
     # PPM decodes to width, height, frames (2, 2, 1)
