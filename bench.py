@@ -25,8 +25,8 @@ other):
   every downstream query (dashboard, predictions, signals) reads that
   stored table, never recomputing it from raw. Spark's CacheManager
   substitutes the InMemoryRelation into every matching ticks subtree. At
-  100 TB the same role is played by the bucketed parquet/table-format sink
-  (io_sink.write_bucketed). Compare against BENCH_r02's recorded 10.94 s.
+  100 TB the same role is played by a stored partitioned or transactional
+  table. Compare against BENCH_r02's recorded 10.94 s.
 """
 
 from __future__ import annotations

@@ -9,7 +9,8 @@ Layout (see SURVEY.md §7):
 - ``functions``  — pure Column-expression builders (zero Python UDFs for parity scope)
 - ``operators``  — clean / enrich / dedup / similarity operators
 - ``plans``      — composite analytics pipelines (predictions, signals, summaries, quality)
-- ``streaming``  — Structured Streaming ingest with keep-last dedup
+- ``streaming``  — Structured Streaming maintainers; the pipeline stream's
+  watermarked dedup keeps the first copy of each (symbol, date)
 """
 
 __version__ = "0.1.0"

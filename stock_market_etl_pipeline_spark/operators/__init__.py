@@ -9,14 +9,13 @@ from .dedup import (
     simhash_signatures,
 )
 from .enrich import enrich
-from .multimodal import decode_media, documents_as_media, frame_sample
 from .similarity import (
     ann_topk_lsh,
     cosine_topk,
     embedding_near_pairs,
     ivf_topk,
 )
-from .skew import salted_collect_list, salted_join, with_salt
+from .skew import salted_collect_list, with_salt
 
 __all__ = [
     "asof_join",
@@ -29,14 +28,10 @@ __all__ = [
     "simhash_near_pairs",
     "simhash_signatures",
     "enrich",
-    "decode_media",
-    "documents_as_media",
-    "frame_sample",
     "ann_topk_lsh",
     "cosine_topk",
     "embedding_near_pairs",
     "ivf_topk",
     "salted_collect_list",
-    "salted_join",
     "with_salt",
 ]

@@ -122,34 +122,3 @@ def dedup_keep_last(df: DataFrame, keys: list[str],
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def nan_to_null(df: DataFrame) -> DataFrame:
-    """P13: NaN → NULL normalization of every double/float column
-    (reference ``src/load.py:228``, ``df.where(pd.notnull(df), None)``).
-    Spark keeps NaN and NULL distinct for doubles; sinks and aggregates
-    that expect SQL semantics need real NULLs."""
-    targets = [
-        f.name for f in df.schema.fields
-        if f.dataType.simpleString() in ("double", "float")
-    ]
-    return df.withColumns(
-        {c: F.when(F.isnan(F.col(c)), F.lit(None)).otherwise(F.col(c))
-         for c in targets}
-    )
-
-
-def with_defaults(df: DataFrame) -> DataFrame:
-    """P14: fill the bookkeeping columns if absent/null (reference
-    ``src/load.py:210-215``: extracted_at ← now, data_source ← constant)."""
-    defaults = {
-        "extracted_at": F.current_timestamp(),
-        "data_source": F.lit("Alpha Vantage"),
-    }
-    out = df
-    for name, default in defaults.items():
-        if name in out.columns:
-            out = out.withColumn(name, F.coalesce(F.col(name), default))
-        else:
-            out = out.withColumn(name, default)
-    return out

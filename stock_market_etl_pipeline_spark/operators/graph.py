@@ -12,7 +12,9 @@ suffices; ``max_iter`` bounds the worst case.
 Scale notes: every round is one join + one aggregate on the edge list
 (shuffle on node id); ``localCheckpoint`` truncates the plan lineage each
 round so the job graph stays flat instead of growing exponentially; the
-convergence probe is a cheap `isEmpty` on the changed-labels frame.
+convergence probe is one full-scan ``count()`` of the rows whose label
+changed (a filter on a carried flag), which also materializes the round's
+lazy checkpoint.
 """
 
 from __future__ import annotations

@@ -232,24 +232,6 @@ def random_projection_buckets(
     return emb.select("vec_id", bucket.cast("int").alias("bucket"))
 
 
-def recommended_planes_per_band(n_vectors: int) -> int:
-    """Executable form of the geometry advice in
-    :func:`embedding_near_pairs_lsh`'s docstring: the smallest
-    planes-per-band whose 2^planes buckets hold ≤ 8 vectors on average,
-    clamped to [4, 16]. Integer arithmetic only —
-    no log2 — so callers that must mirror the choice in an oracle can
-    reproduce it exactly (cf. ADVICE r3 on cross-engine log2 ulps).
-
-    Sizing, not semantics: rerunning with a different plane count changes
-    which candidates are found (recall), so fix the count per corpus
-    generation, don't auto-resize between incremental batches.
-    """
-    p = 4
-    while p < 16 and (n_vectors >> p) > 8:
-        p += 1
-    return p
-
-
 def _md5_parity(seed: int, plane: int, dim: int) -> bool:
     import hashlib
 

@@ -153,8 +153,9 @@ def theta_set_algebra(merged: DataFrame, group_col: str, a, b) -> DataFrame:
     inclusion-exclusion arithmetic over three ±RSE estimates.
 
     The two one-row sketch frames are localCheckpoint'd before the fan-out
-    into five estimates (same rescan hazard `hll_set_overlap` documents);
-    everything downstream is one 1×1 crossJoin."""
+    into five estimates: without it, lazy re-evaluation would re-read and
+    re-filter ``merged`` once per estimate that uses each side. Everything
+    downstream is one 1×1 crossJoin of the materialized sketch rows."""
     sa = (
         merged.filter(F.col(group_col) == a)
         .select(F.col("theta").alias("ta"))
@@ -180,45 +181,6 @@ def theta_set_algebra(merged: DataFrame, group_col: str, a, b) -> DataFrame:
         F.theta_sketch_estimate(
             F.theta_difference("tb", "ta")
         ).alias("b_minus_a_est"),
-    )
-
-
-def hll_set_overlap(left: DataFrame, right: DataFrame,
-                    value_col: str) -> DataFrame:
-    """Approximate set overlap between two populations from their sketches
-    alone: |A∩B| ≈ est(A) + est(B) − est(A∪B) by inclusion-exclusion,
-    where est(A∪B) merges the two already-built sketches. At 100 TB this
-    answers audience-overlap / contamination-rate questions without a
-    distinct-join — each side's sketch is built once (or read from the
-    persisted rollup) and the answer is computed from three estimates.
-
-    The two one-row sketch frames are localCheckpoint'd before fan-out:
-    without it, lazy re-evaluation would rescan + re-sketch each input
-    once for the union estimate and once for its own estimate — doubling
-    the dominant cost at the scale this function targets. All three
-    estimates then come from ONE 1×1 crossJoin of the materialized
-    sketch rows, via the scalar ``hll_union``."""
-    a = left.agg(
-        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("sa")
-    ).localCheckpoint()
-    b = right.agg(
-        F.hll_sketch_agg(value_col, F.lit(DEFAULT_LGK)).alias("sb")
-    ).localCheckpoint()
-    return (
-        a.crossJoin(b)
-        .select(
-            F.hll_sketch_estimate("sa").alias("a_est"),
-            F.hll_sketch_estimate("sb").alias("b_est"),
-            F.hll_sketch_estimate(F.hll_union("sa", "sb")).alias("union_est"),
-        )
-        .select(
-            "a_est",
-            "b_est",
-            "union_est",
-            (F.col("a_est") + F.col("b_est") - F.col("union_est")).alias(
-                "overlap_est"
-            ),
-        )
     )
 
 

@@ -44,9 +44,9 @@ dependency:
   fraction, not table size. :meth:`TxTable.changes` derives a
   change-data-feed from the manifest file diff (carried rows cancel
   under exceptAll), :meth:`TxTable.optimize` is the compaction /
-  Z-order clustering maintenance job (layout.py's curve under this
-  log), and :meth:`TxTable.restore` rolls back by re-referencing an
-  old file list — history stays append-only.
+  Z-order clustering maintenance job (``layout.zorder_key``'s curve
+  under this log), and :meth:`TxTable.restore` rolls back by
+  re-referencing an old file list — history stays append-only.
 
 The reference persists via whole-table SQL replace (src/load.py
 ``to_sql(if_exists=...)``) — implicitly transactional at toy scale; this

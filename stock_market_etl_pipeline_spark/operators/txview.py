@@ -32,9 +32,9 @@ streaming/sketch_rollup.py demonstrates for HLL (mergeable) vs KLL
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .txtable import SnapshotUnavailable, TxTable
+from .txtable import TxTable
 
 _TXN_PREFIX = "cdc-"
 
@@ -186,57 +186,3 @@ def refresh_view(
         spark, aligned, group_cols, txn_id=txn, delete_where="n_rows = 0"
     )
     return cur
-
-
-def scd2_history(spark: SparkSession, src: TxTable) -> DataFrame:
-    """Type-2 slowly-changing-dimension view of a TxTable's history: one
-    row per row-VERSION with ``valid_from``/``valid_to`` snapshot ids
-    (``valid_to`` NULL = still live). The audit shape warehouse
-    dimensions use, derived purely from the commit log — no temporal
-    columns needed in the data itself.
-
-    Construction: the initial snapshot's rows open at snapshot 0; every
-    consecutive manifest diff contributes its inserts (a version opens)
-    and deletes (a version closes), so total build cost is
-    Σ per-transition churn, never snapshots × table size. Versions are
-    then paired WITHOUT iterating: for each distinct row VALUE, the k-th
-    close (by snapshot order) ends the k-th open — a row_number join on
-    (value-identity, k), correct under duplicate rows because exceptAll
-    feeds multiplicity-accurate events. An update (delete+insert of a
-    changed value) yields the closed old version and the open new one,
-    exactly SCD2's contract.
-
-    Every retained snapshot must still be within vacuum retention; the
-    as-of reconstruction invariant
-    ``scd2.filter(from <= k < to).drop(meta) == read(snapshot=k)``
-    is asserted for every k in tests/test_txview.py."""
-    snaps = src.snapshots()
-    if not snaps:
-        raise SnapshotUnavailable("table has no commits")
-    first = snaps[0]
-    events = [
-        src.read(spark, snapshot=first)
-        .withColumn("_snap", F.lit(first))
-        .withColumn("_change", F.lit("insert"))
-    ]
-    for lo, hi in zip(snaps, snaps[1:]):
-        events.append(
-            src.changes(spark, lo, hi).withColumn("_snap", F.lit(hi))
-        )
-    ev = events[0]
-    for e in events[1:]:
-        ev = ev.unionByName(e)
-    ev = ev.localCheckpoint()
-    value_cols = [c for c in ev.columns if c not in ("_snap", "_change")]
-    w = Window.partitionBy(*value_cols, "_change").orderBy("_snap")
-    numbered = ev.withColumn("_k", F.row_number().over(w))
-    opens = numbered.filter(F.col("_change") == "insert").select(
-        *value_cols, "_k", F.col("_snap").alias("valid_from")
-    )
-    closes = numbered.filter(F.col("_change") == "delete").select(
-        *value_cols, "_k", F.col("_snap").alias("valid_to")
-    )
-    return (
-        opens.join(closes, value_cols + ["_k"], "left")
-        .drop("_k")
-    )

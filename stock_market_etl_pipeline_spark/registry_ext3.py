@@ -264,9 +264,10 @@ def q_order_ship_lag(spark, sf_dir):
 
     Plan: fact-to-fact equijoin on l_orderkey/o_orderkey — both sides
     shuffle on the SAME key, the canonical co-partitioned join (with
-    bucketed storage via io_sink.write_bucketed the exchanges disappear
-    entirely). Five-group aggregate is a broadcast-sized result. Integer
-    datediff; AVG of integers is the only float → 6dp both sides.
+    both tables stored bucketed on the key by ``bucketBy`` +
+    ``saveAsTable``, the exchanges disappear entirely). Five-group
+    aggregate is a broadcast-sized result. Integer datediff; AVG of
+    integers is the only float → 6dp both sides.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.to_date("l_shipdate").alias("ship_date")

@@ -287,8 +287,8 @@ def _max_symbol_depth(spark, sf_dir) -> int:
 
 def _theil_sen_numpy(t):
     """Per-symbol Theil-Sen via a vectorized numpy kernel — one of the
-    repo's DOCUMENTED Python slots (with the multimodal codecs and the
-    stateful-streaming processors; everything else is zero-Python-UDF).
+    repo's DOCUMENTED Python slots (with the stateful-streaming
+    processors; everything else is zero-Python-UDF).
 
     Why Python here and nowhere else: the per-key work is a BOUNDED
     QUADRATIC kernel (n ≤ _TS_ARRAY_MAX_DAYS days → ≤ ~4.5M pairs), and
@@ -448,8 +448,8 @@ def q_theil_sen_trend(spark, sf_dir):
         F.round(F.col("close") * 100, 0).cast("bigint").alias("cc"),
     )
 
-    # depth trigger: memoized per sf_dir (and env-forcible) so repeated
-    # plan construction is action-free — see _max_symbol_depth
+    # depth trigger: memoized per sf_dir so repeated plan construction
+    # is action-free — see _max_symbol_depth
     deep = _max_symbol_depth(spark, sf_dir) > _TS_ARRAY_MAX_DAYS
     if not deep:
         return _theil_sen_numpy(t)

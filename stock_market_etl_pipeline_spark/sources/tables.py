@@ -104,11 +104,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     tune_shuffle_width(spark, _BYTES_CACHE.get(path, 0))
     return spark.read.schema(cached).parquet(path)
-
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: mergeSchema unions the
-    schemas of all files (columns added over time arrive as nulls in old
-    files). The append-sink reality at scale — daily drops gain columns;
-    a plain read would silently pick one file's schema."""
-    return spark.read.option("mergeSchema", "true").parquet(path)

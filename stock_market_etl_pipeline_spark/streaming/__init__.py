@@ -1,3 +1,3 @@
-from .ingest import dedup_stream, start_quote_ingest
+from .ingest import dedup_stream, start_pipeline_stream
 
-__all__ = ["dedup_stream", "start_quote_ingest"]
+__all__ = ["dedup_stream", "start_pipeline_stream"]

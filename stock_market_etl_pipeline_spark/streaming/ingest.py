@@ -34,9 +34,8 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.clean import clean_quotes, dedup_keep_last
+from ..operators.clean import clean_quotes
 from ..operators.enrich import enrich
 from ..operators.txtable import TxTable
 from ..plans.quality import observe_suite, score_suite, stock_quality_checks
@@ -69,45 +68,6 @@ def dedup_stream(stream: DataFrame) -> DataFrame:
     return stream.withWatermark("extracted_at", "2 days").dropDuplicatesWithinWatermark(
         ["symbol", "date"]
     )
-
-
-def start_quote_ingest(
-    spark: SparkSession,
-    landing_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-):
-    """File-source micro-batch ingest: landing JSON → cleaned parquet sink.
-
-    ``foreachBatch`` writes per-micro-batch with a keep-last dedup inside
-    the batch, behind the watermark state above, which has already kept
-    the first copy of each (symbol, date) (see the module docstring).
-    Returns the StreamingQuery; callers await ``query.awaitTermination()``.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        resolved = dedup_keep_last(
-            batch_df, keys=["symbol", "date"], order_by=["extracted_at"]
-        )
-        (
-            resolved.write.mode("append")
-            .partitionBy("symbol")
-            .parquet(sink_dir)
-        )
-
-    return drain(
-        dedup_stream(_quote_landing(spark, landing_dir)), checkpoint_dir, write_batch
-    )
-
-
-def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """Stream-static join: each micro-batch joins against the (small,
-    broadcast) dimension snapshot — Spark re-plans the static side per
-    batch, so a refreshed dim table is picked up without restarting the
-    query. The canonical pattern for enriching a quote stream with the
-    company-overview fundamentals at any scale (dim is KB-sized per
-    symbol universe; the stream side never shuffles for the join)."""
-    return stream.join(F.broadcast(dim), "symbol", "left")
 
 
 def _stage_observed(

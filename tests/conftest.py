@@ -77,6 +77,46 @@ def raw_quotes(spark):
     return spark.createDataFrame(rows + dirty, RAW_QUOTE_SCHEMA)
 
 
+def rowgroup_stats(path: str, column: str) -> list[tuple]:
+    """(min, max, num_rows) per parquet row group for ``column``, read
+    from file FOOTERS only (pyarrow metadata — no data pages touched)."""
+    import pyarrow.parquet as pq
+
+    files = [path]
+    if os.path.isdir(path):
+        files = [
+            os.path.join(root, n)
+            for root, _dirs, names in os.walk(path)
+            for n in names if n.endswith(".parquet")
+        ]
+    out = []
+    for f in sorted(files):
+        md = pq.ParquetFile(f).metadata
+        col_idx = md.schema.to_arrow_schema().names.index(column)
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(col_idx).statistics
+            n = md.row_group(rg).num_rows
+            if st is None or not st.has_min_max:
+                out.append((None, None, n))
+            else:
+                out.append((st.min, st.max, n))
+    return out
+
+
+def skip_ratio(path: str, column: str, lo, hi) -> float:
+    """Fraction of row groups a ``lo <= column <= hi`` scan predicate
+    skips using footer min/max alone — the statistic Spark's pushed
+    parquet filters act on. Row groups without stats count as
+    unskippable."""
+    stats = rowgroup_stats(path, column)
+    if not stats:
+        return 0.0
+    skipped = sum(
+        1 for mn, mx, _ in stats if mn is not None and (mx < lo or mn > hi)
+    )
+    return skipped / len(stats)
+
+
 def await_drained(spark, q, timeout: int = 240, strict: bool = True) -> None:
     """Wait for an availableNow query to drain, stop it, then wait until the
     stream manager deregisters it: restarting on the same checkpoint before

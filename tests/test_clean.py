@@ -51,28 +51,3 @@ def test_dedup_keep_last_tiebreak(spark):
     out = dedup_keep_last(df, keys=["k", "g"], order_by=["ord"]).collect()
     got = {(r["k"], r["g"]): r["v"] for r in out}
     assert got == {(1, "a"): 20.0, (1, "b"): 30.0}
-
-
-def test_nan_to_null(spark):
-    from stock_market_etl_pipeline_spark.operators.clean import nan_to_null
-
-    df = spark.createDataFrame(
-        [(1, float("nan"), 2.0), (2, 3.0, float("nan"))], "id int, a double, b double"
-    )
-    out = nan_to_null(df).collect()
-    got = {r["id"]: (r["a"], r["b"]) for r in out}
-    assert got[1] == (None, 2.0)
-    assert got[2] == (3.0, None)
-
-
-def test_with_defaults_fills_missing_and_null(spark):
-    from stock_market_etl_pipeline_spark.operators.clean import with_defaults
-
-    df = spark.createDataFrame(
-        [("AAPL", None), ("MSFT", "custom")], "symbol string, data_source string"
-    )
-    out = with_defaults(df)
-    got = {r["symbol"]: r["data_source"] for r in out.collect()}
-    assert got == {"AAPL": "Alpha Vantage", "MSFT": "custom"}
-    assert "extracted_at" in out.columns
-    assert out.filter(out.extracted_at.isNull()).count() == 0

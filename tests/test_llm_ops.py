@@ -678,27 +678,12 @@ def test_lsh_bucket_cap_headroom_at_verify_scales(spark):
     assert biggest * 2 <= _LSH_MAX_BUCKET, (biggest, _LSH_MAX_BUCKET)
 
 
-def test_recommended_planes_tracks_corpus_size():
-    from stock_market_etl_pipeline_spark.operators.similarity import (
-        recommended_planes_per_band,
-    )
-
-    assert recommended_planes_per_band(128) == 4       # floor
-    assert recommended_planes_per_band(2_000) == 8     # sf0.1 geometry == _hi
-    assert recommended_planes_per_band(20_000) == 12   # the sf1 cliff config
-    assert recommended_planes_per_band(10**9) == 16    # ceiling
-    # avg bucket at the recommendation is within target (above the floor)
-    for n in (5_000, 123_456, 7_777_777):
-        p = recommended_planes_per_band(n)
-        assert n / (1 << p) <= 8 or p == 16
-
-
 def test_bucket_cap_degrades_recall_visibly_and_widening_restores_it(spark):
     """The cap→widen contract at test scale: with buckets forced over a
     tiny cap, the under-planed geometry loses planted pairs (visible
-    degradation, bounded cost); widening planes per the sizing helper
-    restores recall on the SAME cap. Mirrors the sf10 experiment in
-    NOTES (47/100 → 95/100 at 200k vectors)."""
+    degradation, bounded cost); widening the planes per band until the
+    buckets fit under the cap restores recall on the SAME cap. Mirrors
+    the sf10 experiment in NOTES (47/100 → 95/100 at 200k vectors)."""
     from conftest import SF_DIR
 
     from stock_market_etl_pipeline_spark.operators.similarity import (

@@ -71,26 +71,12 @@ _TEST_WITNESSED = {
     # test_llm_ops.py::test_connected_components_nonconvergence_raises:
     # one round on a 7-edge chain raises RuntimeError
     ("operators/graph.py", "connected_components", "max_iter"),
-    # test_layout.py::test_quantile_rank_survives_skew_minmax_does_not:
-    # quantile ranks skip ≥ 0.4 of y's row groups and beat minmax by 0.25
-    ("operators/layout.py", "zorder_layout", "rank"),
-    # the same test's quantile layout at bits=8: at the default 16 bits
-    # it still passes, but the quantile layout takes about 30 s instead
-    # of 2, nearly all of it approxQuantile moving 2^16 - 1 probabilities
-    # and boundaries per column through py4j one element at a time
-    ("operators/layout.py", "zorder_layout", "bits"),
-    # test_multimodal_streaming.py::test_real_decode_ppm_and_wav: a 2x2
-    # PPM decodes to width, height, frames (2, 2, 1)
-    ("operators/multimodal.py", "decode_media", "decode_stub"),
     # test_llm_ops3.py::test_priority_sample_estimator_unbiased: the mean
     # estimate over 8 salts sits within [0.90, 1.15] of the true total
     ("operators/sampling.py", "priority_sample", "salt"),
     # test_streaming_semdedup.py::test_stream_equals_oneshot_semantic_
     # dedup_on_union: the stream's survivors equal the one-shot min_id run
     ("operators/similarity.py", "semantic_dedup", "survivor"),
-    # test_skew_io.py::test_salted_join_left_outer_keeps_unmatched: key 99
-    # survives with a null name
-    ("operators/skew.py", "salted_join", "how"),
     # test_skew_io.py::test_enrich_skew_safe_approx_matches_plain_approx:
     # the chunked approx-quartile rows equal enrich(quartiles="approx")
     ("operators/skewsafe.py", "enrich_skew_safe", "quartiles"),

@@ -200,20 +200,6 @@ def test_band_self_pairs_equals_naive(spark, rows):
     assert got == expected
 
 
-@given(st.integers(min_value=1, max_value=10**12))
-def test_recommended_planes_bucket_bound_and_monotonic(n):
-    from stock_market_etl_pipeline_spark.operators.similarity import (
-        recommended_planes_per_band,
-    )
-
-    p = recommended_planes_per_band(n)
-    assert 4 <= p <= 16
-    # within clamp range the average bucket is at or under target
-    assert p == 16 or (n >> p) <= 8
-    # monotonic: more vectors never ask for fewer planes
-    assert recommended_planes_per_band(n + 1) >= p
-
-
 @given(st.integers(min_value=0, max_value=10**6), st.integers(min_value=0, max_value=50))
 def test_scaler_stride_is_coprime(n, seed):
     from math import gcd

@@ -29,7 +29,6 @@ from stock_market_etl_pipeline_spark import registry  # noqa: E402
 from stock_market_etl_pipeline_spark.operators.sketches import (  # noqa: E402
     hll_daily_rollup,
     hll_merged_distinct,
-    hll_set_overlap,
     theta_daily_rollup,
     theta_merged_per_group,
     theta_set_algebra,
@@ -111,30 +110,6 @@ def test_kll_merged_quantiles_within_rank_error(spark):
         lo50, hi50, lo95, hi95 = bands[p]
         assert lo50 <= p50 <= hi50, (p, p50, lo50, hi50)
         assert lo95 <= p95 <= hi95, (p, p95, lo95, hi95)
-
-
-def test_hll_overlap_tracks_exact_intersection(spark):
-    """Customers ordering in BOTH halves of the date range: sketch-only
-    inclusion-exclusion vs exact distinct-intersection."""
-    o = load_table(spark, SF_DIR, "orders")
-    mid = o.agg(
-        F.date_add(F.min(F.to_date("o_orderdate")), 365).alias("m")
-    ).collect()[0]["m"]
-    early = o.filter(F.to_date("o_orderdate") < F.lit(mid))
-    late = o.filter(F.to_date("o_orderdate") >= F.lit(mid))
-    est = hll_set_overlap(early, late, "o_custkey").collect()[0]
-    exact = (
-        early.select("o_custkey")
-        .intersect(late.select("o_custkey"))
-        .count()
-    )
-    n_union = early.select("o_custkey").union(late.select("o_custkey")).distinct().count()
-    # inclusion-exclusion compounds three estimates; bound by union size
-    assert abs(est["overlap_est"] - exact) <= max(2, 3 * REL_TOL * n_union), (
-        est,
-        exact,
-        n_union,
-    )
 
 
 def test_theta_merge_is_lossless(spark):

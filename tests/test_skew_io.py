@@ -1,12 +1,9 @@
-"""Skew-salting utilities + parquet compaction tests."""
+"""Skew-salting utilities + the hot-key enrich spine."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from stock_market_etl_pipeline_spark.io_sink import compact_parquet
 from stock_market_etl_pipeline_spark.operators.skew import (
     salted_collect_list,
-    salted_join,
     with_salt,
 )
 
@@ -19,27 +16,6 @@ def test_salt_deterministic_and_bounded(spark):
     assert sorted(r["__salt"] for r in s1) == sorted(r["__salt"] for r in s2)
 
 
-def test_salted_join_equals_plain_join(spark):
-    # one hot key (90% of rows) + tail
-    big = spark.createDataFrame(
-        [(0 if i < 900 else i % 7, i) for i in range(1000)], "k int, payload int"
-    )
-    small = spark.createDataFrame([(i, f"dim{i}") for i in range(7)], "k int, name string")
-    plain = big.join(small, "k").select("k", "payload", "name")
-    salted = salted_join(big, small, key="k").select(
-        "k", "payload", "name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_outer_keeps_unmatched(spark):
-    big = spark.createDataFrame([(1, 10), (99, 20)], "k int, payload int")
-    small = spark.createDataFrame([(1, "a")], "k int, name string")
-    out = salted_join(big, small, key="k", how="left").collect()
-    got = {r["k"]: r["name"] for r in out}
-    assert got == {1: "a", 99: None}
-
-
 def test_salted_collect_list_complete(spark):
     df = spark.createDataFrame(
         [(1, v) for v in range(50)] + [(2, v) for v in range(5)], "k int, v int"
@@ -47,21 +23,6 @@ def test_salted_collect_list_complete(spark):
     out = {r["k"]: r["vs"] for r in salted_collect_list(df, "k", "v").collect()}
     assert out[1] == list(range(50))
     assert out[2] == list(range(5))
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "frag")
-    df = spark.range(1000).withColumn("v", F.col("id") * 2)
-    df.repartition(24).write.mode("overwrite").parquet(path)
-    before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    compact_parquet(spark, path, target_partitions=2)
-    after = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    assert before >= 20 and after <= 2
-    back = spark.read.parquet(path)
-    assert back.count() == 1000
-    assert back.agg(F.sum("v")).collect()[0][0] == 999 * 1000
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,39 @@ def test_streaming_pipeline_matches_batch_output(spark, tmp_path):
     assert not os.path.exists(str(tmp_path / "quarantine"))
 
 
+def test_streaming_pipeline_dedups_overlapping_drops(spark, tmp_path):
+    """A 5-day drop and an overlapping 7-day re-fetch (later extracted_at,
+    close + 1) land one sink row per (symbol, date). Only uniqueness is
+    asserted: which copy of a revised quote survives is not pinned here
+    (the watermark dedup keeps the first one it sees, run_pipeline the
+    last)."""
+    landing = str(tmp_path / "landing")
+    sink = str(tmp_path / "sink")
+
+    day1 = make_raw_rows("AAPL", 5)
+    day2 = [
+        (s, d, o, h, lo, str(float(c) + 1), v,
+         dt.datetime(2024, 6, 3, 12, 0, 0), src)
+        for (s, d, o, h, lo, c, v, ts, src) in make_raw_rows("AAPL", 7)
+    ]
+    spark.createDataFrame(day1, RAW_QUOTE_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).json(landing)
+    spark.createDataFrame(day2, RAW_QUOTE_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).json(landing)
+
+    q = start_pipeline_stream(
+        spark, landing, sink, str(tmp_path / "quarantine"),
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+
+    out = spark.read.parquet(sink)
+    assert out.select("symbol", "date").distinct().count() == 7
+    assert out.groupBy("symbol", "date").count().filter("count > 1").count() == 0
+
+
 def _crash_after_write_before_commit(ckpt: str) -> None:
     """Simulate dying BETWEEN the foreachBatch sink write and the
     checkpoint commit: Structured Streaming writes offsets/N before

@@ -53,39 +53,3 @@ def test_gate_routes_good_and_bad_batches(spark, tmp_path):
     quarantined = spark.read.parquet(quarantine)
     assert quarantined.count() == 10
     assert {r["symbol"] for r in quarantined.collect()} == {"HUGE"}
-
-
-def test_stream_static_dim_join(spark, tmp_path):
-    """Stream-static join: a quote stream enriched with the broadcast
-    overview dim inside the streaming query (per-sector counts out)."""
-    from pyspark.sql import functions as F
-
-    from stock_market_etl_pipeline_spark.sources.overview import (
-        company_overview,
-    )
-    from stock_market_etl_pipeline_spark.streaming.ingest import (
-        enrich_stream_with_dim,
-    )
-    from conftest import SF_DIR
-
-    src = str(tmp_path / "qsrc")
-    spark.createDataFrame(
-        [(s, 100.0 + s) for s in range(10)], "symbol long, close double"
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("symbol long, close double").parquet(src)
-    dim = company_overview(spark, SF_DIR).select("symbol", "sector")
-    enriched = enrich_stream_with_dim(stream, dim)
-    agg = enriched.groupBy("sector").agg(F.count(F.lit(1)).alias("n"))
-
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sector_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM sector_counts").collect()
-    assert sum(r["n"] for r in rows) == 10
-    assert all(r["sector"] is not None for r in rows)  # dim matched

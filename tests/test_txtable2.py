@@ -9,12 +9,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from stock_market_etl_pipeline_spark.operators.layout import skip_ratio
 from stock_market_etl_pipeline_spark.operators.txtable import (
     CommitConflict,
     SnapshotUnavailable,
     TxTable,
 )
+
+from conftest import skip_ratio
 
 
 def mk(spark, lo, hi, n_files=4):

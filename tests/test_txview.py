@@ -123,57 +123,6 @@ def test_tampered_view_state_raises_not_corrupts(spark, tmp_path):
     assert cur == 0  # silence lint: marker snapshot was the initial one
 
 
-# ---------------------------------------------------------------------------
-# SCD2 history view
-# ---------------------------------------------------------------------------
-
-
-def _asof(scd2, k):
-    return scd2.filter(
-        (F.col("valid_from") <= k)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > k))
-    ).drop("valid_from", "valid_to")
-
-
-def test_scd2_asof_reconstructs_every_snapshot(spark, tmp_path):
-    from stock_market_etl_pipeline_spark.operators.txview import scd2_history
-
-    t = TxTable(str(tmp_path / "t"))
-    t.append(mk(spark, [(1, "a", 10), (2, "b", 20), (2, "b", 20)]))  # dup row
-    t.merge(spark, mk(spark, [(1, "a", 11)]), ["id"])        # value update
-    t.delete_where(spark, "grp = 'b'")                       # closes the dups
-    t.append(mk(spark, [(2, "b", 20)]))                      # re-insert same value
-    t.overwrite(mk(spark, [(9, "z", 90)]))                   # full replace
-    scd2 = scd2_history(spark, t).cache()
-    for k in t.snapshots():
-        want = sorted(map(tuple, t.read(spark, snapshot=k).collect()))
-        got = sorted(map(tuple, _asof(scd2, k).collect()))
-        assert got == want, f"as-of snapshot {k} mismatch"
-    # update left a closed old version and an open new one for id=1
-    v1 = sorted(
-        (r.v, r.valid_from, r.valid_to)
-        for r in scd2.filter("id = 1").collect()
-    )
-    assert v1 == [(10, 0, 1), (11, 1, 4)]
-    scd2.unpersist()
-
-
-def test_scd2_duplicate_rows_pair_kth_open_with_kth_close(spark, tmp_path):
-    from stock_market_etl_pipeline_spark.operators.txview import scd2_history
-
-    t = TxTable(str(tmp_path / "t"))
-    t.append(mk(spark, [(2, "b", 20), (2, "b", 20)]))
-    # remove ONE copy (merge-delete removes by key -> removes both; use
-    # a targeted rewrite instead: overwrite with a single copy)
-    t.overwrite(mk(spark, [(2, "b", 20)]))
-    scd2 = scd2_history(spark, t)
-    rows = sorted(
-        (r.valid_from, r.valid_to if r.valid_to is not None else 99)
-        for r in scd2.collect()
-    )
-    assert rows == [(0, 1), (0, 99)]
-
-
 def test_reserved_alias_collisions_rejected(spark, tmp_path):
     """ADVICE r9: the reserved-alias namespace must be VALIDATED, not
     trusted — a sum column literally named '_rowcount' reproduces the
